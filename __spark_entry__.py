@@ -15,10 +15,19 @@ every value bit-for-bit; at production scale xxhash64 would replace it.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tesseract_recognize_spark.config import ExtractConfig
+from tesseract_recognize_spark.functions.codecs import (
+    bmp_encode,
+    gif_encode,
+    ppm_encode,
+    tiff_encode,
+)
+from tesseract_recognize_spark.functions.png import png_encode
 from tesseract_recognize_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -315,12 +324,12 @@ def q_multimodal_frame_sample(spark, sf_dir):
     )
 
 
-def q_multimodal_image_features(spark, sf_dir):
-    # REAL image decode path: synthesize a 16×16 gradient PNG per document
-    # executor-side (pure-stdlib encoder), decode it through the default
-    # codec (functions/png.py — zlib inflate + scanline unfiltering, the
-    # reference's pixRead analog, tesseract-recognize.cc:513-531), then
-    # mean-pool to 8×8 features. The gradient makes every pooled cell
+def _image_feature_query(spark, sf_dir, codecs):
+    # Synthesize a 16×16 gradient per document executor-side, encode it
+    # with the codec its doc_id round-robins to (``codecs``: (name,
+    # encode) pairs, pure-stdlib encoders), decode it through the
+    # engine's sniffing codec chain (multimodal.decode_image_features)
+    # and mean-pool to 8×8 features. The gradient makes every pooled cell
     # closed-form ((doc_id%200) + 4i + 2j + 1.5, exact in float64), so the
     # whole decode pipeline sits under the DuckDB hash gate.
     docs = spread_small_scan(
@@ -331,18 +340,17 @@ def q_multimodal_image_features(spark, sf_dir):
         import numpy as np
         import pandas as pd
 
-        from tesseract_recognize_spark.functions.png import png_encode
-
         for pdf in batches:
             refs, payloads = [], []
             for d in pdf["doc_id"]:
-                v = int(d) % 200
-                img = (
-                    (np.arange(16)[None, :] + 2 * np.arange(16)[:, None] + v)
-                    % 256
+                d = int(d)
+                gray = (
+                    (np.arange(16)[None, :] + 2 * np.arange(16)[:, None]
+                     + d % 200) % 256
                 ).astype("uint8")
-                refs.append(f"media://doc-{int(d)}/png")
-                payloads.append(png_encode(img))
+                name, encode = codecs[d % len(codecs)]
+                refs.append(f"media://doc-{d}/{name}")
+                payloads.append(encode(gray))
             yield pd.DataFrame({"media_ref": refs, "payload": payloads})
 
     media = docs.mapInPandas(make, "media_ref string, payload binary")
@@ -360,18 +368,33 @@ def q_multimodal_image_features(spark, sf_dir):
     )
 
 
+def q_multimodal_image_features(spark, sf_dir):
+    # REAL image decode path: the default codec (functions/png.py — zlib
+    # inflate + scanline unfiltering, the reference's pixRead analog,
+    # tesseract-recognize.cc:513-531) on every document.
+    return _image_feature_query(spark, sf_dir, [("png", png_encode)])
+
+
+def _as_rgb(encode):
+    """``encode`` applied to the gray gradient replicated to r=g=b."""
+    return lambda gray: encode(np.repeat(gray[:, :, None], 3, axis=2))
+
+
 # One entry per lossless codec in the sniffing chain (JPEG is covered
 # by pytest roundtrips instead — IDCT rounding makes it inexact by one
-# LSB, which a value-hash gate cannot tolerate). Order matters: the
-# oracle SQL cases on doc_id % len(_CODEC_MATRIX).
+# LSB, which a value-hash gate cannot tolerate): (name, mime, decoded
+# channels, encoder of the gray gradient). Order matters: the oracle SQL
+# cases on doc_id % len(_CODEC_MATRIX).
 _CODEC_MATRIX = [
-    ("png", "image/png", 1),
-    ("pgm", "image/x-portable-graymap", 1),
-    ("ppm", "image/x-portable-pixmap", 3),
-    ("bmp", "image/bmp", 3),
-    ("gif", "image/gif", 3),          # gray palette decodes to RGB
-    ("tiff-lzw", "image/tiff", 1),
-    ("tiff-packbits", "image/tiff", 3),
+    ("png", "image/png", 1, png_encode),
+    ("pgm", "image/x-portable-graymap", 1, ppm_encode),
+    ("ppm", "image/x-portable-pixmap", 3, _as_rgb(ppm_encode)),
+    ("bmp", "image/bmp", 3, _as_rgb(bmp_encode)),
+    ("gif", "image/gif", 3, gif_encode),  # gray palette decodes to RGB
+    ("tiff-lzw", "image/tiff", 1,
+     partial(tiff_encode, compression="lzw", predictor=2)),
+    ("tiff-packbits", "image/tiff", 3,
+     _as_rgb(partial(tiff_encode, compression="packbits"))),
 ]
 
 
@@ -387,64 +410,8 @@ def q_multimodal_codec_matrix(spark, sf_dir):
     # container — which the oracle states once while still pinning
     # per-container mime sniffing, decoded channel counts, and
     # bit-exact pixel recovery through five distinct decoders.
-    docs = spread_small_scan(
-        load_table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
-
-    def make(batches):
-        import numpy as np
-        import pandas as pd
-
-        from tesseract_recognize_spark.functions.codecs import (
-            bmp_encode,
-            gif_encode,
-            ppm_encode,
-            tiff_encode,
-        )
-        from tesseract_recognize_spark.functions.png import png_encode
-
-        n_fmt = len(_CODEC_MATRIX)
-        for pdf in batches:
-            refs, payloads = [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v = d % 200
-                gray = (
-                    (np.arange(16)[None, :] + 2 * np.arange(16)[:, None] + v)
-                    % 256
-                ).astype("uint8")
-                rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                name = _CODEC_MATRIX[d % n_fmt][0]
-                if name == "png":
-                    payload = png_encode(gray)
-                elif name == "pgm":
-                    payload = ppm_encode(gray)
-                elif name == "ppm":
-                    payload = ppm_encode(rgb)
-                elif name == "bmp":
-                    payload = bmp_encode(rgb)
-                elif name == "gif":
-                    payload = gif_encode(gray)
-                elif name == "tiff-lzw":
-                    payload = tiff_encode(gray, "lzw", predictor=2)
-                else:  # tiff-packbits
-                    payload = tiff_encode(rgb, "packbits")
-                refs.append(f"media://doc-{d}/{name}")
-                payloads.append(payload)
-            yield pd.DataFrame({"media_ref": refs, "payload": payloads})
-
-    media = docs.mapInPandas(make, "media_ref string, payload binary")
-    out = decode_image_features(media, resize_to=8)
-    return out.select(
-        "media_ref",
-        "mime",
-        F.col("width").cast("bigint").alias("width"),
-        F.col("height").cast("bigint").alias("height"),
-        F.col("channels").cast("bigint").alias("channels"),
-        F.posexplode("features").alias("k", "feature"),
-    ).select(
-        "media_ref", "mime", "width", "height", "channels",
-        F.col("k").cast("bigint").alias("k"), "feature",
+    return _image_feature_query(
+        spark, sf_dir, [(c[0], c[3]) for c in _CODEC_MATRIX]
     )
 
 

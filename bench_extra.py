@@ -82,20 +82,14 @@ def run_explain(spark, sf_dir, outdir, names):
 
 def run_explain_internal(spark, sf_dir, outdir):
     """Dump the PRE-finalize plans of operators whose public query returns
-    a checkpointed leaf (ngram verify, ANN top-k): finalize/materialize are
+    a checkpointed leaf (ngram verify, ANN top-k): finalize is
     monkeypatched to identity so the full lazy plan is visible. For plan
     inspection only — results are NOT computed here."""
-    from tesseract_recognize_spark import caching
     from tesseract_recognize_spark.operators import dedup, similarity
 
-    orig_fin, orig_mat = caching.finalize, caching.materialize_projection
-    caching.finalize = lambda result, cleanups: result
-    caching.materialize_projection = lambda df, how="persist", scratch_dir=None: (df, lambda: None)
-    # the operator modules bound the names at import time
-    dedup.finalize = caching.finalize
-    dedup.materialize_projection = caching.materialize_projection
-    similarity.finalize = caching.finalize
-    similarity.materialize_projection = caching.materialize_projection
+    orig_fin = dedup.finalize
+    # the operator modules bound the name at import time
+    dedup.finalize = similarity.finalize = lambda result, persisted: result
     try:
         from pyspark.sql import functions as F
 
@@ -124,11 +118,7 @@ def run_explain_internal(spark, sf_dir, outdir):
                 f.write(buf.getvalue())
             print(f"explained {name}", file=sys.stderr)
     finally:
-        caching.finalize = orig_fin
-        caching.materialize_projection = orig_mat
-        dedup.finalize, dedup.materialize_projection = orig_fin, orig_mat
-        similarity.finalize = orig_fin
-        similarity.materialize_projection = orig_mat
+        dedup.finalize = similarity.finalize = orig_fin
 
 
 def stages_ngram(spark, sf_dir):

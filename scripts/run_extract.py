@@ -18,10 +18,9 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
 from tesseract_recognize_spark.config import ExtractConfig
 from tesseract_recognize_spark.plans.checkpoint import run_checkpointed
+from tesseract_recognize_spark.session import build_session
 from tesseract_recognize_spark.sources.tableio import get_table_io
 
 
@@ -51,7 +50,7 @@ def main(argv=None) -> int:
         if args.text_levels
         else (args.layout_level,)
     )
-    spark = SparkSession.builder.appName("extract").getOrCreate()
+    spark = build_session(app_name="extract")
     sc = spark.sparkContext
     media_partitions = args.media_partitions or sc.defaultParallelism * 4
     cfg = ExtractConfig(

@@ -26,111 +26,30 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame
 
-__all__ = ["finalize", "finalize_and_unpersist", "materialize_projection"]
+__all__ = ["finalize"]
 
 
-def finalize(result: DataFrame, cleanups: Iterable) -> DataFrame:
-    """Eagerly materialize ``result`` then run every cleanup callable —
-    unconditionally (try/finally), so a failed query never strands
-    blocks or scratch tables. The callable form of
-    ``finalize_and_unpersist``, for intermediates materialized via
-    ``materialize_projection`` (whose cleanup may be an unpersist OR a
-    scratch-table delete)."""
+def finalize(result: DataFrame, persisted: Iterable[DataFrame]) -> DataFrame:
+    """Eagerly materialize ``result`` (localCheckpoint: one computation,
+    lineage truncated off the persisted intermediates), then unpersist
+    every DataFrame in ``persisted`` — unconditionally (try/finally), so a
+    failed query never strands corpus-sized blocks in the block manager."""
     try:
         return result.localCheckpoint(eager=True)
     finally:
-        # every cleanup runs even if an earlier one raises (a failed
-        # scratch-table delete must not strand persisted blocks — the
-        # exact leak this module exists to prevent); the first error is
-        # re-raised after all cleanups have run
+        # every unpersist runs even if an earlier one raises (one failure
+        # must not strand the remaining blocks — the exact leak this
+        # module exists to prevent); the first error is re-raised after
+        # all of them have run
         first_err = None
-        for fn in cleanups:
+        for df in persisted:
             try:
-                fn()
+                # blocking: the no-blocks-after-return invariant is
+                # asserted by tests/test_caching.py; async removal would
+                # race it
+                df.unpersist(blocking=True)
             except Exception as exc:  # noqa: BLE001 — re-raised below
                 if first_err is None:
                     first_err = exc
         if first_err is not None:
             raise first_err
-
-
-def finalize_and_unpersist(
-    result: DataFrame, intermediates: Iterable[DataFrame]
-) -> DataFrame:
-    """Eagerly materialize ``result`` (localCheckpoint: one computation,
-    lineage truncated off the persisted intermediates), then unpersist
-    every DataFrame in ``intermediates`` — unconditionally, including
-    when the computation raises (try/finally), so a failed query never
-    strands corpus-sized blocks in the block manager."""
-    try:
-        return result.localCheckpoint(eager=True)
-    finally:
-        for df in intermediates:
-            # blocking: the no-blocks-after-return invariant is asserted
-            # by tests/test_caching.py; async removal would race it
-            df.unpersist(blocking=True)
-
-
-def materialize_projection(
-    df: DataFrame, how: str = "persist", scratch_dir: str | None = None
-):
-    """Materialize a corpus-sized projection that a plan references from
-    multiple consumers, returning ``(materialized_df, cleanup)``.
-
-    ``how="persist"`` — block-manager ``MEMORY_AND_DISK``; right up to
-    the point where the projection approaches aggregate executor
-    memory+disk, and lost with an executor (recompute from lineage).
-    ``cleanup()`` unpersists (blocking).
-
-    ``how="checkpoint_table"`` — the 10^12-row shape the dedup/ANN
-    docstrings name: write the projection to ``scratch_dir`` as parquet
-    and re-read it, so (a) the block manager holds nothing, (b) an
-    executor loss costs a re-read instead of a lineage recompute of the
-    whole prep stage, and (c) downstream stages scan a columnar table
-    with pushdown instead of deserializing cached blocks. ``cleanup()``
-    deletes ``scratch_dir`` through the Hadoop FileSystem API, so any
-    Hadoop-visible scheme (file://, hdfs://, s3a://) is handled.
-
-    Both branches are result-identical; the choice is a deployment knob
-    (``tests/test_caching.py`` pins the equality).
-    """
-    if how == "persist":
-        from pyspark import StorageLevel
-
-        p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        return p, lambda: p.unpersist(blocking=True)
-    if how == "checkpoint_table":
-        if not scratch_dir:
-            raise ValueError(
-                "materialize_projection(how='checkpoint_table') needs "
-                "scratch_dir (a job-scoped scratch path)"
-            )
-        spark = df.sparkSession
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(scratch_dir)
-        fs = jpath.getFileSystem(
-            spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-        )
-        # cleanup() deletes scratch_dir recursively — refuse to adopt a
-        # pre-existing non-empty directory rather than destroy a caller's
-        # data at write AND at cleanup
-        if fs.exists(jpath) and fs.listStatus(jpath):
-            raise ValueError(
-                "materialize_projection(how='checkpoint_table'): "
-                f"scratch_dir {scratch_dir!r} exists and is not empty — "
-                "pass a fresh job-scoped scratch path (it is deleted "
-                "recursively on cleanup)"
-            )
-        df.write.mode("overwrite").parquet(scratch_dir)
-        out = spark.read.parquet(scratch_dir)
-
-        def _cleanup() -> None:
-            jvm = spark._jvm  # Hadoop Path works for any configured FS
-            jpath = jvm.org.apache.hadoop.fs.Path(scratch_dir)
-            fs = jpath.getFileSystem(
-                spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-            )
-            fs.delete(jpath, True)
-
-        return out, _cleanup
-    raise ValueError(f"materialize_projection: unknown how={how!r}")

@@ -29,9 +29,6 @@ class ExtractConfig:
     # the P1/P2 derotation post-passes (reference PSM_AUTO_OSD,
     # tesseract-recognize.cc:609-628); "auto" leaves coords in raster frame.
     psm: str = "auto_osd"
-    # prefix region ids with a crop/selection id (reference xpath region mode,
-    # tesseract-recognize.cc:663-666); None = whole-page mode
-    crop_id: str | None = None
     # render dpi for media recognition (reference --density, default 300,
     # tesseract-recognize.cc:45,542: the Ghostscript page-render dpi).
     # The synthetic resolver renders at the canonical 300-dpi contract;
@@ -46,8 +43,6 @@ class ExtractConfig:
     # media rows are redistributed by (doc_id, offset) hash so one
     # media-heavy document spreads across many tasks (skew salting)
     media_partitions: int = 0
-    # rows per Arrow batch crossing into the Python workers
-    arrow_batch_rows: int = 256
 
     def __post_init__(self) -> None:
         if self.layout_level not in LEVELS:

@@ -149,9 +149,8 @@ def emit_page_rows(
             ),
         )
         rid = f"b{block_counter}"
-        crop_prefix = crop["crop_id"] if crop else cfg.crop_id
-        if crop_prefix is not None:
-            rid = f"{crop_prefix}_{rid}"
+        if crop is not None:
+            rid = f"{crop['crop_id']}_{rid}"
         if n_pages > 1:
             rid = f"pg{page_num}_{rid}"
         region_text = ""

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from tesseract_recognize_spark.caching import finalize, materialize_projection
+from tesseract_recognize_spark.caching import finalize
 from tesseract_recognize_spark.exprcache import cached_exprs
 from tesseract_recognize_spark.partitioning import spread_small_scan
 
@@ -268,8 +268,6 @@ def ngram_jaccard_pairs(
     band_size: int = 4,
     est_min_agree: int = 8,
     bucket_cap: int | None = 100,
-    materialize: str = "persist",
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs: exact character n-gram Jaccard verification of
     the MinHash-LSH candidate pairs.
@@ -306,11 +304,7 @@ def ngram_jaccard_pairs(
     bucket-cap window still re-ran per self-join side). The OPERATOR owns
     cleanup (round-4 invariant): the verified pair list — bounded by the
     duplicate rate, not the corpus — materializes eagerly and every
-    intermediate is freed before return (``caching.finalize``). At
-    10^12 docs pass ``materialize="checkpoint_table"`` with a job-scoped
-    ``scratch_dir``: ``bands`` becomes a parquet scratch table (no
-    block-manager footprint; executor loss = re-read, not a recompute of
-    the shingle pipeline) instead of a block-manager persist.
+    intermediate is freed before return (``caching.finalize``).
     """
     from pyspark import StorageLevel
 
@@ -369,13 +363,8 @@ def ngram_jaccard_pairs(
     # signatures (measured round 6: two identical band-prep stage chains
     # per query). One O(corpus·n_bands) materialization feeds both join
     # sides and subsumes the former sigs persist — `sigs` is now a
-    # single-consumer parent computed once into this table. The
-    # checkpoint_table shape carries n_bands× the rows of sigs (the
-    # 10^12-docs deployment trade: re-read n_bands small rows vs recompute
-    # the band prep per side).
-    bands, free_bands = materialize_projection(
-        bands, how=materialize, scratch_dir=scratch_dir
-    )
+    # single-consumer parent computed once into this table.
+    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
     left, right = bands.alias("a"), bands.alias("b")
     agree = None
     for i in range(n_hashes):
@@ -441,14 +430,4 @@ def ngram_jaccard_pairs(
     verified = joined.select(
         "doc_a", "doc_b", jac.alias("jaccard")
     ).where(F.col("jaccard") >= threshold)
-    # prefiltered is candidate-set sized (bounded by the duplicate rate,
-    # not the corpus) — block-manager persist is the right shape for it
-    # at any scale; only the corpus-sized sigs gets the materialize knob.
-    return finalize(
-        verified,
-        [
-            free_bands,
-            lambda: prefiltered.unpersist(blocking=True),
-            lambda: sets.unpersist(blocking=True),
-        ],
-    )
+    return finalize(verified, [bands, prefiltered, sets])

@@ -18,12 +18,10 @@ from __future__ import annotations
 import hashlib
 import math
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from tesseract_recognize_spark.caching import (
-    finalize,
-    materialize_projection,
-)
+from tesseract_recognize_spark.caching import finalize
 from tesseract_recognize_spark.partitioning import spread_small_scan
 
 __all__ = [
@@ -69,10 +67,6 @@ def two_phase_topk(pairs: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("vec_id", "rank", "neighbor_id")
     )
-
-
-def _as_double(col) -> Column:
-    return F.col(col).cast("array<double>") if isinstance(col, str) else col
 
 
 def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
@@ -245,8 +239,7 @@ def brute_force_topk(
     base = base.withColumn("norm", norm)
     if n_queries:
         return _brute_force_topk_arrow(base, k, n_queries)
-    queries = base.filter(F.col("vec_id") < n_queries) if n_queries else base
-    q, c = queries.alias("q"), base.alias("c")
+    q, c = base.alias("q"), base.alias("c")
     pair_dot = (
         F.expr(_dot_sql("q.v", "c.v", dim))
         if dim
@@ -303,8 +296,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_tables: int = 1,
-    materialize: str = "persist",
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket,
     then exact cosine re-rank. The bucket equi-join replaces the cross
@@ -385,19 +376,11 @@ def lsh_topk(
     # (norm, buckets) — MEMORY_AND_DISK spills gracefully. The OPERATOR
     # owns cleanup (round-4 invariant): the bounded top-k result is
     # materialized eagerly and `base` is freed before returning — see
-    # caching.finalize / materialize_projection. At 10^12 rows pass
-    # materialize="checkpoint_table" with a job-scoped scratch_dir: the
-    # projection becomes a parquet scratch table (no block-manager
-    # footprint, executor-loss = re-read not recompute) instead of a
-    # block-manager persist.
-    base, free_base = materialize_projection(
-        spread_small_scan(emb, id_col).select(
-            F.col(id_col).cast("bigint").alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        ).mapInPandas(prep, schema),
-        how=materialize,
-        scratch_dir=scratch_dir,
-    )
+    # caching.finalize.
+    base = spread_small_scan(emb, id_col).select(
+        F.col(id_col).cast("bigint").alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    ).mapInPandas(prep, schema).persist(StorageLevel.MEMORY_AND_DISK)
     queries = base.filter(F.col("vec_id") < n_queries) if n_queries else base
     q, c = queries.alias("q"), base.alias("c")
     sim = _pair_dot_lr(F.col("q.v"), F.col("c.v")) / (
@@ -417,7 +400,7 @@ def lsh_topk(
         pairs = pairs.groupBy("vec_id", "neighbor_id").agg(
             F.max("sim").alias("sim")
         )
-    return finalize(two_phase_topk(pairs, k), [free_base])
+    return finalize(two_phase_topk(pairs, k), [base])
 
 
 def ivf_topk(
@@ -430,8 +413,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    materialize: str = "persist",
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: an inverted-file index over centroid
     cells — the other classic ANN scale path next to ``lsh_topk``.
@@ -483,11 +464,9 @@ def ivf_topk(
 
     Output: (vec_id, rank, neighbor_id) — floats stay internal, like
     every ANN operator here. The assigned projection feeds both join
-    sides and is materialized (``materialize="persist"`` default;
-    ``"checkpoint_table"`` + ``scratch_dir`` for the 10^12-row shape);
-    the operator owns the cleanup — the top-k result materializes
-    eagerly and the projection is freed before return (as with
-    lsh_topk).
+    sides and is persisted; the operator owns the cleanup — the top-k
+    result materializes eagerly and the projection is freed before
+    return (as with lsh_topk).
     """
     base = spread_small_scan(emb, id_col).select(
         F.col(id_col).cast("bigint").alias("vec_id"),
@@ -554,14 +533,10 @@ def ivf_topk(
                 "rn": np.tile(np.arange(1, take + 1), len(pdf)),
             })
 
-    assigned, free_assigned = materialize_projection(
-        base.mapInPandas(
-            assign, "vec_id bigint, v array<double>, norm double, "
-                    "cell bigint, rn int",
-        ),
-        how=materialize,
-        scratch_dir=scratch_dir,
-    )
+    assigned = base.mapInPandas(
+        assign, "vec_id bigint, v array<double>, norm double, "
+                "cell bigint, rn int",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     corpus = assigned.filter(F.col("rn") == 1)
     probes = assigned if n_queries is None else assigned.filter(
         F.col("vec_id") < n_queries
@@ -579,7 +554,7 @@ def ivf_topk(
         F.col("c.vec_id").alias("neighbor_id"),
         sim.alias("sim"),
     )
-    return finalize(two_phase_topk(pairs, k), [free_assigned])
+    return finalize(two_phase_topk(pairs, k), [assigned])
 
 
 def embedding_cosine_pairs(
@@ -589,8 +564,6 @@ def embedding_cosine_pairs(
     bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: str = "persist",
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: every (vec_a < vec_b) whose
     cosine similarity ≥ threshold, with candidates restricted to vectors
@@ -604,11 +577,10 @@ def embedding_cosine_pairs(
     pair is missed iff any of the ``bits`` hyperplanes separates it:
     P[all agree] = (1 - θ/π)^bits, high exactly for the near-parallel
     pairs dedup cares about); ``bits`` trades recall for candidate
-    volume. The bucketed+normed projection is materialized for the same
-    reason as in lsh_topk (feeds both self-join sides; persist default,
-    ``materialize="checkpoint_table"`` + ``scratch_dir`` at 10^12
-    rows); the operator owns the cleanup — the thresholded pair list
-    materializes eagerly and the projection is freed before return.
+    volume. The bucketed+normed projection is persisted for the same
+    reason as in lsh_topk (feeds both self-join sides); the operator
+    owns the cleanup — the thresholded pair list materializes eagerly
+    and the projection is freed before return.
 
     Hot paths are Arrow-vectorized with the exact left-to-right
     dimension fold (see ivf_topk): norms + all ``bits`` hyperplane
@@ -648,17 +620,13 @@ def embedding_cosine_pairs(
                 "bucket": ((proj > 0) * p[None, :]).sum(axis=1),
             })
 
-    base, free_base = materialize_projection(
-        spread_small_scan(emb, id_col).select(
-            F.col(id_col).cast("bigint").alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        ).mapInPandas(
-            prep,
-            "vec_id bigint, v array<double>, norm double, bucket bigint",
-        ),
-        how=materialize,
-        scratch_dir=scratch_dir,
-    )
+    base = spread_small_scan(emb, id_col).select(
+        F.col(id_col).cast("bigint").alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    ).mapInPandas(
+        prep,
+        "vec_id bigint, v array<double>, norm double, bucket bigint",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     a, b = base.alias("a"), base.alias("b")
     sim = _pair_dot_lr(F.col("a.v"), F.col("b.v")) / (
         F.col("a.norm") * F.col("b.norm")
@@ -675,4 +643,4 @@ def embedding_cosine_pairs(
             F.col("b.vec_id").alias("vec_b"),
         )
     )
-    return finalize(pairs, [free_base])
+    return finalize(pairs, [base])

@@ -102,16 +102,7 @@ def extract(
         media_in = media_in.repartition(
             cfg.media_partitions, "doc_id", "offset"
         )
-    media_rows = ocr_expand(media_in, cfg, resolver=resolver)
-    media_rows = t1_block_filter(media_rows)
-    media_rows = t3_coords(media_rows)
-    # slim the shuffled row: the raster-frame ints and quarantine column are
-    # consumed by T1/T3 above — dropping them here keeps them out of the
-    # doc_id exchange and every window buffer downstream
-    media_rows = media_rows.drop("x0", "y0", "x1", "y1", "full_page", "error")
-    media_rows = media_rows.withColumn("kind", F.lit("media")).withColumn(
-        "text", trim_text(F.col("text"))  # T9 applies at every level
-    )
+    media_rows = _post_ocr(ocr_expand(media_in, cfg, resolver=resolver))
 
     # align the light text branch to the media schema
     media_cols = media_rows.columns
@@ -137,20 +128,7 @@ def extract(
     # the e2e parity tests pin the equivalence.
     all_rows = p3_fill_word_coords(all_rows)
     all_rows = p2_dominant_baselines(all_rows)
-    all_rows = build_coords_array(all_rows)
-
-    # (offset, line_sub, sub_order) orders identically to
-    # (offset, sub_order) — line_sub is monotone in sub_order within a
-    # page — but matches P3's sort exactly, so NO additional sort here
-    order_w = Window.partitionBy("doc_id").orderBy(
-        "offset", "line_sub", "sub_order"
-    )
-    out = all_rows.withColumn(
-        "order", (F.row_number().over(order_w) - 1).cast("int")
-    ).select(*FINAL_COLUMNS)
-    if ordered:
-        out = out.orderBy("doc_id", "order")
-    return out
+    return _number_spans(build_coords_array(all_rows), ordered)
 
 
 def extract_crops(
@@ -201,18 +179,34 @@ def extract_crops(
         media_in = media_in.repartition(
             cfg.media_partitions, "doc_id", "offset", "crop_seq"
         )
-    rows = ocr_expand(
-        media_in, cfg, resolver=resolver, save_crops_dir=save_crops_dir
+    rows = _post_ocr(
+        ocr_expand(
+            media_in, cfg, resolver=resolver, save_crops_dir=save_crops_dir
+        )
     )
-    rows = t1_block_filter(rows)
-    rows = t3_coords(rows)
+    rows = p3_fill_word_coords(rows.repartition("doc_id"))
+    return _number_spans(build_coords_array(rows), ordered)
+
+
+def _post_ocr(rows: DataFrame) -> DataFrame:
+    """OCR output → media span rows: T1 filter, T3 corners, slim, kind,
+    T9 trim."""
+    rows = t3_coords(t1_block_filter(rows))
+    # slim the shuffled row: the raster-frame ints and quarantine column are
+    # consumed by T1/T3 above — dropping them here keeps them out of the
+    # doc_id exchange and every window buffer downstream
     rows = rows.drop("x0", "y0", "x1", "y1", "full_page", "error")
-    rows = rows.withColumn("kind", F.lit("media")).withColumn(
-        "text", trim_text(F.col("text"))
+    return rows.withColumn("kind", F.lit("media")).withColumn(
+        "text", trim_text(F.col("text"))  # T9 applies at every level
     )
-    rows = rows.repartition("doc_id")
-    rows = p3_fill_word_coords(rows)
-    rows = build_coords_array(rows)
+
+
+def _number_spans(rows: DataFrame, ordered: bool) -> DataFrame:
+    """Assign the per-document span ``order`` and project FINAL_COLUMNS;
+    ``ordered`` adds the global (doc_id, order) sort."""
+    # (offset, line_sub, sub_order) orders identically to
+    # (offset, sub_order) — line_sub is monotone in sub_order within a
+    # page — but matches P3's sort exactly, so NO additional sort here
     order_w = Window.partitionBy("doc_id").orderBy(
         "offset", "line_sub", "sub_order"
     )

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 __all__ = ["build_session"]
@@ -23,8 +24,10 @@ def build_session(
     reference's one-decoded-page-resident rule,
     tesseract-recognize.cc:540-548,790): a media-heavy batch expands
     ~100-200× in the OCR stage, so batches are kept small.
+
+    ``master`` is set only when passed or when the launcher set none: a
+    builder master would override spark-submit's ``--master``.
     """
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     # shuffle/spill files on tmpfs when available — /tmp sits on a virtio
     # disk in this sandbox and makes shuffle-heavy stages I/O-bound and
     # noisy (on a real cluster this is local NVMe / EBS, configured by the
@@ -35,7 +38,6 @@ def build_session(
         os.makedirs(local_dir, exist_ok=True)
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -73,8 +75,20 @@ def build_session(
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if master or not _launcher_master():
+        b = b.master(master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]"))
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def _launcher_master() -> bool:
+    """Whether the JVM behind this process already carries ``spark.master``.
+    Under spark-submit the JVM is up before Python starts and hands over
+    its gateway port; attaching to it makes ``SparkConf()`` read the
+    submitted settings instead of an empty Python-side dict."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+    return SparkConf().contains("spark.master")

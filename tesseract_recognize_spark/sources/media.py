@@ -5,27 +5,18 @@ store / Iceberg binary column keyed by ``media_ref`` and decoded. In this
 repo the raster is synthesized deterministically from the ref (SURVEY.md
 §1.4: "media bytes resolved by media_ref ... or synthesized
 deterministically"), which plays the role of both the fetch and the image
-decode. The resolver registry keeps that swappable per URI scheme without
-touching the pipeline.
+decode. Another resolver is swapped in per call through
+``extract(resolver=...)``, which ships it to the Python workers in the UDF
+closure.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import numpy as np
 
 from tesseract_recognize_spark.fixtures.raster import render_raster
 
-_RESOLVERS: dict[str, Callable[[str], np.ndarray]] = {}
-
-
-def register_resolver(scheme: str, fn: Callable[[str], np.ndarray]) -> None:
-    _RESOLVERS[scheme] = fn
-
 
 def resolve_media(media_ref: str) -> np.ndarray:
     """Resolve a media_ref to a binary raster (uint8 0/1 ndarray)."""
-    scheme = media_ref.split("://", 1)[0] if "://" in media_ref else ""
-    fn = _RESOLVERS.get(scheme, render_raster)
-    return fn(media_ref)
+    return render_raster(media_ref)

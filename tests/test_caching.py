@@ -1,4 +1,4 @@
-"""Block-manager hygiene pins (caching.finalize_and_unpersist): every
+"""Block-manager hygiene pins (caching.finalize): every
 operator that persists corpus-sized intermediates must free them before
 returning — the round-4 invariant. After each operator call, at most ONE
 new entry (the result's own localCheckpoint blocks, O(|result|)) may
@@ -104,43 +104,33 @@ def test_connected_components_frees_edges(spark):
         assert _n_persisted(spark) - before <= 5
 
 
-def test_checkpoint_table_materialization_matches_persist(spark, emb, docs, tmp_path):
-    """materialize="checkpoint_table" is result-identical to the default
-    persist path, leaves NO new block-manager entries beyond the result
-    checkpoint, and deletes its scratch directory before returning."""
-    import os
+def test_finalize_runs_every_unpersist_and_reraises_first_error():
+    """One failed unpersist must not strand the remaining blocks: every
+    unpersist runs, then the first error propagates."""
+    from tesseract_recognize_spark.caching import finalize
 
-    from tesseract_recognize_spark.operators.dedup import ngram_jaccard_pairs
-    from tesseract_recognize_spark.operators.similarity import lsh_topk
+    calls = []
 
-    scratch = str(tmp_path / "ann_scratch")
-    before = _n_persisted(spark)
-    via_ckpt = lsh_topk(
-        emb, dim=8, k=3, bits=2,
-        materialize="checkpoint_table", scratch_dir=scratch,
-    )
-    got = {(r["vec_id"], r["neighbor_id"]) for r in via_ckpt.collect()}
-    assert _n_persisted(spark) - before <= 1
-    assert not os.path.exists(scratch)  # operator owns scratch cleanup
+    class _Result:
+        def localCheckpoint(self, eager):
+            calls.append(("checkpoint", eager))
+            return "checkpointed"
 
-    via_persist = lsh_topk(emb, dim=8, k=3, bits=2)
-    want = {(r["vec_id"], r["neighbor_id"]) for r in via_persist.collect()}
-    assert got == want
+    class _Persisted:
+        def __init__(self, name, fail):
+            self.name, self.fail = name, fail
 
-    scratch2 = str(tmp_path / "sigs_scratch")
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=0.8,
-        materialize="checkpoint_table", scratch_dir=scratch2,
-    )
-    assert {(r["doc_a"], r["doc_b"]) for r in pairs.collect()} == {(100, 101)}
-    assert not os.path.exists(scratch2)
+        def unpersist(self, blocking):
+            calls.append((self.name, blocking))
+            if self.fail:
+                raise RuntimeError(self.name)
 
-
-def test_materialize_projection_rejects_bad_args(spark):
-    from tesseract_recognize_spark.caching import materialize_projection
-
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="scratch_dir"):
-        materialize_projection(df, how="checkpoint_table")
-    with pytest.raises(ValueError, match="unknown how"):
-        materialize_projection(df, how="bogus")
+    persisted = [_Persisted("a", True), _Persisted("b", False),
+                 _Persisted("c", True)]
+    with pytest.raises(RuntimeError, match="^a$"):
+        finalize(_Result(), persisted)
+    assert calls == [("checkpoint", True), ("a", True), ("b", True),
+                     ("c", True)]
+    calls.clear()
+    assert finalize(_Result(), [_Persisted("b", False)]) == "checkpointed"
+    assert calls == [("checkpoint", True), ("b", True)]

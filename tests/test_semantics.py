@@ -75,8 +75,15 @@ def test_id_scheme_multipage_prefix():
 
 
 def test_id_scheme_crop_prefix():
-    rows = _emit(_mk_layout(), ExtractConfig(crop_id="r7"))
-    assert [r["region_id"] for r in rows if r["level"] == "region"] == ["r7_b1"]
+    crop = {"crop_id": "r7", "x": 0, "y": 0, "seq": 0}
+    rows = emit_page_rows(
+        page_struct_from_layout(_mk_layout()), ExtractConfig(), 1, 1, crop=crop
+    )
+    # crop mode writes into the selected region: no region row of its own
+    assert {r["region_id"] for r in rows} == {"r7_b1"}
+    assert [r["line_id"] for r in rows if r["level"] == "line"] == [
+        "r7_b1_p1_l1", "r7_b1_p2_l1", "r7_b1_p2_l2"
+    ]
 
 
 def test_nontext_blocks_skip_counter():
