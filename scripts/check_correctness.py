@@ -5,10 +5,14 @@ oracle_sql() in DuckDB over the same parquet files; compares row count,
 column names, and an order-insensitive value multiset. Usage:
 
     python scripts/check_correctness.py [sf_dir] [query ...]
+
+Spark runs on $SPARK_GRAFT_CPUS cores (default: the cores this process
+may use, as ``nproc`` reports).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -41,7 +45,12 @@ def canon(rows, cols):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    spark = build_session(
+        master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8)
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

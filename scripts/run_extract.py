@@ -37,7 +37,9 @@ def parse_args(argv):
     p.add_argument("--n-groups", type=int, default=8,
                    help="checkpoint granularity (commit-per-group)")
     p.add_argument("--media-partitions", type=int, default=0,
-                   help="salting width for the media stage (0 = auto)")
+                   help="cap on OCR tasks per group; each group runs one "
+                        "task per core up to this cap "
+                        "(0 = 4 x default parallelism)")
     p.add_argument("--resume", action="store_true",
                    help="skip groups already committed in the lineage")
     return p.parse_args(argv)

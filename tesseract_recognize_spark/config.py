@@ -39,9 +39,11 @@ class ExtractConfig:
     density: int = 300
 
     # --- runtime knobs (scale, not semantics) ---
-    # target number of partitions for the media stage (0 = leave as-is);
-    # media rows are redistributed by (doc_id, offset) hash so one
-    # media-heavy document spreads across many tasks (skew salting)
+    # partitions of the media stage (0 = leave as-is); media rows are
+    # redistributed by (doc_id, offset) hash so one media-heavy document
+    # spreads across many tasks (skew salting). ``extract`` uses it as
+    # given; ``run_checkpointed`` treats it as a CAP on OCR tasks per
+    # group and runs one task per core
     media_partitions: int = 0
 
     def __post_init__(self) -> None:

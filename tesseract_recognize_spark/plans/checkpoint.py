@@ -10,12 +10,21 @@ committed groups — the anti-join of pending work against lineage.
 The group is the CHECKPOINT granularity, not the parallelism: inside a
 group the full distributed plan runs. At 10^12 docs you'd size n_groups so
 one group ≈ an hour of cluster work; locally tests use 4-8.
+
+Each group's OCR stage runs one task per core: ``cfg.media_partitions``
+is only a cap. Every Python task pays a fixed cost (the worker re-scans
+its import caches and collects garbage per task) that more tasks only
+multiply. On a 4-core host one task per core beat the 4 x cores salting
+width at groups of ~100 to 5,200 media pages and tied it at 10,500; one
+task per 256-page Arrow batch was faster at no size measured (perfbench
+and ``scripts/group_sizing_pairs.py``).
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -47,6 +56,9 @@ def run_checkpointed(
     done = table_io.committed_groups()
     entries: list[LineageEntry] = []
     staged = docs_df.withColumn("_grp", group_col(n_groups))
+    if cfg.media_partitions:
+        cores = docs_df.sparkSession.sparkContext.defaultParallelism
+        cfg = replace(cfg, media_partitions=min(cfg.media_partitions, cores))
     for g in range(n_groups):
         if g in done:
             continue

@@ -104,15 +104,16 @@ def extract(
         )
     media_rows = _post_ocr(ocr_expand(media_in, cfg, resolver=resolver))
 
-    # align the light text branch to the media schema
-    media_cols = media_rows.columns
-    text_full = text_rows.withColumn("kind", F.lit("text"))
-    for c in media_cols:
-        if c not in text_full.columns:
-            text_full = text_full.withColumn(
-                c, F.lit(None).cast(media_rows.schema[c].dataType)
-            )
-    all_rows = text_full.select(media_cols).unionByName(media_rows)
+    # align the light text branch to the media schema in one projection
+    # (a withColumn per missing column re-analyses the plan each time)
+    text_cols = set(text_rows.columns)
+    text_full = text_rows.select(*(
+        F.lit("text").alias("kind") if f.name == "kind"
+        else F.col(f.name) if f.name in text_cols
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in media_rows.schema
+    ))
+    all_rows = text_full.unionByName(media_rows)
 
     # one exchange serves every window below (hash(doc_id) clusters
     # (doc_id), (doc_id, offset) and (doc_id, offset, line_id) alike)

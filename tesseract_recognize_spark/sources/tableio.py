@@ -11,10 +11,15 @@ identical commit/resume semantics:
     lineage rows land in a second Iceberg table.
   * ``ParquetTableIO`` — local fallback: each group is a parquet subdir
     committed by an atomic manifest-line append; resume reads the manifest.
+    Its lineage counts are observed metrics of the write job.
 
 Commit unit = partition group (a deterministic hash bucket of doc_id), so
 "resume" = anti-join of pending groups against committed ones — the same
 contract either way.
+
+``commit_group`` takes the frame ``plans.pipeline.extract`` returns: the
+FINAL_COLUMNS, with each doc's spans numbered by ``order`` from 0. The
+parquet sink relies on that to count docs as rows with ``order = 0``.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ import time
 import uuid
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 __all__ = ["LineageEntry", "ParquetTableIO", "IcebergTableIO", "get_table_io"]
 
@@ -74,16 +79,21 @@ class ParquetTableIO:
         self, df: DataFrame, group: int, run_id: str, t0: float
     ) -> LineageEntry:
         path = self.group_path(group)
-        df.write.mode("overwrite").parquet(path)
-        spark = df.sparkSession
-        written = spark.read.parquet(path)
-        doc_count = written.select("doc_id").distinct().count()
-        span_count = written.count()
+        # lineage counted by the write job itself, not by re-reading the
+        # group: every doc's spans are numbered from 0, so order = 0 counts
+        # docs exactly (observed metrics forbid DISTINCT)
+        counts = Observation()
+        df.observe(
+            counts,
+            F.count(F.lit(1)).alias("spans"),
+            F.count_if(F.col("order") == 0).alias("docs"),
+        ).write.mode("overwrite").parquet(path)
+        written = counts.get
         entry = LineageEntry(
             run_id=run_id,
             group=group,
-            doc_count=doc_count,
-            span_count=span_count,
+            doc_count=written["docs"],
+            span_count=written["spans"],
             wall_ms=int((time.time() - t0) * 1000),
             status="committed",
             committed_at=time.time(),
@@ -130,8 +140,6 @@ class IcebergTableIO:
     def commit_group(
         self, df: DataFrame, group: int, run_id: str, t0: float
     ) -> LineageEntry:
-        from pyspark.sql import functions as F
-
         spark = df.sparkSession
         data = df.withColumn(self.GROUP_COL, F.lit(group))
         if spark.catalog.tableExists(self.table):
