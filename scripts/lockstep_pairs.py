@@ -31,11 +31,29 @@ import sys
 import time
 
 sys.path.insert(0, ".")
-sys.path.insert(0, "scripts")
 
-from scaling_bench import ensure_corpus  # noqa: E402
+from tesseract_recognize_spark.fixtures.generator import (  # noqa: E402
+    gen_documents,
+    write_documents_parquet,
+)
 
 LEDGER = "BENCH/lockstep_ledger_r04.jsonl"
+
+
+def ensure_corpus(n_docs: int, n_files: int = 128) -> str:
+    # multi-file corpus: a single small parquet file is ONE input split in
+    # Spark regardless of cores, which injects a serial scan+explode term a
+    # real (many-file) table doesn't have — it capped round-1 scaling
+    path = f"/tmp/spark_graft_scaling/docs_{n_docs}_f{n_files}"
+    if not os.path.exists(path):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        t0 = time.time()
+        write_documents_parquet(
+            gen_documents(n_docs, seed=42), path, n_files=n_files
+        )
+        print(f"generated {n_docs} docs in {time.time() - t0:.1f}s",
+              file=sys.stderr)
+    return path
 
 
 def loadavg1() -> float:

@@ -1,436 +1,85 @@
-"""Render BENCH/BASELINE.md — the north-rule scaling evidence file.
+"""Summarize the lockstep scaling ledgers on stdout.
 
-Round-4 structure: the HEADLINE estimator is the same-regime pair
-distribution (scripts/scaling_pairs.py: back-to-back local[N]/local[4N]
-legs, alternating order, in-leg loadavg traces), reported raw alongside
-the same-day Spark-free host-physics ceiling (scripts/
-cpu_inflation_probe.py) and the corrected estimate WITH its assumptions
-stated — per the round-3 advisor: corrected figures are estimates, not
-raw target clears. Historical cross-session floors are kept as context.
+Reads every session that `scripts/lockstep_pairs.py` appended to
+`BENCH/lockstep_ledger_r*.jsonl` and prints, for each N-vs-4N variant
+(e.g. local[2] vs local[8]), one table row per session ordered by corpus
+size, then the verdict against the >= 0.8 scaling target: how many
+sessions reach it on session-floor efficiency (`eff_min`), with every
+session's `eff_min` and clean-cycle median listed beside it.
 
-    python scripts/scaling_report.py
+    python scripts/scaling_report.py      # from the repository root
 """
 
 from __future__ import annotations
 
 import argparse
-import glob as _glob
+import glob
 import json
-import statistics
+import os
 
-PAIRS_LEDGER = "BENCH/pairs_ledger_r04.jsonl"
-LOCKSTEP_LEDGERS = "BENCH/lockstep_ledger_r*.jsonl"
-PROBE = "BENCH/cpu_inflation_probe.json"
+LEDGERS = "BENCH/lockstep_ledger_r*.jsonl"
+TARGET = 0.8
 
-# historical cross-session floors (earlier rounds' ledgers, recorded in
-# git history of this file): {round: (min8, min32, n_runs8, n_runs32)}
-HISTORY = {
-    "r2 (70 gated runs, quiet host day)": (77.3, 25.8, 22, 48),
-    "r3 (9 sessions, storms mid-run)": (68.89, 30.63, 18, 36),
-}
+
+def load_sessions() -> list[dict]:
+    sessions = []
+    for path in sorted(glob.glob(LEDGERS)):
+        with open(path) as f:
+            for ln in f:
+                s = json.loads(ln)
+                s["ledger"] = os.path.basename(path)
+                sessions.append(s)
+    return sessions
+
+
+def variant_of(s: dict) -> tuple[int, ...]:
+    # a ledger record carries min_<cores> keys for its two legs
+    return tuple(sorted(int(k[4:]) for k in s if k.startswith("min_")))
+
+
+def fmt(v) -> str:
+    return "—" if v is None else f"{v:.3f}"
+
+
+def report(sessions: list[dict]) -> str:
+    out = []
+    for n, xn in sorted({variant_of(s) for s in sessions}):
+        rows = sorted((s for s in sessions if variant_of(s) == (n, xn)),
+                      key=lambda s: (s["docs"], s["ts"]))
+        out += [
+            f"## local[{n}] vs local[{xn}]", "",
+            f"| ledger | docs | cycles | floor@{n} (s) "
+            f"| floor@{xn} (s) | eff_min | eff_median | clean cycles "
+            "| eff_clean_median |",
+            "|---|---|---|---|---|---|---|---|---|",
+        ]
+        for s in rows:
+            out.append(
+                f"| {s['ledger']} | {s['docs']:,} | {s['cycles']} "
+                f"| {s[f'min_{n}']:.1f} | {s[f'min_{xn}']:.1f} "
+                f"| {fmt(s['eff_min'])} | {fmt(s['eff_median'])} "
+                f"| {s['clean_cycles']} | {fmt(s['eff_clean_median'])} |"
+            )
+        k = sum(s["eff_min"] >= TARGET for s in rows)
+        out += [
+            "",
+            f"Verdict: {k} of {len(rows)} sessions ≥ {TARGET} on "
+            "session-floor efficiency (eff_min "
+            + ", ".join(fmt(s["eff_min"]) for s in rows)
+            + "; clean medians "
+            + ", ".join(fmt(s["eff_clean_median"]) for s in rows)
+            + ").",
+            "",
+        ]
+    return "\n".join(out)
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=8)
-    ap.add_argument("--xn", type=int, default=32)
-    ap.add_argument("--pairs-ledger", default=PAIRS_LEDGER)
-    ap.add_argument("--out", default="BENCH/BASELINE.md")
-    args = ap.parse_args()
-    n, xn = args.n, args.xn
-    factor = xn / n
-
-    pairs = []
-    with open(args.pairs_ledger) as f:
-        for ln in f:
-            pairs.append(json.loads(ln))
-    all_locksteps = []
-    for path in sorted(_glob.glob(LOCKSTEP_LEDGERS)):
-        try:
-            with open(path) as f:
-                for ln in f:
-                    all_locksteps.append(json.loads(ln))
-        except OSError:
-            pass
-    all_locksteps.sort(key=lambda s: (s["docs"], s["ts"]))
-
-    def variant_of(s):
-        # a ledger record carries min_<cores> keys for its two legs
-        return tuple(sorted(int(k[4:]) for k in s if k.startswith("min_")))
-
-    locksteps = [s for s in all_locksteps if variant_of(s) == (n, xn)]
-    low_density = [s for s in all_locksteps if variant_of(s) == (2, 8)
-                   and (n, xn) != (2, 8)]
-    with open(PROBE) as f:
-        probe = json.load(f)
-    ratios = [r["per_core_ratio_8_to_32"] for r in probe["runs"]]
-    r_lo, r_hi = min(ratios), max(ratios)
-    r28 = [r["per_core_ratio_2_to_8"] for r in probe["runs"]
-           if "per_core_ratio_2_to_8" in r]
-    r28_lo, r28_hi = (min(r28), max(r28)) if r28 else (None, None)
-    curve = probe["control_curve"]["per_core_vs_single"]
-
-    # headline median: pairs measured WITH in-leg load traces (the first
-    # three ledger records are pre-trace pilot pairs whose 32-core legs
-    # overlapped concurrent dev sessions; they stay in the table, flagged)
-    traced = [p for p in pairs if p.get(f"load_trace_{xn}") is not None]
-    effs = [p["efficiency"] for p in (traced or pairs)]
-    med = statistics.median(effs)
-    # clean pairs: both legs' background-load estimate under 2 cores
-    clean = [
-        p for p in pairs
-        if p.get(f"bg_load_{n}") is not None
-        and p[f"bg_load_{n}"] < 2 and p[f"bg_load_{xn}"] < 2
-    ]
-    med_clean = statistics.median(
-        [p["efficiency"] for p in clean]
-    ) if clean else None
-    floor8 = min(p[f"min_{n}"] for p in pairs)
-    floor32 = min(p[f"min_{xn}"] for p in pairs)
-    eff_floor = floor8 / (factor * floor32)
-    corrected = med / r_hi  # least correction = conservative
-
-    rows = []
-    for p in pairs:
-        bg8 = p.get(f"bg_load_{n}")
-        bg32 = p.get(f"bg_load_{xn}")
-        bg = "—" if bg8 is None else f"{bg8:.1f} / {bg32:.1f}"
-        rows.append(
-            f"| {p['pair']} | {'→'.join(str(c) for c in p['order'])} "
-            f"| {p[f'min_{n}']:.1f} | {p[f'min_{xn}']:.1f} "
-            f"| {bg} | **{p['efficiency']:.3f}** |"
-        )
-    hist_rows = []
-    for name, (m8, m32, k8, k32) in HISTORY.items():
-        e = m8 / (factor * m32)
-        hist_rows.append(
-            f"| {name} | {m8:.1f} | {m32:.1f} | {k8}+{k32} | {e:.3f} |"
-        )
-
-    out = f"""# BENCH baseline — two-parallelism scaling evidence (rounds 2–5)
-
-North rule: throughput scaling efficiency ≥ 0.8 between N- and
-4N-executor clusters. Sandbox stand-in: the identical end-to-end
-extraction job (explode → native normalize → Arrow mock-OCR → native
-post-passes T1/T3/P1/P3/P2 → order window → sink) on the identical
-deterministic 40,000-document corpus (seed 42, FIXTURES.md shape incl.
-the 1% media-heavy skew tail, 128 parquet part files), at local[{n}] vs
-local[{xn}], fresh JVM per leg, {pairs[0].get('runs_8') and len(pairs[-1]['runs_8']) or 6} runs per leg
-(min taken — JIT C2 compiles over the first runs), tmpfs shuffle dirs,
-ParallelGC, 48g heap.
-
-## Headline: same-regime pairs (round-4 replication)
-
-Each pair runs its two legs BACK-TO-BACK (order alternating) so both
-share one noise regime; a 5s loadavg trace runs during each leg and the
-background-load estimate is (in-leg 1-min loadavg mean − leg cores).
-eff = min_wall@{n} / ({factor:.0f} · min_wall@{xn}).
-
-| pair | order | min@{n} (s) | min@{xn} (s) | bg load {n}/{xn} | raw eff |
-|---|---|---|---|---|---|
-{chr(10).join(rows)}
-
-**Instrument caveat (measured, round 4):** the in-leg load trace guards
-against SANDBOX-LOCAL contamination only. The dominant noise source is
-hypervisor co-tenancy INVISIBLE to the guest: during a leg running 54%
-over its floor, guest loadavg read clean, `/proc/stat` steal stayed
-≈0.2%, cgroup throttling was zero, and the Spark JVM was charged ~7.7
-cores/s of SYSTEM time with zero I/O, zero major faults and 54 context
-switches/s — kernel-work-free accounting that is only consistent with
-host-side CPU preemption being mis-charged to the guest process. No
-guest-side gate can filter this; the defense is the min-over-runs
-estimator, which the pairs apply per leg (6 runs each).
-
-Pairs without a bg-load column are pre-trace pilot runs whose
-local[{xn}] legs overlapped concurrent development sessions on this
-host — kept for the record, excluded from the headline median.
-
-**Median raw efficiency over {len(effs)} traced pairs: {med:.3f}**"""
-    if med_clean is not None:
-        out += f""" (clean-host
-pairs only — both legs' background load < 2 cores: **{med_clean:.3f}**
-over {len(clean)} pairs)"""
-    out += f""".
-Session floors: {floor8:.1f}s @{n} / {floor32:.1f}s @{xn} → {eff_floor:.3f}.
-"""
-    eff_marginal = None
-    large: list = []
-    n_large_clear = 0
-    large_effs = "—"
-    if locksteps:
-        ls_rows = []
-        for s in locksteps:
-            ecm = (f"{s['eff_clean_median']:.3f}"
-                   if s.get("eff_clean_median") is not None else "—")
-            best = max(c["eff"] for c in s["per_cycle"])
-            ls_rows.append(
-                f"| {s['docs']:,} | {s['cycles']} | {s[f'min_{n}']:.1f} "
-                f"| {s[f'min_{xn}']:.1f} | {s['eff_min']:.3f} "
-                f"| {s['eff_median']:.3f} | {s['clean_cycles']} | {ecm} "
-                f"| {best:.3f} |"
-            )
-        # marginal (fixed-cost-free) fit from per-leg floors across
-        # replicate sessions at the smallest vs largest corpus size —
-        # same model as scripts/marginal_efficiency.py
-        by_docs: dict[int, dict] = {}
-        for s in locksteps:
-            d = by_docs.setdefault(
-                s["docs"], {f"min_{n}": s[f"min_{n}"],
-                            f"min_{xn}": s[f"min_{xn}"]})
-            d[f"min_{n}"] = min(d[f"min_{n}"], s[f"min_{n}"])
-            d[f"min_{xn}"] = min(d[f"min_{xn}"], s[f"min_{xn}"])
-        sizes = sorted(by_docs)
-        if len(sizes) >= 2:
-            sm, bg = by_docs[sizes[0]], by_docs[sizes[-1]]
-            dd = sizes[-1] - sizes[0]
-            c_n = (bg[f"min_{n}"] - sm[f"min_{n}"]) / dd
-            c_xn = (bg[f"min_{xn}"] - sm[f"min_{xn}"]) / dd
-            eff_marginal = c_n / (factor * c_xn)
-        large = [s for s in locksteps if s["docs"] >= 160_000]
-        n_large_clear = sum(1 for s in large if s["eff_min"] >= 0.8)
-        large_effs = ", ".join(
-            f"{s['eff_min']:.3f} ({s['docs'] // 1000}k)" for s in large
-        )
-        out += f"""
-## Run-level lockstep interleave (finest same-regime granularity)
-
-`scripts/lockstep_pairs.py`: two PERSISTENT sessions (local[{n}],
-local[{xn}], warmed past C2 compilation) alternate SINGLE measured
-passes seconds apart, so storm windows (multi-minute, per the traces
-above) inflate adjacent cycles of BOTH legs rather than one whole leg of
-a pair. eff_min uses each leg's session floor; eff_clean is the median
-over cycles whose both legs ran within 15% of their leg's floor
-(storm-free cycles). The docs sweep separates the Amdahl term — fixed
-per-pass cost F (scheduler, stage setup, Python worker dispatch) is
-constant while compute scales with docs, so raw efficiency RISES toward
-the host-physics ceiling as the job gets longer; a real 100-TB job is
-hours long and sits at the asymptote.
-
-| docs | cycles | floor@{n} (s) | floor@{xn} (s) | eff (floors) | eff (median cycle) | clean cycles | eff (clean median) | best cycle |
-|---|---|---|---|---|---|---|---|---|
-{chr(10).join(ls_rows)}
-
-Raw efficiency RISES with job size exactly as the Amdahl decomposition
-predicts (fixed per-pass cost amortizes; `scripts/marginal_efficiency.py`
-solves both terms from per-leg minima across the replicate sessions:
-marginal efficiency {f'{eff_marginal:.2f}' if eff_marginal else '—'},
-the fixed-cost-free regime a real 100-TB job runs in). Large-job
-sessions (≥160k docs, ~5+-minute legs): {n_large_clear} of {len(large)}
-independent sessions cleared the ≥0.8 target on raw session floors
-({large_effs}). Best-cycle values above 1.0 are {n}-leg storm artifacts
-(a storm inflating t{n} inflates the ratio), which is why the headline
-uses session floors and clean-cycle medians, never best cycles. The
-per-size floors remain biased AGAINST the target: a 5-minute 160k leg
-almost never lands a fully storm-free window, while a 1-minute 40k
-{n}-leg catches quiet turbo-boosted windows easily (measured F_{n} < 0
-in the marginal fit is this bias made visible).
-"""
-    ld_floor_effs = []
-    ld_marginal = None
-    if low_density:
-        ld_rows = []
-        for s in low_density:
-            ecm = (f"{s['eff_clean_median']:.3f}"
-                   if s.get("eff_clean_median") is not None else "—")
-            ld_rows.append(
-                f"| {s['docs']:,} | {s['cycles']} | {s['min_2']:.1f} "
-                f"| {s['min_8']:.1f} | **{s['eff_min']:.3f}** "
-                f"| {s['eff_median']:.3f} | {s['clean_cycles']} | {ecm} |"
-            )
-            ld_floor_effs.append(s["eff_min"])
-        out += f"""
-## N vs 4N below the bandwidth wall: local[2] vs local[8]
-
-The 8→32 step above is contaminated by single-host physics (the probe's
-8→32 per-core decay, {r_lo:.2f}–{r_hi:.2f}). The SAME probe measures the
-2→8 step at **{r28_lo:.2f}–{r28_hi:.2f}** per-core ratio across sessions
-— the bandwidth/turbo decay concentrates ABOVE 8 resident workers, so a
-local[2]-vs-local[8] lockstep is a 4× parallelism step with the smallest
-host-physics term this sandbox can offer. It is the faithful analog of a
-real N→4N cluster, where per-host worker density is constant and the
-decay term does not exist at all. Raw numbers below get NO correction;
-identical harness, identical per-leg sizing discipline (shuffle
-partitions = cores, media partitions = 4×cores).
-
-| docs | cycles | floor@2 (s) | floor@8 (s) | eff (floors) | eff (median cycle) | clean cycles | eff (clean median) |
-|---|---|---|---|---|---|---|---|
-{chr(10).join(ld_rows)}
-"""
-        # job-size marginal fit WITHIN the low-density variant: pooled
-        # per-leg floors at each size, slope ratio = fixed-cost-free eff
-        by_docs_ld: dict[int, dict] = {}
-        for s in low_density:
-            d = by_docs_ld.setdefault(
-                s["docs"], {"min_2": s["min_2"], "min_8": s["min_8"]})
-            d["min_2"] = min(d["min_2"], s["min_2"])
-            d["min_8"] = min(d["min_8"], s["min_8"])
-        ld_sizes = sorted(by_docs_ld)
-        if len(ld_sizes) >= 2:
-            sm_ld, bg_ld = by_docs_ld[ld_sizes[0]], by_docs_ld[ld_sizes[-1]]
-            dd_ld = ld_sizes[-1] - ld_sizes[0]
-            c2 = (bg_ld["min_2"] - sm_ld["min_2"]) / dd_ld
-            c8 = (bg_ld["min_8"] - sm_ld["min_8"]) / dd_ld
-            # None (not NaN): round(nan) would flow into json.dumps and
-            # emit a bare NaN token — invalid JSON for downstream parsers
-            ld_marginal = c2 / (4 * c8) if c8 > 0 else None
-            big_eff = (
-                bg_ld["min_2"] / (4 * bg_ld["min_8"])
-                if bg_ld["min_8"] > 0 else None
-            )
-            if ld_marginal is not None and big_eff is not None:
-                out += f"""
-The job-size step WITHIN this variant measures the fixed-cost-free
-marginal efficiency directly — pooled per-leg floors at
-{ld_sizes[0]:,} vs {ld_sizes[-1]:,} docs give slope ratio
-c_2/(4·c_8) = **{ld_marginal:.3f}**, the engine term a real
-multi-hour 100-TB job runs at on this 4× step. The
-{ld_sizes[-1] // 1000}k floors efficiency itself:
-**{big_eff:.3f}**."""
-            else:
-                out += """
-The larger job's pooled floors do not show a positive 8-core slope on
-this step (noisy floors) — the marginal-efficiency ratio is undefined
-and omitted rather than rendered from a non-positive slope."""
-            if ld_sizes == [160_000, 320_000]:
-                out += """
-This point was PRE-REGISTERED: before the 320k session started, the
-Amdahl decomposition of the 160k floors (t_N = c·docs/N_eff + F with F
-shared across legs) predicted 320k floors efficiency **0.78–0.83**
-across the probe's 2→8 host-term range 0.86–0.96 — derivation committed
-to PLANS.md ahead of the run (git history is the timestamp), measured
-value rendered here from the ledger afterward.
-"""
-            else:
-                out += "\n"
-
-    out += f"""
-## Host-physics ceiling (same-day, Spark-free)
-
-`scripts/cpu_inflation_probe.py` — plain `multiprocessing.Pool` workers
-running the IDENTICAL per-page loop (render → decode → emit), no JVM, no
-Arrow, no shuffle — measures per-core Python throughput by resident
-worker count ({len(ratios)} probe sessions, BENCH/cpu_inflation_probe.json):
-
-| resident workers | per-core throughput vs P=1 |
-|---|---|
-{chr(10).join(f"| {p[2:]} | {v:.2f} |" for p, v in curve.items())}
-
-The 8→32 per-core decay factor across probe sessions is
-**{r_lo:.2f}–{r_hi:.2f}**: with ZERO framework involved, 32 resident
-workers get only ~{int(100 * r_hi)}% of the per-core CPU that 8 workers
-get (memory bandwidth + all-core turbo — properties of the single shared
-host). That number is the CEILING for any local[{n}]→local[{xn}]
-measurement here: a pipeline with perfect framework scaling would
-measure raw efficiency ≈ the probe ratio, i.e. **below 0.8 on this
-host** whenever the probe reads below 0.8.
-
-## Verdict vs the ≥0.8 target — stated honestly
-
-"""
-    if ld_floor_effs:
-        ld_best = max(ld_floor_effs)
-        ld_all = ", ".join(f"{e:.3f}" for e in ld_floor_effs)
-        clears = "CLEARS" if ld_best >= 0.8 else "does NOT clear"
-        r28_txt = (f"{r28_lo:.2f}–{r28_hi:.2f}" if r28_lo is not None
-                   else "unmeasured")
-        out += f"""- **The minimum-confound N-vs-4N measurement — local[2] vs local[8],
-  where the Spark-free probe puts the host term at {r28_txt} across
-  sessions (vs {r_lo:.2f}–{r_hi:.2f} for 8→32) — measured raw
-  session-floor efficiency {ld_all}. This {clears} the ≥0.8 target raw,
-  with no host-physics correction applied.** On this 4× step the harness
-  measures mostly the engine, not the host's memory wall."""
-        if r28_lo is not None:
-            fw = ld_best / r28_lo
-            out += f"""
-  Framework-attributable share (raw / the most conservative same-round
-  probe 2→8 ceiling {r28_lo:.2f}): **{fw:.3f}** — an estimate with the
-  same stated assumptions as the 8-vs-32 correction below.
-"""
-        else:
-            out += "\n"
-    out += f"""- **Raw, this host, same-regime 8-vs-32 pairs: median {med:.3f}. This
-  does NOT clear 0.8 raw**, and per the probe it cannot: the Spark-free
-  ceiling measured in the same sessions is {r_lo:.2f}–{r_hi:.2f}.
-- **Job-size dependence is measured, not assumed, and replicated**
-  (lockstep sweep above): raw efficiency rises from ~0.54 (40k docs,
-  ~1-min legs) to the large-job floors as the fixed per-pass cost
-  amortizes. {n_large_clear} of {len(large)} independent large-job
-  sessions (≥160k docs, ~5+-minute legs, separate days/windows)
-  cleared the ≥0.8 target on raw session floors ({large_effs}),
-  and the marginal (fixed-cost-free) estimate from per-leg minima
-  across sessions is **{f'{eff_marginal:.2f}' if eff_marginal else '—'}**
-  — the regime a real 100-TB job (hours long, F negligible) runs in.
-- **Framework-attributable efficiency** (the part this repo controls):
-  median raw / probe ceiling = {med:.3f} / {r_hi:.2f} =
-  **{corrected:.3f}**. This is an ESTIMATE whose assumptions are: (a)
-  the probe workload's memory-bandwidth profile matches the OCR stage's
-  (same per-page loop, so close by construction), and (b) background
-  storms hit both legs of a pair equally (the in-leg traces let a reader
-  check per pair; storms are also ASYMMETRIC by structure — L busy
-  background cores cost a {xn}-core leg ~L/{xn} of its throughput while
-  an {n}-core leg is untouched while {xn - n} cores stay free — so
-  residual contamination biases raw eff DOWN, making the raw median
-  conservative).
-- **On a real N→4N cluster the probe term does not exist**: the per-host
-  worker count is identical at both cluster sizes (clusters grow by
-  adding hosts, not by packing one host 4× denser). The number that
-  predicts N→4N behavior is the framework-attributable one
-  ({corrected:.2f}); the raw single-host number under-states it by
-  exactly the measured host-physics coupling.
-
-## Cross-session floors (historical context)
-
-| ledger | min@{n} (s) | min@{xn} (s) | runs | raw eff |
-|---|---|---|---|---|
-{chr(10).join(hist_rows)}
-| r4 pairs (this file) | {floor8:.1f} | {floor32:.1f} | {sum(len(p[f'runs_{n}']) for p in pairs)}+{sum(len(p[f'runs_{xn}']) for p in pairs)} | {eff_floor:.3f} |
-
-Floors move round-to-round with host weather (the {xn}-wide leg needs
-ALL {xn} cores simultaneously idle to touch its floor; the {n}-leg only
-{n}) — which is why the same-regime pairs, not cross-session floor
-ratios, are the headline estimator.
-
-## Analysis
-
-- The Arrow mock-OCR stage (pure Python compute, no shuffle of its own)
-  dominates wall time and scales with cores; the post-union stage is ONE
-  sort + three Window nodes fed by one hash(doc_id) exchange (PLANS.md,
-  fresh r4 capture in BENCH/explain_extract_r04.txt).
-- An interleaved A/B of the r2 build vs r4 at sf0.1 measured min 3.77 vs
-  3.78s — code parity; the round-3 bench regression was host weather
-  (adjudicated in BENCH/query_ledger.jsonl minima: extract_full 3.51s).
-- Last-wave straggler tails on the short {xn}-core stages remain the
-  main framework-side term (media partitions = 4×cores at both levels).
-
-## Reproduce
-
-```bash
-python scripts/scaling_pairs.py --pairs 5 --runs 6   # same-regime pairs
-python scripts/lockstep_pairs.py --cycles 16         # run-level interleave
-python scripts/lockstep_pairs.py --cycles 8 --docs 160000  # job-size sweep
-python scripts/lockstep_pairs.py --cycles 6 --docs 320000 --warmups 2 \\
-    --ledger BENCH/lockstep_ledger_r05.jsonl             # asymptote point
-python scripts/lockstep_pairs.py --docs 160000 --n 2 --xn 8 --cycles 6 \\
-    --warmups 1 --ledger BENCH/lockstep_ledger_r06.jsonl  # below-the-wall N vs 4N
-python scripts/lockstep_pairs.py --docs 320000 --n 2 --xn 8 --cycles 4 \\
-    --warmups 1 --ledger BENCH/lockstep_ledger_r06.jsonl  # pre-registered 320k point (run r6, eff_min 0.841)
-python scripts/cpu_inflation_probe.py 300 3          # host-physics probe
-python scripts/scaling_report.py                     # this file
-```
-"""
-    with open(args.out, "w") as f:
-        f.write(out)
-    print(json.dumps({
-        "pairs": len(effs),
-        "median_raw": round(med, 3),
-        "median_clean": round(med_clean, 3) if med_clean else None,
-        "floors_eff": round(eff_floor, 3),
-        "probe_ceiling": [round(r_lo, 3), round(r_hi, 3)],
-        "framework_attributable": round(corrected, 3),
-        "low_density_2v8_floor_effs": [round(e, 3) for e in ld_floor_effs],
-        "low_density_marginal": (round(ld_marginal, 3)
-                                 if ld_marginal is not None else None),
-    }))
+    argparse.ArgumentParser(
+        description=f"Print the lockstep scaling ledgers ({LEDGERS}) as "
+        "tables and a verdict per variant. Run from the repository root.",
+    ).parse_args()
+    print(report(load_sessions()))
 
 
 if __name__ == "__main__":
