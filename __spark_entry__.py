@@ -495,14 +495,20 @@ def q_dedup_components_star(spark, sf_dir):
     # algorithm="star" — Kiveris et al., O(log n) rounds on chains where
     # min-label needs diameter rounds). Shares q_dedup_components'
     # recursive-CTE oracle: both algorithms must land the identical
-    # (doc_id, min-reachable-label) fixpoint.
+    # (doc_id, min-reachable-label) fixpoint. driver_max_edges=0 forces
+    # the distributed star rounds: the verified pair list (50 symmetric
+    # edges at sf0.01, 458 at sf0.1) sits far below the default
+    # threshold, which would hand it to the driver union-find and leave
+    # the star algorithm unchecked by the oracle.
     from tesseract_recognize_spark.operators.components import (
         connected_components,
     )
 
     docs = _docs(spark, sf_dir)
     pairs = ngram_jaccard_pairs(docs, threshold=0.8).select("doc_a", "doc_b")
-    labels = connected_components(pairs, algorithm="star")
+    labels = connected_components(
+        pairs, algorithm="star", driver_max_edges=0
+    )
     asg = (
         docs.select("doc_id")
         .join(labels, docs["doc_id"] == labels["node"], "left")

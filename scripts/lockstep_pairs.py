@@ -17,7 +17,8 @@ Outputs per-cycle mini-pairs and three summaries:
   - eff_clean     = median over cycles whose BOTH legs ran within 15%%
                     of their leg's session floor (storm-free cycles)
 
-    python scripts/lockstep_pairs.py --cycles 18 --docs 40000
+    python scripts/lockstep_pairs.py --cycles 18 --docs 40000 \
+        --ledger /tmp/lockstep_ledger.jsonl
 """
 
 from __future__ import annotations
@@ -36,8 +37,6 @@ from tesseract_recognize_spark.fixtures.generator import (  # noqa: E402
     gen_documents,
     write_documents_parquet,
 )
-
-LEDGER = "BENCH/lockstep_ledger_r04.jsonl"
 
 
 def ensure_corpus(n_docs: int, n_files: int = 128) -> str:
@@ -118,7 +117,8 @@ def main() -> None:
     ap.add_argument("--xn", type=int, default=32)
     ap.add_argument("--cycles", type=int, default=18)
     ap.add_argument("--warmups", type=int, default=3)
-    ap.add_argument("--ledger", default=LEDGER)
+    ap.add_argument("--ledger", required=True,
+                    help="JSONL file this session is appended to")
     args = ap.parse_args()
     path = ensure_corpus(args.docs)
     factor = args.xn / args.n
@@ -175,7 +175,7 @@ def main() -> None:
         else None,
         "per_cycle": cycles,
     }
-    os.makedirs(os.path.dirname(args.ledger), exist_ok=True)
+    os.makedirs(os.path.dirname(args.ledger) or ".", exist_ok=True)
     with open(args.ledger, "a") as f:
         f.write(json.dumps(summary) + "\n")
     print(json.dumps({k: v for k, v in summary.items()

@@ -9,6 +9,7 @@ Prints one line per configuration: bits, n_tables, candidate-pair count
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -47,8 +48,11 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     n_queries = 50
-    spark = build_session(app_name="lsh-recall", master="local[16]",
-                          shuffle_partitions=16)
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    spark = build_session(app_name="lsh-recall", master=f"local[{cpus}]",
+                          shuffle_partitions=max(cpus, 8))
     if sf_dir == "--clustered":
         emb = clustered_embeddings(spark)
     else:

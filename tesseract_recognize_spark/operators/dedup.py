@@ -141,7 +141,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 16,
     band_size: int = 4,
     shingle_k: int = 3,
-    sigs: DataFrame | None = None,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH candidate pairs.
@@ -149,8 +148,6 @@ def minhash_lsh_pairs(
     shingle → n_hashes minhashes → bands of band_size → equi-join on
     (band_id, band_hash). Returns distinct (doc_a, doc_b) candidate pairs
     (doc_a < doc_b). One shuffle on the band key; no cross product.
-    Pass ``sigs`` (from minhash_signatures) to reuse a computed signature
-    table.
 
     ``bucket_cap``: same degenerate-bucket guard as
     ``ngram_jaccard_pairs`` — a band bucket with b docs emits O(b²)
@@ -164,8 +161,7 @@ def minhash_lsh_pairs(
     stage would reject anyway. Opt in at scale when downstream can
     tolerate losing boilerplate mega-cliques (pair with exact_dedup,
     which still collapses them)."""
-    if sigs is None:
-        sigs = minhash_signatures(docs, text_col, n_hashes, shingle_k)
+    sigs = minhash_signatures(docs, text_col, n_hashes, shingle_k)
     n_bands = n_hashes // band_size
     bands = sigs.select(
         "doc_id",

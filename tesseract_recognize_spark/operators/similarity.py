@@ -1,16 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, both pure DataFrame ops (F.zip_with/F.aggregate dot products —
-no Python in the loop):
+Every similarity is a dot product folded LEFT TO RIGHT over the
+dimensions — ``_fold`` in the Arrow ``mapInPandas`` stages and the
+pandas-UDF pair verify, ``_dot_sql`` in SQL — so each one is
+bit-identical to the DuckDB oracles' sequential list dot product:
 
-  * brute-force top-k cosine — the exact baseline. Scale shape: broadcast
-    the (small) query set against the full corpus; one shuffle for the
-    per-query top-k window.
+  * brute-force top-k cosine — the exact baseline. The bounded query
+    set (``n_queries``) is collected and broadcast; each corpus batch
+    scores against it and keeps only its local per-query top-k; one
+    shuffle for the per-query top-k window.
   * LSH-bucketed top-k — the 100-TB path: sign-random-projection buckets
     (hyperplanes derived deterministically from md5 of the dimension
     index) prune the candidate set to same-bucket vectors before the
     exact re-rank. Recall < 1.0 by construction; bucket bits trade recall
-    for cost.
+    for cost. ``embedding_cosine_pairs`` is its threshold sibling.
+  * IVF top-k — sampled centroid cells, nprobe-cell equi-join + exact
+    re-rank.
 """
 
 from __future__ import annotations
@@ -25,10 +30,8 @@ from tesseract_recognize_spark.caching import finalize
 from tesseract_recognize_spark.partitioning import spread_small_scan
 
 __all__ = [
-    "cosine_sim",
     "brute_force_topk",
     "lsh_signs",
-    "lsh_bucket",
     "lsh_topk",
     "ivf_topk",
     "two_phase_topk",
@@ -69,57 +72,44 @@ def two_phase_topk(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Left-to-right sequential dot product (bit-reproducible across
-    engines). With ``dim`` given, the sum is UNROLLED into a codegen-able
-    expression — Spark's higher-order-function lambdas are evaluated
-    interpreted per element, which is ~50x slower in tight join loops."""
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    out = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        out = out + F.element_at(a, i) * F.element_at(b, i)
-    return out
+def _fold(a, b):
+    """Σ_d a[..., d] · b[..., d], added LEFT TO RIGHT over the last axis.
+
+    The one summation order the oracles depend on: bit-identical to the
+    unrolled SQL chain (``_dot_sql``) and the DuckDB oracles' list dot
+    product, which np.dot's pairwise summation would not be.
+    Broadcasting picks the shape: (B,D)·(B,D) gives B row dots;
+    (B,1,D)·(1,M,D) gives a B×M score matrix."""
+    acc = a[..., 0] * b[..., 0]
+    for d in range(1, a.shape[-1]):
+        acc = acc + a[..., d] * b[..., d]
+    return acc
 
 
 def _dot_sql(a: str, b: str, dim: int) -> str:
-    """The unrolled dot product as ONE SQL fragment over column NAMES.
+    """The dot product of two array columns, unrolled left to right
+    (the ``_fold`` order) as ONE SQL fragment over column NAMES.
 
-    Semantically identical to ``dot_product(col(a), col(b), dim)`` —
-    same element order, same left-to-right addition — but built as a
-    single string: the Column-object form issues ~3·dim py4j calls per
-    dot, which put >10s of pure driver-side expression construction into
-    every ANN query (measured; the multi-table query builds 16 unrolled
-    projections + norms + the pair dot). One ``F.expr`` string is one
-    py4j call and parses JVM-side in milliseconds."""
+    Built as a single string: the Column-object form makes ~3·dim py4j
+    calls per dot, which put >10s of pure driver-side expression
+    construction into every ANN query (measured; the multi-table query
+    builds 16 unrolled projections + norms + the pair dot). One
+    ``F.expr`` string is one py4j call and parses JVM-side in
+    milliseconds."""
     return "(" + " + ".join(
         f"element_at({a}, {i}) * element_at({b}, {i})"
         for i in range(1, dim + 1)
     ) + ")"
 
 
-def cosine_sim(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Cosine similarity of two array<double> columns."""
-    dot = dot_product(a, b, dim)
-    na = F.sqrt(dot_product(a, a, dim))
-    nb = F.sqrt(dot_product(b, b, dim))
-    return dot / (na * nb)
-
-
 def _pair_dot_lr(a: Column, b: Column) -> Column:
-    """Vectorized pair dot product with the exact LEFT-TO-RIGHT
-    dimension fold — bit-identical to the unrolled SQL chain
-    (_dot_sql) and DuckDB's list_dot_product, but Arrow-batched
-    instead of a >64 KB interpreted expression tree. For use in join
-    projections where both vectors are columns (candidate verify
-    paths); the matrix-vs-broadcast variants live in the operators.
-    The UDF object is built lazily (pandas_udf parses its DDL against
-    the active session, so a module-level decorator would require a
-    SparkSession at import time)."""
+    """Vectorized pair dot product (``_fold`` over two vector columns) —
+    bit-identical to the unrolled SQL chain (_dot_sql), but
+    Arrow-batched instead of a >64 KB interpreted expression tree. For
+    join projections where both vectors are columns (candidate verify
+    paths). The UDF object is built lazily (pandas_udf parses its DDL
+    against the active session, so a module-level decorator would
+    require a SparkSession at import time)."""
 
     def dot_lr(pa, pb):
         import numpy as np
@@ -127,26 +117,50 @@ def _pair_dot_lr(a: Column, b: Column) -> Column:
 
         if len(pa) == 0:
             return pd.Series(np.zeros(0, dtype=np.float64))
-        am = np.vstack(pa.to_numpy())
-        bm = np.vstack(pb.to_numpy())
-        acc = am[:, 0] * bm[:, 0]
-        for d in range(1, am.shape[1]):
-            acc = acc + am[:, d] * bm[:, d]
-        return pd.Series(acc)
+        return pd.Series(
+            _fold(np.vstack(pa.to_numpy()), np.vstack(pb.to_numpy()))
+        )
 
     return F.pandas_udf(dot_lr, "double")(a, b)
 
 
-def _brute_force_topk_arrow(
-    base: DataFrame, k: int, n_queries: int
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id bigint, v array<double>) from a (vec_id, embedding) table,
+    spread over the session's cores first (a small scan is one task)."""
+    return spread_small_scan(emb, "vec_id").select(
+        F.col("vec_id").cast("bigint").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    )
+
+
+def brute_force_topk(
+    emb: DataFrame, dim: int, n_queries: int, k: int = 5
 ) -> DataFrame:
-    """Arrow stage for brute_force_topk's bounded-query-set case: the
-    query matrix rides a broadcast variable; each corpus batch scores
-    against all queries with the exact left-to-right fold and emits only
-    its batch-local per-query top-k (ties: sim desc, neighbor_id asc —
-    a batch's global-top-k members are always inside its local top-k, so
-    the prune is lossless). ``two_phase_topk`` finishes the job on
-    ≤ k·n_batches rows per query."""
+    """Exact top-k cosine neighbors over the whole corpus for each query
+    vector ``vec_id < n_queries``.
+
+    Output: (vec_id, rank, neighbor_id) — the similarity itself is kept
+    internal so downstream equality checks are float-free; ties break on
+    neighbor id (deterministic). Norms are precomputed once per vector
+    (not once per pair).
+
+    The query block is collected to a numpy matrix and broadcast, so it
+    must be small. Every corpus×query similarity is computed inside one
+    Arrow ``mapInPandas`` stage with the left-to-right ``_fold``, and
+    each batch emits only its per-query top-k (ties: sim desc,
+    neighbor_id asc — a batch's global-top-k members are always inside
+    its local top-k, so the prune is lossless). ≤ k·|batches| rows per
+    query reach ``two_phase_topk``'s one exchange: the numpy analog of
+    the map-side WindowGroupLimit prune, minus ~20 μs/dot of
+    interpreted-expression tax (the 64-term chain exceeds Janino's
+    64 KB codegen limit)."""
+    if n_queries < 1:
+        raise ValueError(
+            f"brute_force_topk: n_queries must be >= 1, got {n_queries}"
+        )
+    base = _vectors(emb).withColumn(
+        "norm", F.expr(f"sqrt({_dot_sql('v', 'v', dim)})")
+    )
     spark = base.sparkSession
     q_rows = sorted(
         base.filter(F.col("vec_id") < n_queries).collect(),
@@ -175,10 +189,9 @@ def _brute_force_topk_arrow(
             vm = np.vstack(pdf["v"].to_numpy())
             norms = pdf["norm"].to_numpy()
             ids = pdf["vec_id"].to_numpy()
-            acc = vm[:, 0][:, None] * qm[:, 0][None, :]
-            for d in range(1, qm.shape[1]):
-                acc = acc + vm[:, d][:, None] * qm[:, d][None, :]
-            sim = acc / (qnorm[None, :] * norms[:, None])
+            sim = _fold(vm[:, None, :], qm[None, :, :]) / (
+                qnorm[None, :] * norms[:, None]
+            )
             sim[ids[:, None] == qids[None, :]] = -np.inf  # self pairs
             take = min(k, len(pdf))
             out_q, out_n, out_s = [], [], []
@@ -200,62 +213,6 @@ def _brute_force_topk_arrow(
     return two_phase_topk(pairs, k)
 
 
-def brute_force_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_queries: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    Output: (vec_id, rank, neighbor_id) — the similarity itself is kept
-    internal so downstream equality checks are float-free; ties break on
-    neighbor id (deterministic). Norms are precomputed once per vector
-    (not once per pair); pass ``dim`` to unroll the dot product.
-
-    Physical strategy by query-side size: with ``n_queries`` set (the
-    bounded-query-set case) the query block is collected to a numpy
-    matrix and every corpus×query similarity is computed inside one
-    Arrow ``mapInPandas`` stage — a left-to-right dimension fold,
-    bit-identical to the unrolled SQL chain (see ivf_topk), with a
-    per-batch per-query top-k prune so ≤ k·|batches| rows per query
-    reach the final exchange (the numpy analog of the map-side
-    WindowGroupLimit prune, minus ~20 μs/dot of interpreted-expression
-    tax: the 64-term chain exceeds Janino's 64 KB codegen limit).
-    With ``n_queries=None`` every corpus vector is a query — nothing is
-    collectable at scale, so the plan stays the broadcast-join +
-    rank-limit-pushdown shape."""
-    base = spread_small_scan(emb, id_col).select(
-        F.col(id_col).cast("bigint").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    norm = (
-        F.expr(f"sqrt({_dot_sql('v', 'v', dim)})")
-        if dim
-        else F.sqrt(dot_product(F.col("v"), F.col("v"), dim))
-    )
-    base = base.withColumn("norm", norm)
-    if n_queries:
-        return _brute_force_topk_arrow(base, k, n_queries)
-    q, c = base.alias("q"), base.alias("c")
-    pair_dot = (
-        F.expr(_dot_sql("q.v", "c.v", dim))
-        if dim
-        else dot_product(F.col("q.v"), F.col("c.v"), dim)
-    )
-    sim = pair_dot / (F.col("q.norm") * F.col("c.norm"))
-    # broadcast the SMALL query set against the streamed corpus — at 10^9+
-    # corpus vectors the other direction is an executor OOM
-    pairs = F.broadcast(q).join(c, F.col("q.vec_id") != F.col("c.vec_id")).select(
-        F.col("q.vec_id").alias("vec_id"),
-        F.col("c.vec_id").alias("neighbor_id"),
-        sim.alias("sim"),
-    )
-    return two_phase_topk(pairs, k)
-
-
 def lsh_signs(b: int, dim: int, table: int = 0) -> list[int]:
     """Hyperplane h_b's ±1 components: deterministic md5 of "b|d" (table 0;
     table t>0 prefixes "t{t}:") — no RNG, reproducible in any engine (the
@@ -268,55 +225,28 @@ def lsh_signs(b: int, dim: int, table: int = 0) -> list[int]:
     ]
 
 
-def lsh_bucket(vec: str, dim: int, bits: int = 8, table: int = 0) -> Column:
-    """Sign-random-projection bucket id: Σ_b 2^b · [⟨v, h_b⟩ > 0].
-
-    ``vec`` is the COLUMN NAME of the array<double> vector. Each
-    projection is the UNROLLED codegen dot product against inline ±1
-    literals — no interpreted higher-order lambdas in what is a
-    per-vector hot path — assembled as one SQL string (see _dot_sql for
-    why: the Column-object form cost ~10s of py4j round trips per ANN
-    query at bits=8, dim=64, two tables)."""
-    terms = []
-    for b in range(bits):
-        proj = " + ".join(
-            f"element_at({vec}, {d + 1}) * {float(s)}"
-            for d, s in enumerate(lsh_signs(b, dim, table))
-        )
-        terms.append(f"(CASE WHEN ({proj}) > 0 THEN {1 << b} ELSE 0 END)")
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
-def lsh_topk(
-    emb: DataFrame,
-    dim: int,
-    k: int = 5,
-    bits: int = 8,
-    n_queries: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 1,
+def _lsh_project(
+    emb: DataFrame, dim: int, bits: int, n_tables: int
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH bucket,
-    then exact cosine re-rank. The bucket equi-join replaces the cross
-    product — the piece that makes ANN feasible at 10^12 rows.
-
-    ``n_tables > 1`` runs the standard multi-table LSH recall boost: T
-    independent hyperplane families, a candidate qualifies if it shares a
-    bucket in ANY table (explode over (table, bucket), equi-join on both,
-    dedup pairs with a max-aggregate before the re-rank). Recall rises
-    roughly as 1-(1-p^bits)^T for per-plane agreement p; cost rises ~T×
-    in bucket-join fan-out, still never the O(n²) cross product.
+    """The persisted LSH projection (vec_id, v, norm, tbl, bucket): one row
+    per (vector, table), bucket = Σ_b 2^b · [⟨v, h_b⟩ > 0] over table
+    ``tbl``'s hyperplanes (``lsh_signs``).
 
     Norms and every table's bucket compute in ONE Arrow ``mapInPandas``
-    over the corpus (exact left-to-right fold — see ivf_topk; the
-    unrolled SQL chains blow Janino's 64 KB codegen budget and fall to
-    ~20 µs/dot interpreted), with the multi-table (tbl, bucket) explode
-    done in-batch; the candidate verify dot is the vectorized
-    pandas-UDF pair fold."""
+    over the corpus with the left-to-right ``_fold`` (the unrolled SQL
+    chains blow Janino's 64 KB codegen budget and fall to ~20 µs/dot
+    interpreted); the (tbl, bucket) explode is done in-batch.
+
+    The projection feeds BOTH sides of the caller's self-join.
+    Unpersisted, it runs twice and is re-planned per AQE stage;
+    persisted, the downstream plan sees a small InMemoryRelation leaf
+    and the projection runs once. Footprint is the vector table +
+    (norm, tbl, bucket) — MEMORY_AND_DISK spills gracefully. The
+    OPERATOR owns cleanup (round-4 invariant): the caller materializes
+    its bounded result eagerly and frees this before returning — see
+    caching.finalize."""
     import numpy as np
 
-    spark = emb.sparkSession
     signs = np.array(
         [
             [lsh_signs(b, dim, t) for b in range(bits)]
@@ -325,7 +255,7 @@ def lsh_topk(
         dtype=np.float64,
     )  # (T, bits, dim)
     pows = (1 << np.arange(bits, dtype=np.int64))
-    bcast = spark.sparkContext.broadcast((signs, pows))
+    bcast = emb.sparkSession.sparkContext.broadcast((signs, pows))
 
     def prep(batches):
         import numpy as np
@@ -337,59 +267,55 @@ def lsh_topk(
             if len(pdf) == 0:
                 continue
             vm = np.vstack(pdf["v"].to_numpy())
-            acc = vm[:, 0] * vm[:, 0]
-            proj = vm[:, 0][:, None, None] * s[None, :, :, 0]
-            for d in range(1, vm.shape[1]):
-                acc = acc + vm[:, d] * vm[:, d]
-                proj = proj + vm[:, d][:, None, None] * s[None, :, :, d]
-            bks = ((proj > 0) * p[None, None, :]).sum(axis=2)  # (B, T)
-            out = {
-                "vec_id": pdf["vec_id"],
-                "v": pdf["v"],
-                "norm": np.sqrt(acc),
-            }
-            if n_t == 1:
-                out["bucket"] = bks[:, 0]
-                yield pd.DataFrame(out)
-            else:
-                rep = np.repeat(np.arange(len(pdf)), n_t)
-                yield pd.DataFrame({
-                    "vec_id": pdf["vec_id"].to_numpy()[rep],
-                    "v": pdf["v"].to_numpy()[rep],
-                    "norm": np.sqrt(acc)[rep],
-                    "tbl": np.tile(np.arange(n_t), len(pdf)),
-                    "bucket": bks.ravel(),
-                })
+            proj = _fold(vm[:, None, None, :], s[None])  # (B, T, bits)
+            bks = ((proj > 0) * p).sum(axis=2)  # (B, T)
+            rep = np.repeat(np.arange(len(pdf)), n_t)
+            yield pd.DataFrame({
+                "vec_id": pdf["vec_id"].to_numpy()[rep],
+                "v": pdf["v"].to_numpy()[rep],
+                "norm": np.sqrt(_fold(vm, vm))[rep],
+                "tbl": np.tile(np.arange(n_t), len(pdf)),
+                "bucket": bks.ravel(),
+            })
 
-    schema = "vec_id bigint, v array<double>, norm double, " + (
-        "bucket bigint" if n_tables == 1 else "tbl int, bucket bigint"
-    )
-    join_keys = (
-        [("bucket", "bucket")]
-        if n_tables == 1
-        else [("tbl", "tbl"), ("bucket", "bucket")]
-    )
-    # The bucketed+normed projection feeds BOTH sides of the self-join.
-    # Unpersisted, it runs twice and is re-planned per AQE stage;
-    # persisted, the downstream plan sees a small InMemoryRelation leaf
-    # and the projection runs once. Footprint is the vector table +
-    # (norm, buckets) — MEMORY_AND_DISK spills gracefully. The OPERATOR
-    # owns cleanup (round-4 invariant): the bounded top-k result is
-    # materialized eagerly and `base` is freed before returning — see
-    # caching.finalize.
-    base = spread_small_scan(emb, id_col).select(
-        F.col(id_col).cast("bigint").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).mapInPandas(prep, schema).persist(StorageLevel.MEMORY_AND_DISK)
+    return _vectors(emb).mapInPandas(
+        prep, "vec_id bigint, v array<double>, norm double, "
+              "tbl int, bucket bigint",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def lsh_topk(
+    emb: DataFrame,
+    dim: int,
+    k: int = 5,
+    bits: int = 8,
+    n_queries: int | None = None,
+    n_tables: int = 1,
+) -> DataFrame:
+    """Approximate top-k: candidates restricted to the query's LSH bucket,
+    then exact cosine re-rank. The bucket equi-join replaces the cross
+    product — the piece that makes ANN feasible at 10^12 rows.
+
+    ``n_tables > 1`` runs the standard multi-table LSH recall boost: T
+    independent hyperplane families, a candidate qualifies if it shares a
+    bucket in ANY table (equi-join on (tbl, bucket) over
+    ``_lsh_project``'s rows, dedup pairs with a max-aggregate before the
+    re-rank). Recall rises roughly as 1-(1-p^bits)^T for per-plane
+    agreement p; cost rises ~T× in bucket-join fan-out, still never the
+    O(n²) cross product. The candidate verify dot is the vectorized
+    pandas-UDF pair fold."""
+    base = _lsh_project(emb, dim, bits, n_tables)
     queries = base.filter(F.col("vec_id") < n_queries) if n_queries else base
     q, c = queries.alias("q"), base.alias("c")
     sim = _pair_dot_lr(F.col("q.v"), F.col("c.v")) / (
         F.col("q.norm") * F.col("c.norm")
     )
-    cond = F.col("q.vec_id") != F.col("c.vec_id")
-    for a, b in join_keys:
-        cond = cond & (F.col(f"q.{a}") == F.col(f"c.{b}"))
-    pairs = q.join(c, cond).select(
+    pairs = q.join(
+        c,
+        (F.col("q.vec_id") != F.col("c.vec_id"))
+        & (F.col("q.tbl") == F.col("c.tbl"))
+        & (F.col("q.bucket") == F.col("c.bucket")),
+    ).select(
         F.col("q.vec_id").alias("vec_id"),
         F.col("c.vec_id").alias("neighbor_id"),
         sim.alias("sim"),
@@ -410,16 +336,13 @@ def ivf_topk(
     nprobe: int = 3,
     centroid_stride: int | None = None,
     n_queries: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: an inverted-file index over centroid
     cells — the other classic ANN scale path next to ``lsh_topk``.
 
     Index build (one pass, no iteration):
       * centroid set: every ``centroid_stride``-th vector of the corpus
-        itself (vec_id % stride == 0) — deterministic sampled centroids,
+        itself (vec_id % stride == 0) — deterministic sampled centroid set,
         i.e. a k-means++-style init with zero Lloyd refinement, fully
         reproducible in any engine (the DuckDB oracle derives the same
         cells from the same rule). With ``centroid_stride=None`` (the
@@ -430,27 +353,23 @@ def ivf_topk(
         this rule; √N cells balances assignment and probe at O(N^1.5),
         the textbook IVF sizing. The one extra cost is a count() of the
         input (parquet metadata count when ``emb`` is a plain scan).
-        Production IVF trains centroids offline on a sample and ships
-        them as a table — pass ``centroids`` (id_col + vec_col) to use
-        a prebuilt set; the assignment/probe/search plan is identical.
       * assignment: collect the (√N by construction) centroid table to
         a numpy matrix, broadcast it, and score each corpus vector
         against every centroid inside ONE Arrow ``mapInPandas`` stage —
         a vectorized (batch × dim)·(dim × cells) product folded
-        LEFT-TO-RIGHT over the dimensions, term by term, so every
+        LEFT-TO-RIGHT over the dimensions (``_fold``), so every
         similarity is bit-identical to the unrolled SQL chain the
-        DuckDB oracle evaluates (np.dot's pairwise summation would
-        not be). The per-vector rank-≤nprobe prune happens in the same
-        batch (stable argsort on -sim ⇒ ties break on ascending
-        centroid id, the SQL ``DESC, c_id ASC`` order), so the stage
-        emits ≤ nprobe rows per vector and NOTHING shuffles for the
-        assignment at all. The earlier crossJoin + WindowGroupLimit
-        formulation had the right exchange shape but evaluated the
-        N·cells dot products as a 64-term interpreted expression chain
-        (too large for Janino's 64 KB codegen limit) — measured ~20 μs
-        per dot vs ~0.1 μs for the Arrow fold at sf1. One NaN caveat,
-        irrelevant for finite inputs: Spark sorts NaN as the largest
-        double while numpy's argsort places it last.
+        DuckDB oracle evaluates. The per-vector rank-≤nprobe prune
+        happens in the same batch (stable argsort on -sim ⇒ ties break
+        on ascending centroid id, the SQL ``DESC, c_id ASC`` order), so
+        the stage emits ≤ nprobe rows per vector and NOTHING shuffles
+        for the assignment at all. The earlier crossJoin +
+        WindowGroupLimit formulation had the right exchange shape but
+        evaluated the N·cells dot products as a 64-term interpreted
+        expression chain (too large for Janino's 64 KB codegen limit) —
+        measured ~20 μs per dot vs ~0.1 μs for the Arrow fold at sf1.
+        One NaN caveat, irrelevant for finite inputs: Spark sorts NaN as
+        the largest double while numpy's argsort places it last.
 
     Search: a query probes its ``nprobe`` nearest cells (same window,
     rank ≤ nprobe) and exact-cosine re-ranks only the vectors ASSIGNED
@@ -468,30 +387,23 @@ def ivf_topk(
     result materializes eagerly and the projection is freed before
     return (as with lsh_topk).
     """
-    base = spread_small_scan(emb, id_col).select(
-        F.col(id_col).cast("bigint").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("norm", F.expr(f"sqrt({_dot_sql('v', 'v', dim)})"))
-    if centroids is None and centroid_stride is None:
+    base = _vectors(emb).withColumn(
+        "norm", F.expr(f"sqrt({_dot_sql('v', 'v', dim)})")
+    )
+    if centroid_stride is None:
         # adaptive √N cells; isqrt is integer-exact, and the DuckDB
         # oracle reproduces it with a float-sqrt + ±1 correction CTE
         n_vecs = emb.count()
         centroid_stride = max(1, n_vecs // max(1, math.isqrt(n_vecs)))
-    if centroids is None:
-        cent = base.filter(F.col("vec_id") % centroid_stride == 0).select(
-            F.col("vec_id").alias("c_id"),
-            F.col("v").alias("cv"),
-            F.col("norm").alias("cnorm"),
-        )
-    else:
-        cent = centroids.select(
-            F.col(id_col).cast("bigint").alias("c_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ).withColumn("cnorm", F.expr(f"sqrt({_dot_sql('cv', 'cv', dim)})"))
+    cent = base.filter(F.col("vec_id") % centroid_stride == 0).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("v").alias("cv"),
+        F.col("norm").alias("cnorm"),
+    )
 
-    # centroid set is √N (adaptive default) or caller-curated: small by
-    # contract, same size class the old formulation broadcast to every
-    # executor. Sorted ascending so stable-argsort tie-break == c_id ASC.
+    # centroid set is √N (adaptive default): small by contract, same
+    # size class the old formulation broadcast to every executor.
+    # Sorted ascending so stable-argsort tie-break == c_id ASC.
     cent_rows = sorted(cent.collect(), key=lambda r: r["c_id"])
     spark = emb.sparkSession
     if not cent_rows:
@@ -517,12 +429,9 @@ def ivf_topk(
                 continue
             vm = np.vstack(pdf["v"].to_numpy())
             norms = pdf["norm"].to_numpy()
-            # left-to-right fold over dimensions: bit-identical to the
-            # unrolled SQL chain / DuckDB list_dot_product
-            acc = vm[:, 0][:, None] * cm[:, 0][None, :]
-            for d in range(1, cm.shape[1]):
-                acc = acc + vm[:, d][:, None] * cm[:, d][None, :]
-            sim = acc / (norms[:, None] * cnorm[None, :])
+            sim = _fold(vm[:, None, :], cm[None, :, :]) / (
+                norms[:, None] * cnorm[None, :]
+            )
             idx = np.argsort(-sim, axis=1, kind="stable")[:, :take]
             rep = np.repeat(np.arange(len(pdf)), take)
             yield pd.DataFrame({
@@ -562,14 +471,12 @@ def embedding_cosine_pairs(
     dim: int,
     threshold: float = 0.9,
     bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: every (vec_a < vec_b) whose
     cosine similarity ≥ threshold, with candidates restricted to vectors
     sharing an LSH bucket — the dedup-flavored sibling of ``lsh_topk``
     (threshold semantics instead of top-k; both sides the full corpus
-    instead of a query set).
+    instead of a query set; one hyperplane table).
 
     Scale shape: the bucket equi-join replaces the O(n²) cross product —
     at 10^12 vectors all-pairs cosine is impossible, while same-bucket
@@ -577,56 +484,11 @@ def embedding_cosine_pairs(
     pair is missed iff any of the ``bits`` hyperplanes separates it:
     P[all agree] = (1 - θ/π)^bits, high exactly for the near-parallel
     pairs dedup cares about); ``bits`` trades recall for candidate
-    volume. The bucketed+normed projection is persisted for the same
-    reason as in lsh_topk (feeds both self-join sides); the operator
-    owns the cleanup — the thresholded pair list materializes eagerly
-    and the projection is freed before return.
-
-    Hot paths are Arrow-vectorized with the exact left-to-right
-    dimension fold (see ivf_topk): norms + all ``bits`` hyperplane
-    projections compute in one ``mapInPandas`` over the corpus, and the
-    per-candidate verify dot runs as a vectorized pandas UDF on the
-    join output — both bit-identical to the unrolled SQL chains the
-    DuckDB oracle evaluates, minus the interpreted-expression tax
-    (the chains exceed Janino's 64 KB codegen limit).
+    volume. The projection is ``_lsh_project``'s, persisted and freed
+    the same way (the thresholded pair list materializes eagerly); the
+    per-candidate verify dot is the vectorized pandas-UDF pair fold.
     """
-    import numpy as np
-
-    spark = emb.sparkSession
-    signs = np.array(
-        [lsh_signs(b, dim) for b in range(bits)], dtype=np.float64
-    )
-    pows = (1 << np.arange(bits, dtype=np.int64))
-    bcast = spark.sparkContext.broadcast((signs, pows))
-
-    def prep(batches):
-        import numpy as np
-        import pandas as pd
-
-        s, p = bcast.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vm = np.vstack(pdf["v"].to_numpy())
-            acc = vm[:, 0] * vm[:, 0]
-            proj = vm[:, 0][:, None] * s[:, 0][None, :]
-            for d in range(1, s.shape[1]):
-                acc = acc + vm[:, d] * vm[:, d]
-                proj = proj + vm[:, d][:, None] * s[:, d][None, :]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"],
-                "v": pdf["v"],
-                "norm": np.sqrt(acc),
-                "bucket": ((proj > 0) * p[None, :]).sum(axis=1),
-            })
-
-    base = spread_small_scan(emb, id_col).select(
-        F.col(id_col).cast("bigint").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).mapInPandas(
-        prep,
-        "vec_id bigint, v array<double>, norm double, bucket bigint",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = _lsh_project(emb, dim, bits, 1)
     a, b = base.alias("a"), base.alias("b")
     sim = _pair_dot_lr(F.col("a.v"), F.col("b.v")) / (
         F.col("a.norm") * F.col("b.norm")
@@ -634,7 +496,8 @@ def embedding_cosine_pairs(
     pairs = (
         a.join(
             b,
-            (F.col("a.bucket") == F.col("b.bucket"))
+            (F.col("a.tbl") == F.col("b.tbl"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .where(sim >= F.lit(float(threshold)))

@@ -68,28 +68,27 @@ def _spark_df(spark, vecs, parts):
     return df.repartition(parts)
 
 
-@pytest.mark.parametrize("parts", PARTITION_COUNTS)
-def test_brute_force_matches_model_all_queries(spark, parts):
-    vecs = _gen_vecs(seed=0)
+@pytest.mark.parametrize(
+    "n_queries,seed,k,parts",
+    # ids: "<parts>" for the 10-query set, "all-<parts>" for every vector
+    [pytest.param(10, 1, 3, p, id=str(p)) for p in PARTITION_COUNTS]
+    + [pytest.param(62, 0, 4, p, id=f"all-{p}") for p in PARTITION_COUNTS],
+)
+def test_brute_force_arrow_path_matches_model(
+    spark, n_queries, seed, k, parts
+):
+    # the Arrow mapInPandas scorer with per-batch pruning, for a bounded
+    # query set and for every vector as a query (62 = _gen_vecs' count)
+    vecs = _gen_vecs(seed=seed)
     ids = sorted(vecs)
-    expect = _model_topk(vecs, 4, ids, lambda q: ids)
-    got = {
-        (r["vec_id"], r["rank"], r["neighbor_id"])
-        for r in brute_force_topk(_spark_df(spark, vecs, parts), k=4).collect()
-    }
-    assert got == expect
-
-
-@pytest.mark.parametrize("parts", PARTITION_COUNTS)
-def test_brute_force_arrow_path_matches_model(spark, parts):
-    # n_queries set → the Arrow mapInPandas path with per-batch pruning
-    vecs = _gen_vecs(seed=1)
-    ids = sorted(vecs)
-    expect = _model_topk(vecs, 3, [q for q in ids if q < 10], lambda q: ids)
+    assert len(ids) == 62
+    expect = _model_topk(
+        vecs, k, [q for q in ids if q < n_queries], lambda q: ids
+    )
     got = {
         (r["vec_id"], r["rank"], r["neighbor_id"])
         for r in brute_force_topk(
-            _spark_df(spark, vecs, parts), k=3, n_queries=10, dim=12
+            _spark_df(spark, vecs, parts), dim=12, n_queries=n_queries, k=k
         ).collect()
     }
     assert got == expect

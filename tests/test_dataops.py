@@ -80,9 +80,15 @@ def test_brute_force_topk_ranks(spark):
         (3, [-1.0, 0.0, 0.0]),    # farthest from 0
     ]
     emb = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    out = brute_force_topk(emb, k=3)
+    out = brute_force_topk(emb, dim=3, n_queries=4, k=3)
     rows = {(r["vec_id"], r["rank"]): r["neighbor_id"] for r in out.collect()}
     assert rows[(0, 1)] == 1 and rows[(0, 3)] == 3
+
+
+def test_brute_force_topk_rejects_empty_query_set(spark):
+    emb = spark.createDataFrame([(0, [1.0, 0.0])], ["vec_id", "embedding"])
+    with pytest.raises(ValueError, match="n_queries"):
+        brute_force_topk(emb, dim=2, n_queries=0)
 
 
 def test_topk_plan_prunes_before_single_exchange(spark):
@@ -102,7 +108,7 @@ def test_topk_plan_prunes_before_single_exchange(spark):
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
-        brute_force_topk(emb, k=3).explain("formatted")
+        brute_force_topk(emb, dim=8, n_queries=30, k=3).explain("formatted")
     plan = buf.getvalue()
     # parse "(id) OpName" detail-section headers (children get LOWER ids)
     ids: dict[str, list[int]] = {}
@@ -125,7 +131,7 @@ def test_lsh_topk_subset_of_bruteforce(spark):
     emb = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     exact = {
         (r["vec_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, k=39).collect()
+        for r in brute_force_topk(emb, dim=16, n_queries=40, k=39).collect()
     }
     approx = lsh_topk(emb, dim=16, k=5, bits=4).collect()
     assert len(approx) > 0
@@ -145,14 +151,14 @@ def test_ivf_topk_exact_at_full_probe_and_subset(spark):
     full = ivf_topk(
         emb, dim=8, k=4, nprobe=n_cells, centroid_stride=7
     ).collect()
-    exact = brute_force_topk(emb, k=4, dim=8).collect()
+    exact = brute_force_topk(emb, dim=8, n_queries=60, k=4).collect()
     key = lambda r: (r["vec_id"], r["rank"], r["neighbor_id"])  # noqa: E731
     assert sorted(map(key, full)) == sorted(map(key, exact))
 
     approx = ivf_topk(emb, dim=8, k=4, nprobe=2, centroid_stride=7).collect()
     exact_pairs = {
         (r["vec_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, k=59, dim=8).collect()
+        for r in brute_force_topk(emb, dim=8, n_queries=60, k=59).collect()
     }
     assert len(approx) > 0
     assert all((r["vec_id"], r["neighbor_id"]) in exact_pairs for r in approx)
