@@ -79,7 +79,11 @@ def _extract_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spans_from_sf_documents(
         spread_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     )
-    cfg = ExtractConfig(media_partitions=32)
+    # one OCR task per core, the rule run_checkpointed applies: each Python
+    # task pays a fixed cost that more, smaller tasks only multiply
+    cfg = ExtractConfig(
+        media_partitions=spark.sparkContext.defaultParallelism
+    )
     out = extract(docs, cfg)
     return out.select(
         "doc_id", "order", "kind", "text", "media_ref", "level",
@@ -265,7 +269,9 @@ def q_extract_region_crops(spark, sf_dir):
                 F.col("s.media_ref").alias("media_ref"))
     )
     crops_df = region_crops_df(media)
-    cfg = ExtractConfig(psm="auto", media_partitions=32)
+    cfg = ExtractConfig(
+        psm="auto", media_partitions=spark.sparkContext.defaultParallelism
+    )
     out = extract_crops(docs, crops_df, cfg)
     return out.select(
         "doc_id", "order", "kind", "text", "media_ref", "level",

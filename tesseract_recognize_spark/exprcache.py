@@ -1,10 +1,11 @@
 """Session-scoped cache for static Column expression trees.
 
-Several operators rebuild the SAME static expression forest on every
-call — the 16-case corner table in the post-passes, simhash's 32 per-bit
-vote aggregates, minhash's 16 min-aggregates. Each Column operation is
-one py4j round trip (~0.25 ms on this host), so the big builders cost
-0.2-0.5 s of pure driver time per query construction, rebuilt per call.
+The dedup operators rebuild the SAME static expression forest on every
+call — simhash's 32 per-bit vote aggregates, minhash's 16
+min-aggregates. Each Column operation is one py4j round trip (~0.25 ms on
+a 4-core host), so such builders cost 0.2-0.5 s of pure driver time per
+query construction, rebuilt per call. (The extraction post-passes no
+longer build expressions: they run in Python inside the OCR stage.)
 
 The trees are immutable and resolved by NAME per plan, so reusing one
 Column object across plans is exactly the compiled-regex pattern; no

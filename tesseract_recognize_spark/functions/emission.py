@@ -10,8 +10,8 @@ and text* come from entirely independent paths.
 Semantics reproduced:
   * non-text blocks (type > 8) do not increment the block counter and emit
     no kept content (tesseract-recognize.cc:651-660) — here they are emitted
-    as rows with ``sub_order=-1`` so the engine can drop them with a native
-    Catalyst filter (T1);
+    as rows with ``sub_order=-1`` and dropped by the T1 pass
+    (functions/pagepass.py in the engine, t1_filter in the oracle);
   * region id "b{n}" over kept blocks, "{crop_id}_" prefix in region-crop
     mode, "pg{k}_" prefix when the document has >1 page
     (tesseract-recognize.cc:657-670);
@@ -131,7 +131,7 @@ def emit_page_rows(
     block_counter = 0
     for blk in page["blocks"]:
         if blk["block_type"] > 8:
-            # emitted for the native T1 filter to drop; never counted
+            # emitted for the T1 pass to drop; never counted
             rows.append(
                 _row(block_type=blk["block_type"], level="region",
                      **to_r(blk["bbox"]), **page_cols)
@@ -182,10 +182,9 @@ def emit_page_rows(
             for li, line in enumerate(para, start=1):
                 lid = f"{rid}_p{pi}_l{li}"
                 # numeric within-page anchor of this line: shared by the
-                # line and its word/glyph children, it keys the P3 sibling
-                # window with a sort order that COINCIDES with emission
-                # order — so the downstream order-assignment window reuses
-                # the same sort (PLANS.md)
+                # line and its word/glyph children, its sort order
+                # COINCIDES with emission order, which the order window and
+                # the checkpoint sink sort on (PLANS.md)
                 line_sub = sub
                 lrow = _row(
                     sub_order=sub,

@@ -1,18 +1,19 @@
-"""Mock-OCR expansion stage: media span rows → structured span rows.
+"""Mock-OCR expansion stage: media span rows → final media span rows.
 
 The single custom "UDTF" of the engine (SURVEY.md §2.3): an Arrow-batched
 ``mapInArrow`` that resolves each media_ref to a raster, decodes it by
-image processing (operators/ocr_core.py) and emits the reference's
-iterator-walk rows (functions/emission.py). This is the analog of the
-reference's per-request subprocess (tesseract_recognize_api.py:188-198) —
-but crossed once per Arrow batch instead of once per document.
+image processing (operators/ocr_core.py), emits the reference's
+iterator-walk rows (functions/emission.py) and runs the page-local
+post-passes T1/T3/P1/P2/P3 on them (functions/pagepass.py). This is the
+analog of the reference's per-request subprocess
+(tesseract_recognize_api.py:188-198) — but crossed once per Arrow batch
+instead of once per document, and the post-passes ride the same crossing:
+every one of them reads only its own page, so none needs a shuffle.
 
 mapInArrow (not mapInPandas): output RecordBatches are assembled straight
 from Python column lists via ``pa.array`` — no pandas DataFrame is ever
-materialized on either side of the boundary. The round-2 profile put the
-pandas↔arrow conversion at ~1.5 of 5.3 ms/page; cutting it both lowers
-absolute cost AND memory-bandwidth pressure, the term that inflated
-per-core CPU at 32 resident workers (BENCH/BASELINE.md analysis).
+materialized on either side of the boundary. The ``coords`` list column is
+built from flat x/y lists plus list offsets, never one object per point.
 
 No shuffle happens here: each media span is an independent work item, so
 the stage is embarrassingly parallel; skew is handled upstream by
@@ -20,8 +21,9 @@ repartitioning on (doc_id, offset) so a media-heavy document's spans spread
 across tasks (the north-star's "salting of skewed media-heavy partitions").
 
 Failures are quarantined per the task-retry discipline (SURVEY.md §4): a
-raster that violates the contract yields one level='error' row
-(sub_order=-1, dropped by the T1 filter) instead of failing the partition.
+raster that violates the contract yields one level='error' row (non-null
+``error``, dropped by a native filter after the stage) instead of failing
+the partition.
 """
 
 from __future__ import annotations
@@ -31,21 +33,19 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tesseract_recognize_spark.config import ExtractConfig
 from tesseract_recognize_spark.functions.emission import emit_page_rows
+from tesseract_recognize_spark.functions.pagepass import finish_page
 from tesseract_recognize_spark.operators.ocr_core import DecodeError, decode_raster
 from tesseract_recognize_spark.schemas import MEDIA_ROWS_SCHEMA
 from tesseract_recognize_spark.sources.media import resolve_media
 
 __all__ = ["ocr_expand"]
 
-_OUT_COLS = [f.name for f in MEDIA_ROWS_SCHEMA.fields]
-# columns produced by emit_page_rows; the 4 carried-through base columns
-# (doc_id / offset / media_ref / error) are filled by repetition instead of
-# per-row dict merges
-_BASE_COLS = ("doc_id", "offset", "media_ref", "error")
-_EMIT_COLS = [c for c in _OUT_COLS if c not in _BASE_COLS]
+_ARROW_SCHEMA = to_arrow_schema(MEDIA_ROWS_SCHEMA)
+
 
 def _scale_page(page: dict, k: int) -> dict:
     """density analog (reference --density, tesseract-recognize.cc:45,542):
@@ -95,9 +95,10 @@ def _scale_page(page: dict, k: int) -> dict:
 
 def _expand_columns(
     cols: dict[str, list], cfg: ExtractConfig, resolver, save_crops_dir=None
-) -> dict[str, list]:
-    """Column lists in → column lists out (one output element per emitted
-    span row). Pure Python — shared by the Arrow stage and unit tests."""
+) -> pa.RecordBatch:
+    """Column lists in → one RecordBatch out (one row per kept span row,
+    plus one level='error' row per quarantined page). Shared by the Arrow
+    stage and unit tests."""
     crop_mode = "crop_id" in cols
     k_density = cfg.density // 300
     out: list[dict] = []
@@ -155,25 +156,50 @@ def _expand_columns(
                     # Page dims stay the PAGE's (coords are page-frame after
                     # the offset add-back), not the crop's
                     row["page_w"], row["page_h"] = full_w, full_h
+            rows = finish_page(rows)
         except DecodeError as exc:  # quarantine, don't fail the task
             err = str(exc)
-            rows = [
-                dict(
-                    sub_order=-1, level="error", text="", full_page=False
-                )
-            ]
+            rows = [dict(sub_order=-1, level="error", text="")]
         out.extend(rows)
         n = len(rows)
         doc_col += [doc_id] * n
         off_col += [offset] * n
         ref_col += [media_ref] * n
         err_col += [err] * n
-    data = {c: [r.get(c) for r in out] for c in _EMIT_COLS}
-    data["doc_id"] = doc_col
-    data["offset"] = off_col
-    data["media_ref"] = ref_col
-    data["error"] = err_col
-    return data
+    base = {
+        "doc_id": doc_col, "offset": off_col,
+        "media_ref": ref_col, "error": err_col,
+    }
+    arrays = [
+        _coords_array(out) if f.name == "coords"
+        else pa.array(
+            base[f.name] if f.name in base else [r.get(f.name) for r in out],
+            type=f.type,
+        )
+        for f in _ARROW_SCHEMA
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=_ARROW_SCHEMA)
+
+
+def _coords_array(rows: list[dict]) -> pa.ListArray:
+    """The coords list column from the rows' xs/ys tuples: flat x and y
+    value arrays plus list offsets (null for a quarantined page's row)."""
+    xs: list[float] = []
+    ys: list[float] = []
+    ends = [0]
+    for r in rows:
+        xs += r.get("xs", ())
+        ys += r.get("ys", ())
+        ends.append(len(xs))
+    points = pa.StructArray.from_arrays(
+        [pa.array(xs, pa.float64()), pa.array(ys, pa.float64())],
+        names=["x", "y"],
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(ends, pa.int32()), points,
+        type=_ARROW_SCHEMA.field("coords").type,
+        mask=pa.array(["xs" not in r for r in rows]),
+    )
 
 
 def ocr_expand(
@@ -183,7 +209,7 @@ def ocr_expand(
     save_crops_dir: str | None = None,
 ) -> DataFrame:
     """media span rows (doc_id, offset, media_ref, media_idx, n_media) →
-    structured rows per MEDIA_ROWS_SCHEMA (raster-frame geometry).
+    post-passed span rows per MEDIA_ROWS_SCHEMA (final coords).
 
     ``resolver`` (media_ref → raster ndarray) is captured in the UDF
     closure so it ships to the Python workers via cloudpickle — a
@@ -191,9 +217,6 @@ def ocr_expand(
     fresh). Defaults to sources/media.resolve_media.
     """
     resolver = resolver or resolve_media
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(MEDIA_ROWS_SCHEMA)
     in_cols = [
         "doc_id", "offset", "media_ref", "media_idx", "n_media",
         "crop_id", "crop_x0", "crop_y0", "crop_x1", "crop_y1", "crop_seq",
@@ -209,10 +232,6 @@ def ocr_expand(
                 for c in in_cols
                 if c in names
             }
-            data = _expand_columns(cols, cfg, resolver, save_crops_dir)
-            arrays = [
-                pa.array(data[f.name], type=f.type) for f in arrow_schema
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            yield _expand_columns(cols, cfg, resolver, save_crops_dir)
 
     return media_spans.mapInArrow(fn, schema=MEDIA_ROWS_SCHEMA)

@@ -1,10 +1,11 @@
-"""Pure-Python reference implementations of the engine's native post-passes.
+"""Pure-Python reference implementations of the engine's post-passes.
 
 These are the single-threaded, sequential semantics of the reference's
-post-passes (tesseract-recognize.cc:793-858), used by the oracle. The Spark
-pipeline implements the SAME semantics as distributed native ops
-(windows/aggregations); pytest compares the two row-for-row — that parity is
-what validates the distributed re-expression.
+post-passes (tesseract-recognize.cc:793-858), used by the oracle. The
+engine implements the SAME semantics independently, per page inside its
+OCR stage (functions/pagepass.py, with P3 as a closed form); pytest
+compares the two row-for-row — that parity is what validates the
+engine's re-expression. The engine never imports this module.
 
 Documented deviations from the reference (both sides implement these):
   * rotatePage in the reference would also rotate the literal "0,0 0,0"
@@ -13,7 +14,7 @@ Documented deviations from the reference (both sides implement these):
     sentinel (a 2-point coords list) is frame-invariant, so the filler
     applies uniformly on all pages.
   * the reference filler renormalizes unit vectors at every chained
-    extrusion step; the distributed closed form multiplies one unit vector —
+    extrusion step; the engine's closed form multiplies one unit vector —
     identical up to float ULPs (compared with 1e-9 tolerance in tests).
 """
 
@@ -127,8 +128,8 @@ def p3_fill_word_coords(rows: list[dict]) -> None:
     sequential form: iterate sentinel words BACKWARDS in document order,
     filling in place — so an already-filled later word can serve as the
     "following sibling with real coords" of an earlier one (the reference's
-    chaining behavior). The Spark pipeline implements the equivalent
-    closed form with window functions."""
+    chaining behavior). The engine implements the equivalent closed form
+    per line (functions/pagepass.py)."""
     words = [r for r in rows if r["level"] == "word"]
     sentinels = [r for r in words if len(r["coords"]) == 2]
     by_line: dict[str, list[dict]] = {}

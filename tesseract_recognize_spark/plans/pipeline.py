@@ -3,17 +3,20 @@
     documents ──explode (native, no shuffle)──┬── text branch: native trim
                                               └── media branch:
                                                     repartition(doc_id, offset)   ← skew salting
-                                                    mapInArrow mock-OCR           ← the one UDF
-                                                    T1 filter (native)
-                                                    T3 corners (native)
-               union ── repartition(doc_id) ── P1 ── P2 ── P3 ── order window ── sink
+                                                    mapInArrow mock-OCR           ← the one UDF:
+                                                      decode, emit, T1/T3/P1/P2/P3 per page
+                                                    quarantine filter (native)
+               union ── repartition(doc_id) ── order window ── sink
+
+Every post-pass is page-local (P2 aggregates over one page, P3 over one
+line, T1/T3/P1 are row-wise), so they run inside the OCR stage on each
+decoded page (functions/pagepass.py) and the plan carries no post-pass
+expressions at all.
 
 Shuffle accounting (the 100-TB argument): exactly two exchanges —
 (1) the salting repartition that spreads media-heavy documents across tasks
 BEFORE the expensive OCR stage, and (2) one hash exchange on doc_id that
-serves ALL downstream window operators (P2 partitions by (doc_id, offset),
-P3 by (doc_id, offset, line_id), order by (doc_id) — hash(doc_id) clusters
-all of them, so Catalyst inserts sorts but no further exchanges).
+clusters each document for the one order window.
 """
 
 from __future__ import annotations
@@ -30,14 +33,6 @@ from tesseract_recognize_spark.operators.normalize import (
     trim_text,
 )
 from tesseract_recognize_spark.operators.ocr import ocr_expand
-from tesseract_recognize_spark.operators.postpass import (
-    build_coords_array,
-    p1_apply_orientation,
-    p2_dominant_baselines,
-    p3_fill_word_coords,
-    t1_block_filter,
-    t3_coords,
-)
 from tesseract_recognize_spark.schemas import FINAL_COLUMNS
 
 __all__ = ["extract", "extract_crops", "canonical_projection"]
@@ -114,22 +109,7 @@ def extract(
         for f in media_rows.schema
     ))
     all_rows = text_full.unionByName(media_rows)
-
-    # one exchange serves every window below (hash(doc_id) clusters
-    # (doc_id), (doc_id, offset) and (doc_id, offset, line_id) alike)
-    all_rows = all_rows.repartition("doc_id")
-    all_rows = p1_apply_orientation(all_rows)
-    # P3 before P2 — deliberately swapped vs the reference's P2→P3 order:
-    # the two commute exactly (the 90°/180° rotation is a pointwise
-    # isometry applied uniformly to every coords list, and the filler's
-    # corner picks / unit-vector extrusions are equivariant under it),
-    # and this order lets P2's unordered page window reuse P3's sort
-    # ((doc_id, offset) is a prefix of P3's sort key) — one less full
-    # sort of the span rows. The oracle applies the reference order;
-    # the e2e parity tests pin the equivalence.
-    all_rows = p3_fill_word_coords(all_rows)
-    all_rows = p2_dominant_baselines(all_rows)
-    return _number_spans(build_coords_array(all_rows), ordered)
+    return _number_spans(all_rows, ordered)
 
 
 def extract_crops(
@@ -185,33 +165,32 @@ def extract_crops(
             media_in, cfg, resolver=resolver, save_crops_dir=save_crops_dir
         )
     )
-    rows = p3_fill_word_coords(rows.repartition("doc_id"))
-    return _number_spans(build_coords_array(rows), ordered)
+    return _number_spans(rows, ordered)
 
 
 def _post_ocr(rows: DataFrame) -> DataFrame:
-    """OCR output → media span rows: T1 filter, T3 corners, slim, kind,
-    T9 trim."""
-    rows = t3_coords(t1_block_filter(rows))
-    # slim the shuffled row: the raster-frame ints and quarantine column are
-    # consumed by T1/T3 above — dropping them here keeps them out of the
-    # doc_id exchange and every window buffer downstream
-    rows = rows.drop("x0", "y0", "x1", "y1", "full_page", "error")
-    return rows.withColumn("kind", F.lit("media")).withColumn(
-        "text", trim_text(F.col("text"))  # T9 applies at every level
-    )
+    """OCR output → media span rows: drop quarantined pages, kind, T9
+    trim."""
+    # quarantined pages stay visible in the plan up to this filter, the
+    # one place a side output of them can tap
+    rows = rows.filter(F.col("error").isNull()).drop("error")
+    return rows.withColumns({
+        "kind": F.lit("media"),
+        "text": trim_text(F.col("text")),  # T9 applies at every level
+    })
 
 
 def _number_spans(rows: DataFrame, ordered: bool) -> DataFrame:
-    """Assign the per-document span ``order`` and project FINAL_COLUMNS;
-    ``ordered`` adds the global (doc_id, order) sort."""
-    # (offset, line_sub, sub_order) orders identically to
-    # (offset, sub_order) — line_sub is monotone in sub_order within a
-    # page — but matches P3's sort exactly, so NO additional sort here
+    """Cluster each document on one doc_id exchange, assign its span
+    ``order`` and project FINAL_COLUMNS; ``ordered`` adds the global
+    (doc_id, order) sort."""
+    # line_sub is monotone in sub_order within a page, so this orders like
+    # (offset, sub_order); the checkpoint sink sorts on the same keys and
+    # so reuses this sort
     order_w = Window.partitionBy("doc_id").orderBy(
         "offset", "line_sub", "sub_order"
     )
-    out = rows.withColumn(
+    out = rows.repartition("doc_id").withColumn(
         "order", (F.row_number().over(order_w) - 1).cast("int")
     ).select(*FINAL_COLUMNS)
     if ordered:

@@ -26,8 +26,8 @@ POINT = T.StructType(
     [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
 )
 
-# Output of the mock-OCR mapInPandas stage (raster-frame geometry; the
-# native post-passes turn this into the final span rows).
+# Output of the mock-OCR mapInArrow stage: final media span rows (the
+# page-local post-passes already ran) plus the quarantine column.
 MEDIA_ROWS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
@@ -43,11 +43,8 @@ MEDIA_ROWS_SCHEMA = T.StructType(
         T.StructField("glyph_idx", T.IntegerType()),
         T.StructField("text", T.StringType()),
         T.StructField("conf", T.DoubleType()),
-        T.StructField("x0", T.IntegerType()),
-        T.StructField("y0", T.IntegerType()),
-        T.StructField("x1", T.IntegerType()),
-        T.StructField("y1", T.IntegerType()),
-        T.StructField("full_page", T.BooleanType()),
+        T.StructField("coords", T.ArrayType(POINT)),
+        T.StructField("coords_filled", T.BooleanType()),
         T.StructField("b1x", T.DoubleType()),
         T.StructField("b1y", T.DoubleType()),
         T.StructField("b2x", T.DoubleType()),

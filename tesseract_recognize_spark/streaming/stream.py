@@ -9,9 +9,9 @@ micro-batch runs the full distributed extract plan and writes its own
 batch-keyed partition directory, so replays after a crash are idempotent).
 
 foreachBatch (rather than a pure streaming DAG) is deliberate: the order-
-assignment window and the P2/P3 post-pass windows are per-document total
-orders, not watermark-windowed aggregations — per micro-batch semantics is
-exactly the contract (a document's spans live in one input file).
+assignment window is a per-document total order, not a watermark-windowed
+aggregation — per micro-batch semantics is exactly the contract (a
+document's spans live in one input file).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """P3 word-coords filler: the reference's sequential chaining semantics
 (tesseract-recognize.cc:816-858, backwards in-place loop) on hand-built
-rows. The distributed closed form is tested against this via the Spark
-e2e parity test."""
+rows. The engine's closed form (functions/pagepass.py) is tested against
+this in tests/test_pagepass.py and the Spark e2e parity tests."""
 
 import pytest
 

@@ -134,8 +134,9 @@ def test_empty_table(spark, tmp_path):
 
 
 def test_p3_closed_form_matches_sequential(spark, tmp_path):
-    """Native window closed form vs the reference's sequential chaining, on
-    crafted runs of unlocatable words — incl. on a rotated page (P1+P3)."""
+    """The engine's per-line closed form (run in the OCR stage) vs the
+    reference's sequential chaining, on crafted runs of unlocatable words —
+    incl. on a rotated page (P1+P3)."""
     def line(*specs):
         return [Word(t, unk) for t, unk in specs]
 

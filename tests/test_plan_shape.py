@@ -1,0 +1,68 @@
+"""Physical-plan shape of the extraction plans: the post-passes run inside
+the OCR Arrow stage, so after it only the doc_id exchange, one sort and
+the one order window remain."""
+
+from __future__ import annotations
+
+import contextlib
+import io
+import re
+
+import pytest
+
+from tesseract_recognize_spark.config import ExtractConfig
+from tesseract_recognize_spark.plans.pipeline import extract, extract_crops
+
+pytestmark = pytest.mark.spark
+
+_NODES = ("Exchange", "Sort", "Window", "MapInArrow")
+
+
+def _tree(df) -> str:
+    """The node tree of ``explain("formatted")`` (its first section)."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().split("\n\n")[0]
+
+
+def _count(tree: str) -> dict[str, int]:
+    # "+- Exchange (7)" counts; "BroadcastExchange (8)" does not
+    return {n: len(re.findall(rf"[-\s]{n} \(\d+\)", tree)) for n in _NODES}
+
+
+def test_extract_plan_shape(spark, fx_small_path):
+    df = extract(
+        spark.read.parquet(fx_small_path), ExtractConfig(media_partitions=4)
+    )
+    assert _count(_tree(df)) == {
+        "Exchange": 2, "Sort": 1, "Window": 1, "MapInArrow": 1,
+    }
+
+
+def test_extract_crops_plan_shape(spark, fx_small_docs, fx_small_path):
+    crops = spark.createDataFrame(
+        [
+            (d["doc_id"], s["offset"], "c1", 0, 0, 60, 60)
+            for d in fx_small_docs for s in d["spans"]
+            if s["kind"] == "media"
+        ],
+        "doc_id string, offset int, crop_id string, crop_x0 int, "
+        "crop_y0 int, crop_x1 int, crop_y1 int",
+    )
+    df = extract_crops(
+        spark.read.parquet(fx_small_path), crops,
+        ExtractConfig(psm="auto", media_partitions=4),
+    )
+    tree = _tree(df)
+    # above the OCR stage: the doc_id exchange, one sort, one window
+    tail = tree.split("MapInArrow")[0]
+    assert _count(tail) == {
+        "Exchange": 1, "Sort": 1, "Window": 1, "MapInArrow": 0,
+    }
+    # the whole plan adds the salting exchange and, on the crops side,
+    # the within-page crop numbering (crop_seq) window with its own
+    # exchange and sort
+    assert _count(tree) == {
+        "Exchange": 3, "Sort": 2, "Window": 2, "MapInArrow": 1,
+    }

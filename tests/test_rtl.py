@@ -110,3 +110,25 @@ def test_rtl_roundtrip_with_rotation():
     line = page["blocks"][0]["paras"][0][0]
     assert [w["text"] for w in line["words"]] == ["ABC", "DE"]
     assert line["words"][1]["unk"] is True
+
+
+def test_rtl_page_through_ocr_stage():
+    """The OCR stage's output rows: per-region reading direction, and the
+    RTL line's word coords mirrored (reading-word 0 rightmost)."""
+    from tesseract_recognize_spark.operators.ocr import _expand_columns
+
+    layout = _rtl_layout()
+    cols = {"doc_id": ["d"], "offset": [0], "media_ref": ["fx://rtl"],
+            "media_idx": [1], "n_media": [1]}
+    rows = _expand_columns(
+        cols, ExtractConfig(), lambda _: render_upright(layout)
+    ).to_pylist()
+    by_region: dict[str, set] = {}
+    for r in rows:
+        by_region.setdefault(r["region_id"], set()).add(r["reading_direction"])
+    assert by_region == {"b1": {"right-to-left"}, "b2": {"left-to-right"}}
+    words = [r for r in rows if r["level"] == "word" and r["region_id"] == "b1"]
+    assert [w["text"] for w in words] == ["AB", "CDE", "FG"]
+    xs = [w["coords"][0]["x"] for w in words]
+    assert xs[0] > xs[1] > xs[2]
+    assert all(w["coords_filled"] is False for w in words)

@@ -182,3 +182,72 @@ def test_unk_word_gets_sentinel_then_filled():
         pre["coords"][1], fol["coords"][0], fol["coords"][3], pre["coords"][2]
     ]
     assert mid["coords_filled"] is True
+
+
+# --- the OCR stage's output columns (operators/ocr.py) --------------------
+
+def _stage(layouts):
+    """Run the OCR stage's column function over one media span per
+    media_ref of ``layouts`` → (output rows, column names). A ``None``
+    layout resolves to a raster that violates the contract."""
+    import numpy as np
+
+    from tesseract_recognize_spark.fixtures.raster import render_upright
+    from tesseract_recognize_spark.operators.ocr import _expand_columns
+
+    def render(ref):
+        lay = layouts[ref]
+        if lay is None:
+            return np.ones((13, 13), np.uint8)
+        img = render_upright(lay)
+        return np.rot90(img, lay.orientation_k) if lay.orientation_k else img
+
+    refs = sorted(layouts)
+    cols = {
+        "doc_id": ["d"] * len(refs), "offset": list(range(len(refs))),
+        "media_ref": refs, "media_idx": [i + 1 for i in range(len(refs))],
+        "n_media": [len(refs)] * len(refs),
+    }
+    batch = _expand_columns(cols, ExtractConfig(), render)
+    return batch.to_pylist(), batch.schema.names
+
+
+def test_ocr_stage_emits_final_coords():
+    from tesseract_recognize_spark.schemas import MEDIA_ROWS_SCHEMA
+
+    blocks = [
+        Block(block_type=1, paras=[[[
+            Word("aa", False), Word("xx", True), Word("bb", False)
+        ]]]),
+        Block(block_type=11, nontext_width=50),
+    ]
+    layout = _mk_layout(k=1, blocks=blocks)
+    rows, names = _stage({"fx://p": layout})
+    assert names == MEDIA_ROWS_SCHEMA.names
+    assert not {"x0", "y0", "x1", "y1", "full_page"} & set(names)
+    # T1 ran in the stage: the non-text block's row is gone
+    assert all(r["block_type"] <= 8 for r in rows)
+    assert all(r["error"] is None for r in rows)
+    exp = expected_spans("d", [{
+        "kind": "media", "text": "", "media_ref": "fx://p", "offset": 0,
+    }], layout_provider=lambda _: layout)
+    assert len(rows) == len(exp)
+    for r, e in zip(rows, exp):
+        assert r["sub_order"] == e["sub_order"]
+        assert (r["page_w"], r["page_h"]) == (e["page_w"], e["page_h"])
+        assert r["coords_filled"] == e["coords_filled"]
+        assert [(p["x"], p["y"]) for p in r["coords"]] == e["coords"]
+    mid = [r for r in rows if r["level"] == "word"][1]
+    assert mid["coords_filled"] is True and len(mid["coords"]) == 4
+
+
+def test_ocr_stage_quarantine_row():
+    rows, _ = _stage({"bad://0": None, "fx://1": _mk_layout()})
+    bad = [r for r in rows if r["media_ref"] == "bad://0"]
+    assert len(bad) == 1
+    assert bad[0]["level"] == "error" and bad[0]["error"]
+    assert bad[0]["coords"] is None and bad[0]["sub_order"] == -1
+    assert all(
+        r["error"] is None and r["coords"] for r in rows
+        if r["media_ref"] == "fx://1"
+    )
