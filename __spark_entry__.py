@@ -34,7 +34,7 @@ from tesseract_recognize_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_signature,
 )
-from tesseract_recognize_spark.operators.normalize import trim_text
+from tesseract_recognize_spark.operators.normalize import trim_sql
 from tesseract_recognize_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
@@ -102,7 +102,7 @@ def _docs(spark, sf_dir):
 def q_trim_normalize(spark, sf_dir):
     # T9: the reference's entire text normalization (native regexp_replace)
     return _docs(spark, sf_dir).select(
-        "doc_id", trim_text(F.col("text")).alias("text_norm")
+        "doc_id", F.expr(trim_sql("text")).alias("text_norm")
     )
 
 

@@ -106,14 +106,15 @@ def main() -> int:
             docs.column("doc_id").to_pylist(), docs.column("text").to_pylist()
         )
     ]
-    cfg = ExtractConfig(media_partitions=32)
+    # the oracle ignores media_partitions, a Spark-only runtime knob
+    cfg = ExtractConfig()
     _write(
         (expected_spans(did, spans, cfg) for did, spans in doc_spans),
         out_full,
     )
     # region-crop golden: same crop selection as the driver query
     # (__spark_entry__.py:q_extract_region_crops via region_crops_for_media)
-    crop_cfg = ExtractConfig(psm="auto", media_partitions=32)
+    crop_cfg = ExtractConfig(psm="auto")
     crop_rows = []
     for did, spans in doc_spans:
         pairs = [

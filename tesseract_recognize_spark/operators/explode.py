@@ -19,7 +19,7 @@ consecutively exactly as the reference's page registration does.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 __all__ = ["parse_pages_set", "explode_spans"]
 
@@ -60,43 +60,15 @@ def parse_pages_set(spec: str) -> frozenset[int]:
     return frozenset(out)
 
 
-def _in_set(col: Column, values: frozenset[int]) -> Column:
-    # Column.isin does not accept lambda-bound variables inside
-    # higher-order functions; array_contains against a constant-folded
-    # literal array does, and stays one expression however large the
-    # page set gets (the ==-OR fold it replaces built a linear chain)
-    if not values:
-        return F.lit(False)
-    return F.array_contains(
-        F.array(*[F.lit(v) for v in sorted(values)]), col
-    )
-
-
-def _media_prefix_counts(spans: Column) -> Column:
-    """array<int> with element i = count of media spans among spans[0..i]
-    (i.e. the 1-based media ordinal when element i is itself media).
-
-    Single linear aggregate scan — ONE lambda evaluation per element. The
-    previous form re-filtered ``slice(spans, 1, i+1)`` per element: O(n²)
-    interpreted-lambda evaluations per document, a wall for docs with
-    hundreds of spans."""
-    def step(acc: Column, s: Column) -> Column:
-        c = acc["c"] + F.when(
-            s["kind"] == F.lit("media"), F.lit(1)
-        ).otherwise(F.lit(0))
-        c = c.cast("int")
-        return F.struct(
-            c.alias("c"), F.concat(acc["idx"], F.array(c)).alias("idx")
-        )
-
-    return F.aggregate(
-        spans,
-        F.struct(
-            F.lit(0).cast("int").alias("c"),
-            F.array().cast("array<int>").alias("idx"),
-        ),
-        step,
-        lambda acc: acc["idx"],
+def _media_prefix_counts(spans: str) -> str:
+    """SQL for array<int> with element i = count of media spans among
+    spans[0..i] (i.e. the 1-based media ordinal when element i is itself
+    media): one linear aggregate scan, ONE lambda evaluation per element."""
+    c = "CAST(acc.c + CASE WHEN s.kind = 'media' THEN 1 ELSE 0 END AS INT)"
+    return (
+        f"aggregate({spans}, named_struct('c', CAST(0 AS INT), "
+        "'idx', CAST(array() AS ARRAY<INT>)), (acc, s) -> named_struct("
+        f"'c', {c}, 'idx', concat(acc.idx, array({c}))), acc -> acc.idx)"
     )
 
 
@@ -111,74 +83,57 @@ def explode_spans(
     ``pages`` (a "0-2,5"-style spec or a set of 0-based media ordinals)
     keeps only the selected media spans — dropped before the explode, so
     they never reach the decode stage.
+
+    One SQL statement, sent in one call instead of one per Column.
     """
-    # defensive: span order is defined by `offset`, not array position
-    spans = F.array_sort(
-        F.col("spans"),
-        lambda a, b: F.when(a["offset"] < b["offset"], F.lit(-1))
-        .when(a["offset"] > b["offset"], F.lit(1))
-        .otherwise(F.lit(0)),
-    )
+    # defensive: span order is defined by `offset`, not array position.
     # The prefix-count array is materialized as a NAMED COLUMN in its own
     # projection (not an expression inside the consuming lambdas): lambda
     # bodies then fetch it as an O(1) bound row reference per element. The
-    # passthrough "_pre" reference below also keeps CollapseProject from
-    # inlining the aggregate into the filter lambda (which would re-evaluate
-    # the O(n) scan per element — quadratic again).
-    base = docs_df.select("doc_id", spans.alias("_spans"))
-    base = base.select(
-        "doc_id",
-        "_spans",
-        _media_prefix_counts(F.col("_spans")).alias("_pre"),
-    )
+    # passthrough "_pre" reference also keeps CollapseProject from inlining
+    # the aggregate into the filter lambda (which would re-evaluate the
+    # O(n) scan per element — quadratic again).
+    base = f"""
+        SELECT doc_id, _spans, {_media_prefix_counts("_spans")} AS _pre
+        FROM (
+            SELECT doc_id, array_sort(spans, (a, b) ->
+                CASE WHEN a.offset < b.offset THEN -1
+                     WHEN a.offset > b.offset THEN 1 ELSE 0 END) AS _spans
+            FROM {{docs}}
+        )"""
     if pages is not None:
         if isinstance(pages, str):
             pages = parse_pages_set(pages)
-
-        def keep(s: Column, i: Column) -> Column:
-            # 0-based media ordinal of element i = prefix media count at i
-            # minus one (two-param HOF lambda: arg 2 IS the array index)
-            ordinal = F.element_at(F.col("_pre"), i + 1) - 1
-            return (s["kind"] != F.lit("media")) | _in_set(ordinal, pages)
-
-        base = base.select(
-            "doc_id", F.filter(F.col("_spans"), keep).alias("_spans"), "_pre"
+        # 0-based media ordinal of element i = prefix media count at i minus
+        # one (two-param HOF lambda: arg 2 IS the array index); one
+        # array_contains against a literal array however large the set;
+        # int() keeps the SQL text to integer literals
+        values = ", ".join(str(int(p)) for p in sorted(pages))
+        in_set = (
+            f"array_contains(array({values}), element_at(_pre, i + 1) - 1)"
+            if pages else "false"
         )
         # surviving pages renumber consecutively: fresh prefix counts over
         # the filtered array
-        base = base.select(
-            "doc_id",
-            "_spans",
-            _media_prefix_counts(F.col("_spans")).alias("_pre"),
-        )
-    df = base.select(
-        "doc_id",
-        F.when(
-            F.size(F.col("_spans")) > 0,
-            F.element_at(F.col("_pre"), F.size(F.col("_spans"))),
-        )
-        .otherwise(F.lit(0))
-        .alias("n_media"),
-        F.posexplode(
-            F.zip_with(
-                F.col("_spans"),
-                F.col("_pre"),
-                lambda s, m: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                    m.alias("media_idx"),
-                ),
-            )
-        ).alias("span_pos", "span"),
-    )
-    return df.select(
-        "doc_id",
-        F.col("span.offset").alias("offset"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.media_idx").alias("media_idx"),
-        "n_media",
-    )
+        base = f"""
+        SELECT doc_id, _spans, {_media_prefix_counts("_spans")} AS _pre
+        FROM (
+            SELECT doc_id,
+                   filter(_spans, (s, i) -> s.kind != 'media' OR {in_set})
+                       AS _spans,
+                   _pre
+            FROM ({base})
+        )"""
+    query = f"""
+        SELECT doc_id, span.*, n_media FROM (
+            SELECT doc_id,
+                   CASE WHEN size(_spans) > 0
+                        THEN element_at(_pre, size(_spans)) ELSE 0 END
+                       AS n_media,
+                   posexplode(zip_with(_spans, _pre, (s, m) -> named_struct(
+                       'offset', s.offset, 'kind', s.kind, 'text', s.text,
+                       'media_ref', s.media_ref, 'media_idx', m)))
+                       AS (span_pos, span)
+            FROM ({base})
+        )"""
+    return docs_df.sparkSession.sql(query, docs=docs_df)

@@ -20,14 +20,23 @@ the stage is embarrassingly parallel; skew is handled upstream by
 repartitioning on (doc_id, offset) so a media-heavy document's spans spread
 across tasks (the north-star's "salting of skewed media-heavy partitions").
 
-Failures are quarantined per the task-retry discipline (SURVEY.md §4): a
-raster that violates the contract yields one level='error' row (non-null
-``error``, dropped by a native filter after the stage) instead of failing
-the partition.
+Failures follow the task-retry discipline (SURVEY.md §4): a raster that
+violates the contract (``DecodeError``) or a resolver that cannot read its
+page (``OSError``) yields one level='error' row (``error`` = "<exception
+class>: <message>", dropped by a native filter after the stage) instead of
+failing the partition. A transient resolver error (``ConnectionError``,
+``TimeoutError``) is not quarantined: it fails the task, so Spark retries
+it, and once the retries are spent the group does not commit and a resume
+runs it again; the page is never lost silently.
+
+Each task ends with ``release_worker_caches``: the worker's per-task
+import-cache re-scan cost more than a small task's page work.
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -42,7 +51,7 @@ from tesseract_recognize_spark.operators.ocr_core import DecodeError, decode_ras
 from tesseract_recognize_spark.schemas import MEDIA_ROWS_SCHEMA
 from tesseract_recognize_spark.sources.media import resolve_media
 
-__all__ = ["ocr_expand"]
+__all__ = ["ocr_expand", "release_worker_caches"]
 
 _ARROW_SCHEMA = to_arrow_schema(MEDIA_ROWS_SCHEMA)
 
@@ -127,23 +136,6 @@ def _expand_columns(
                     "y": cy0,
                     "seq": int(cols["crop_seq"][i]),
                 }
-                if save_crops_dir:
-                    # K3 debug sink (reference --save-crops,
-                    # tesseract-recognize.cc:551-555): executor-local .npy
-                    # dumps of the cut rasters — dev-only, like the original
-                    import os
-
-                    import numpy as np
-
-                    os.makedirs(save_crops_dir, exist_ok=True)
-                    safe = str(doc_id).replace("/", "_")
-                    np.save(
-                        os.path.join(
-                            save_crops_dir,
-                            f"crop_{safe}_{offset}_{crop['crop_id']}.npy",
-                        ),
-                        raster,
-                    )
             page = decode_raster(raster)
             if k_density > 1:
                 page = _scale_page(page, k_density)
@@ -157,9 +149,30 @@ def _expand_columns(
                     # the offset add-back), not the crop's
                     row["page_w"], row["page_h"] = full_w, full_h
             rows = finish_page(rows)
-        except DecodeError as exc:  # quarantine, don't fail the task
-            err = str(exc)
+        except (ConnectionError, TimeoutError):
+            raise  # transient: fail the task so Spark retries it
+        except (DecodeError, OSError) as exc:  # quarantine the page
+            err = f"{type(exc).__name__}: {exc}"
             rows = [dict(sub_order=-1, level="error", text="")]
+        else:
+            if crop is not None and save_crops_dir:
+                # K3 debug sink (reference --save-crops,
+                # tesseract-recognize.cc:551-555): executor-local .npy
+                # dumps of the cut rasters — dev-only, like the original;
+                # outside the try, so a failed dump raises
+                import os
+
+                import numpy as np
+
+                os.makedirs(save_crops_dir, exist_ok=True)
+                safe = str(doc_id).replace("/", "_")
+                np.save(
+                    os.path.join(
+                        save_crops_dir,
+                        f"crop_{safe}_{offset}_{crop['crop_id']}.npy",
+                    ),
+                    raster,
+                )
         out.extend(rows)
         n = len(rows)
         doc_col += [doc_id] * n
@@ -202,6 +215,25 @@ def _coords_array(rows: list[dict]) -> pa.ListArray:
     )
 
 
+def release_worker_caches() -> None:
+    """End-of-task release of the Python worker's zip import caches.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``pyspark/worker_util.py``); on CPython 3.11 each cached
+    ``zipimporter`` then re-reads its archive — on a 4-core host the
+    spark-core jar (5,359 entries) twice at 44.5 ms and ``pyspark.zip``
+    (1,328 entries) 12 times at 10.5 ms: 0.22 s per task. Dropped from
+    ``sys.path_importer_cache``, they leave the next task nothing to
+    re-read, and a later import builds its finder from the untouched
+    ``zipimport._zip_directory_cache``. The first task of each worker
+    still pays; on CPython >= 3.13 the invalidation only drops caches, so
+    the release is harmless there."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
+
+
 def ocr_expand(
     media_spans: DataFrame,
     cfg: ExtractConfig,
@@ -233,5 +265,6 @@ def ocr_expand(
                 if c in names
             }
             yield _expand_columns(cols, cfg, resolver, save_crops_dir)
+        release_worker_caches()
 
     return media_spans.mapInArrow(fn, schema=MEDIA_ROWS_SCHEMA)

@@ -17,23 +17,24 @@ Shuffle accounting (the 100-TB argument): exactly two exchanges —
 (1) the salting repartition that spreads media-heavy documents across tasks
 BEFORE the expensive OCR stage, and (2) one hash exchange on doc_id that
 clusters each document for the one order window.
+
+Construction: three SQL statements around the one ``mapInArrow`` — the
+explode, the OCR stage's input (media filter, override or crop join,
+salting hint) and one tail shared by ``extract`` and ``extract_crops``.
+``spark.sql(query, **frames)`` costs a few Py4J round trips a statement
+where Column calls paid one per expression node: ~970 per ``extract()``
+on a 40-doc input became ~60, and every checkpoint group builds its plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 from tesseract_recognize_spark.config import DEFAULT_CONFIG, ExtractConfig
-from tesseract_recognize_spark.operators.explode import (
-    explode_spans,
-    parse_pages_set,
-)
-from tesseract_recognize_spark.operators.normalize import (
-    normalize_text_spans,
-    trim_text,
-)
+from tesseract_recognize_spark.operators.explode import explode_spans
+from tesseract_recognize_spark.operators.normalize import trim_sql
 from tesseract_recognize_spark.operators.ocr import ocr_expand
-from tesseract_recognize_spark.schemas import FINAL_COLUMNS
+from tesseract_recognize_spark.schemas import FINAL_COLUMNS, MEDIA_ROWS_SCHEMA
 
 __all__ = ["extract", "extract_crops", "canonical_projection"]
 
@@ -66,50 +67,30 @@ def extract(
     state, so double-rotation cannot occur). The join broadcasts when the
     override set is small.
     """
-    if isinstance(pages, str):
-        pages = parse_pages_set(pages)
     spans = explode_spans(docs_df, pages=pages)
-
-    text_rows = normalize_text_spans(spans)
-
-    media_in = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref", "media_idx", "n_media"
-    )
+    frames, ref, join = {"spans": spans}, "s.media_ref", ""
     if media_overrides is not None:
         # (doc_id, offset) must map to ONE override — the reference refuses
         # ambiguous --image usage (tesseract-recognize.cc:414-418). A
         # deterministic max-aggregate enforces the invariant without an
         # eager count action; duplicate rows with identical refs collapse
         # harmlessly, conflicting refs resolve deterministically.
-        media_overrides = media_overrides.groupBy("doc_id", "offset").agg(
-            F.max("new_media_ref").alias("new_media_ref")
-        )
-        media_in = media_in.join(
-            media_overrides, ["doc_id", "offset"], "left"
-        ).select(
-            "doc_id", "offset",
-            F.coalesce("new_media_ref", "media_ref").alias("media_ref"),
-            "media_idx", "n_media",
-        )
-    if cfg.media_partitions:
-        # salting: (doc_id, offset) hash spreads one media-heavy document
-        # across many tasks before the expensive stage
-        media_in = media_in.repartition(
-            cfg.media_partitions, "doc_id", "offset"
-        )
-    media_rows = _post_ocr(ocr_expand(media_in, cfg, resolver=resolver))
-
-    # align the light text branch to the media schema in one projection
-    # (a withColumn per missing column re-analyses the plan each time)
-    text_cols = set(text_rows.columns)
-    text_full = text_rows.select(*(
-        F.lit("text").alias("kind") if f.name == "kind"
-        else F.col(f.name) if f.name in text_cols
-        else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in media_rows.schema
-    ))
-    all_rows = text_full.unionByName(media_rows)
-    return _number_spans(all_rows, ordered)
+        frames["overrides"] = media_overrides
+        ref = "coalesce(o.new_media_ref, s.media_ref)"
+        join = """LEFT JOIN (
+                SELECT doc_id, offset, max(new_media_ref) AS new_media_ref
+                FROM {overrides} GROUP BY doc_id, offset
+            ) o ON s.doc_id = o.doc_id AND s.offset = o.offset"""
+    media_in = spans.sparkSession.sql(
+        f"""
+        SELECT {_salting(cfg, "doc_id", "offset")} s.doc_id, s.offset,
+               {ref} AS media_ref, s.media_idx, s.n_media
+        FROM {{spans}} s {join}
+        WHERE s.kind = 'media'""",
+        **frames,
+    )
+    media_rows = ocr_expand(media_in, cfg, resolver=resolver)
+    return _sql_tail(media_rows, ordered, spans)
 
 
 def extract_crops(
@@ -146,56 +127,87 @@ def extract_crops(
             "regions — reference tesseract-recognize.cc:423-426)"
         )
     spans = explode_spans(docs_df)
-    media_in = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref", "media_idx", "n_media"
+    # crop_seq: deterministic within-page crop order (drives the seq
+    # component of sub_order, hence the final span order)
+    media_in = spans.sparkSession.sql(
+        f"""
+        SELECT {_salting(cfg, "doc_id", "offset", "crop_seq")} *
+        FROM (
+            SELECT doc_id, offset, media_ref, media_idx, n_media
+            FROM {{spans}} WHERE kind = 'media'
+        ) JOIN (
+            SELECT *, CAST(row_number() OVER (
+                PARTITION BY doc_id, offset ORDER BY crop_id) - 1 AS INT)
+                AS crop_seq
+            FROM {{crops}}
+        ) USING (doc_id, offset)""",
+        spans=spans, crops=crops_df,
     )
-    # deterministic within-page crop order (drives the seq component of
-    # sub_order, hence the final span order)
-    seq_w = Window.partitionBy("doc_id", "offset").orderBy("crop_id")
-    crops = crops_df.withColumn(
-        "crop_seq", (F.row_number().over(seq_w) - 1).cast("int")
+    rows = ocr_expand(
+        media_in, cfg, resolver=resolver, save_crops_dir=save_crops_dir
     )
-    media_in = media_in.join(crops, ["doc_id", "offset"])
-    if cfg.media_partitions:
-        media_in = media_in.repartition(
-            cfg.media_partitions, "doc_id", "offset", "crop_seq"
-        )
-    rows = _post_ocr(
-        ocr_expand(
-            media_in, cfg, resolver=resolver, save_crops_dir=save_crops_dir
-        )
+    return _sql_tail(rows, ordered)
+
+
+def _salting(cfg: ExtractConfig, *cols: str) -> str:
+    """Hash the OCR stage's input on ``cols`` into ``media_partitions``
+    tasks, spreading a media-heavy document before the expensive stage."""
+    n = cfg.media_partitions
+    return f"/*+ REPARTITION({n}, {', '.join(cols)}) */" if n else ""
+
+
+# each branch projects FINAL_COLUMNS but `order`; the text branch's
+# media-only columns are typed NULLs
+_SPAN_COLUMNS = [c for c in FINAL_COLUMNS if c != "order"]
+
+
+def _select(values: dict[str, str]) -> str:
+    return ", ".join(
+        f"{values[c]} AS {c}" if c in values else c for c in _SPAN_COLUMNS
     )
-    return _number_spans(rows, ordered)
 
 
-def _post_ocr(rows: DataFrame) -> DataFrame:
-    """OCR output → media span rows: drop quarantined pages, kind, T9
-    trim."""
-    # quarantined pages stay visible in the plan up to this filter, the
-    # one place a side output of them can tap
-    rows = rows.filter(F.col("error").isNull()).drop("error")
-    return rows.withColumns({
-        "kind": F.lit("media"),
-        "text": trim_text(F.col("text")),  # T9 applies at every level
-    })
+_T9 = trim_sql("text")  # the T9 trim applies at every level
+_MEDIA_SELECT = _select({"kind": "'media'", "text": _T9})
+_TEXT_SELECT = _select({
+    **{
+        f.name: f"CAST(NULL AS {f.dataType.simpleString()})"
+        for f in MEDIA_ROWS_SCHEMA
+        if f.name not in ("doc_id", "offset", "media_ref")
+    },
+    "kind": "'text'", "text": _T9, "sub_order": "0", "level": "'text'",
+})
 
 
-def _number_spans(rows: DataFrame, ordered: bool) -> DataFrame:
-    """Cluster each document on one doc_id exchange, assign its span
-    ``order`` and project FINAL_COLUMNS; ``ordered`` adds the global
+def _sql_tail(
+    media_rows: DataFrame, ordered: bool, spans: DataFrame | None = None
+) -> DataFrame:
+    """The plan's one SQL tail: drop quarantined pages, add ``kind`` and
+    the T9 trim, union the text spans of ``spans`` (if given) with the
+    media rows, cluster each document on one doc_id exchange, assign its
+    span ``order`` and project FINAL_COLUMNS; ``ordered`` adds the global
     (doc_id, order) sort."""
+    # quarantined pages stay visible in the plan up to the error filter,
+    # the one place a side output of them can tap
+    rows = f"SELECT {_MEDIA_SELECT} FROM {{media}} WHERE error IS NULL"
+    frames = {"media": media_rows}
+    if spans is not None:
+        rows = (
+            f"SELECT {_TEXT_SELECT} FROM {{spans}} WHERE kind = 'text' "
+            f"UNION ALL {rows}"
+        )
+        frames["spans"] = spans
     # line_sub is monotone in sub_order within a page, so this orders like
     # (offset, sub_order); the checkpoint sink sorts on the same keys and
     # so reuses this sort
-    order_w = Window.partitionBy("doc_id").orderBy(
-        "offset", "line_sub", "sub_order"
-    )
-    out = rows.repartition("doc_id").withColumn(
-        "order", (F.row_number().over(order_w) - 1).cast("int")
-    ).select(*FINAL_COLUMNS)
-    if ordered:
-        out = out.orderBy("doc_id", "order")
-    return out
+    query = f"""
+        SELECT doc_id, CAST(row_number() OVER (
+                   PARTITION BY doc_id ORDER BY offset, line_sub, sub_order
+               ) - 1 AS INT) AS `order`,
+               {", ".join(_SPAN_COLUMNS[1:])}
+        FROM (SELECT /*+ REPARTITION(doc_id) */ * FROM ({rows}))
+        {"ORDER BY doc_id, `order`" if ordered else ""}"""
+    return media_rows.sparkSession.sql(query, **frames)
 
 
 def canonical_projection(spans_df: DataFrame) -> DataFrame:

@@ -15,6 +15,8 @@ from tesseract_recognize_spark.fixtures.generator import (
     write_documents_parquet,
 )
 from tesseract_recognize_spark.fixtures.raster import render_raster
+from tesseract_recognize_spark.operators.ocr import ocr_expand
+from tesseract_recognize_spark.oracle.oracle import expected_spans
 from tesseract_recognize_spark.plans.checkpoint import run_checkpointed
 from tesseract_recognize_spark.sources.tableio import (
     LineageEntry,
@@ -147,6 +149,86 @@ def test_lineage_matches_committed_rows_after_resume(spark, tmp_path):
         assert e.span_count == written.count()
     refs = {r["media_ref"] for r in io.read_all(spark).collect()}
     assert bad not in refs
+
+
+def test_resolver_io_error_quarantines_one_page(spark, tmp_path):
+    docs = gen_documents(16, seed=11)
+    p = str(tmp_path / "docs.parquet")
+    write_documents_parquet(docs, p)
+    ddf = spark.read.parquet(p)
+    bad_doc, bad_offset, bad = next(
+        (d["doc_id"], s["offset"], s["media_ref"])
+        for d in docs for s in d["spans"] if s["kind"] == "media"
+    )
+
+    def resolver(ref):
+        if ref == bad:
+            raise OSError(f"cannot read {ref}")
+        return render_raster(ref)
+
+    io = ParquetTableIO(str(tmp_path / "out"))
+    entries = run_checkpointed(ddf, io, n_groups=2, cfg=CFG, resolver=resolver)
+    assert [e.status for e in entries] == ["committed", "committed"]
+    # the OCR stage turns the error into the page's quarantine row
+    page = spark.createDataFrame(
+        [(bad_doc, bad_offset, bad, 1, 1)],
+        "doc_id string, offset int, media_ref string, media_idx int, "
+        "n_media int",
+    )
+    errors = [
+        r["error"] for r in ocr_expand(page, CFG, resolver=resolver).collect()
+    ]
+    assert errors == [f"OSError: cannot read {bad}"]
+    # every other span equals the oracle, renumbered around the lost page
+    want = []
+    for d in docs:
+        kept = [
+            r for r in expected_spans(d["doc_id"], d["spans"], CFG)
+            if r["media_ref"] != bad
+        ]
+        want += [
+            (r["doc_id"], i, r["kind"], r["text"], r["media_ref"],
+             r["region_id"], r["line_id"])
+            for i, r in enumerate(kept)
+        ]
+    got = sorted(
+        (r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"],
+         r["region_id"], r["line_id"])
+        for r in io.read_all(spark).collect()
+    )
+    assert got == sorted(want)
+
+
+def test_resolver_transient_error_fails_then_resumes(spark, tmp_path):
+    """A transient resolver error fails the task instead of quarantining the
+    page: no group holding the page commits, and a resume with a working
+    resolver returns every span, that page included."""
+    docs = gen_documents(16, seed=11)
+    p = str(tmp_path / "docs.parquet")
+    write_documents_parquet(docs, p)
+    ddf = spark.read.parquet(p)
+    bad_doc, bad = next(
+        (d["doc_id"], s["media_ref"])
+        for d in docs for s in d["spans"] if s["kind"] == "media"
+    )
+
+    def flaky(ref):
+        if ref == bad:
+            raise TimeoutError(f"timed out reading {ref}")
+        return render_raster(ref)
+
+    io = ParquetTableIO(str(tmp_path / "out"))
+    with pytest.raises(Exception, match="TimeoutError"):
+        run_checkpointed(ddf, io, n_groups=2, cfg=CFG, resolver=flaky)
+    for g in io.committed_groups():
+        written = spark.read.parquet(io.group_path(g))
+        assert written.filter(F.col("doc_id") == bad_doc).count() == 0
+    run_checkpointed(ddf, io, n_groups=2, cfg=CFG, resolver=render_raster)
+    want = sorted(
+        (r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
+        for d in docs for r in expected_spans(d["doc_id"], d["spans"], CFG)
+    )
+    assert _canon(io.read_all(spark)) == want
 
 
 def test_commit_group_runs_no_job_after_write(spark, tmp_path, monkeypatch):

@@ -21,8 +21,9 @@ from tesseract_recognize_spark.fixtures.raster import (
     layout_geometry,
     render_upright,
 )
-from tesseract_recognize_spark.oracle.oracle import expected_spans
+from tesseract_recognize_spark.oracle.oracle import expected_spans, trim
 from tesseract_recognize_spark.plans.pipeline import extract
+from tests.test_semantics import TRIM_CASES
 
 pytestmark = pytest.mark.spark
 
@@ -125,6 +126,33 @@ def test_quarantine_bad_media(spark, tmp_path):
     # surviving page keeps its stable page number (pg2)
     regions = [r["region_id"] for r in rows if r["level"] == "region"]
     assert regions and all(rid.startswith("pg2_") for rid in regions)
+
+
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+def test_trim_in_plan_matches_oracle(spark, tmp_path, escaped_literals):
+    # a wrongly escaped T9 pattern still runs, but matches a literal
+    # backslash, so no text loses its whitespace; the SQL text holds no
+    # backslash, so the parser's literal-escaping setting cannot change it
+    raws = [raw for raw, _ in TRIM_CASES] + [
+        "\x0b x \x0b", "\f y \f", "\r z \r\n", " a\\sb ", "\\s",
+    ]
+    docs = [
+        {"doc_id": f"d{i}", "spans": [
+            {"kind": "text", "text": raw, "media_ref": "", "offset": 0},
+        ]}
+        for i, raw in enumerate(raws)
+    ]
+    p = str(tmp_path / "trim.parquet")
+    write_documents_parquet(docs, p)
+    df = spark.read.parquet(p)
+    want = {f"d{i}": trim(raw) for i, raw in enumerate(raws)}
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, escaped_literals)
+    try:
+        got = {r["doc_id"]: r["text"] for r in extract(df).collect()}
+    finally:
+        spark.conf.unset(key)
+    assert got == want
 
 
 def test_empty_table(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Physical-plan shape of the extraction plans: the post-passes run inside
 the OCR Arrow stage, so after it only the doc_id exchange, one sort and
-the one order window remain."""
+the one order window remain. The plan is built from a few SQL
+statements, so building it costs few Py4J round trips."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import io
 import re
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 from tesseract_recognize_spark.config import ExtractConfig
 from tesseract_recognize_spark.plans.pipeline import extract, extract_crops
@@ -38,6 +40,25 @@ def test_extract_plan_shape(spark, fx_small_path):
     assert _count(_tree(df)) == {
         "Exchange": 2, "Sort": 1, "Window": 1, "MapInArrow": 1,
     }
+
+
+def test_extract_builds_in_few_py4j_round_trips(
+    spark, fx_small_path, monkeypatch
+):
+    # each Column expression is one round trip to the JVM; a plan built
+    # from Column calls made ~970 of them per extract()
+    docs = spark.read.parquet(fx_small_path)
+    send = ClientServerConnection.send_command
+    commands = []
+
+    def counted(self, command, *args, **kwargs):
+        commands.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    extract(docs, ExtractConfig(media_partitions=4))
+    monkeypatch.undo()
+    assert 0 < len(commands) <= 150
 
 
 def test_extract_crops_plan_shape(spark, fx_small_docs, fx_small_path):

@@ -23,17 +23,17 @@ from tesseract_recognize_spark.oracle.reference_ops import (
 
 # --- trim (T9, tesseract-recognize.cc:205-212) ---------------------------
 
-@pytest.mark.parametrize(
-    "raw,want",
-    [
-        ("  hello  ", "hello"),
-        ("\t\n a  b \n\t", "a  b"),          # internal runs preserved
-        ("", ""),
-        ("   \t  ", ""),                       # whitespace-only → empty
-        ("no-ws", "no-ws"),
-        (" \n x", "x"),
-    ],
-)
+TRIM_CASES = [
+    ("  hello  ", "hello"),
+    ("\t\n a  b \n\t", "a  b"),          # internal runs preserved
+    ("", ""),
+    ("   \t  ", ""),                       # whitespace-only → empty
+    ("no-ws", "no-ws"),
+    (" \n x", "x"),
+]
+
+
+@pytest.mark.parametrize("raw,want", TRIM_CASES)
 def test_trim_reference_semantics(raw, want):
     assert trim(raw) == want
 
