@@ -29,7 +29,14 @@ from tesseract_recognize_spark.functions.codecs import (
 )
 from tesseract_recognize_spark.functions.png import png_encode
 from tesseract_recognize_spark.operators.dedup import (
+    BAND_SIZE,
+    EST_MIN_AGREE,
+    MH_P,
+    N_HASHES,
+    SHINGLE_K,
+    SIMHASH_BITS,
     exact_dedup,
+    mh_coeffs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_signature,
@@ -871,10 +878,11 @@ _WORDS_SQL = (
     r"list_filter(regexp_split_to_array(lower(text), '\s+'), x -> len(x) > 0)"
 )
 
+# range's end is exclusive: positions 1 .. length - SHINGLE_K + 1
 _SHINGLES_SQL = (
-    "case when length(text) >= 3 then "
-    "list_distinct(list_transform(range(1, length(text) - 1), "
-    "i -> substr(text, i::INT, 3))) else [] end"
+    f"case when length(text) >= {SHINGLE_K} then "
+    f"list_distinct(list_transform(range(1, length(text) - {SHINGLE_K - 2}), "
+    f"i -> substr(text, i::INT, {SHINGLE_K}))) else [] end"
 )
 
 
@@ -908,19 +916,17 @@ def _minhash_ctes(bucket_cap: int | None = None) -> str:
     ``bucket_cap`` mirrors ngram_jaccard_pairs' degenerate-bucket cap:
     band buckets holding more than cap docs are dropped before the
     candidate self-join (same window count over the same key)."""
-    from tesseract_recognize_spark.operators.dedup import MH_P, mh_coeffs
-
     mh_cols = ", ".join(
         "list_min(list_transform(hs, h -> (({a} * h + {b}) % {p}))) AS mh{i}".format(
             a=mh_coeffs(i)[0], b=mh_coeffs(i)[1], p=MH_P, i=i
         )
-        for i in range(16)
+        for i in range(N_HASHES)
     )
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_id, md5(concat_ws('|', "
-        + ", ".join(f"mh{b * 4 + j}" for j in range(4))
+        + ", ".join(f"mh{b * BAND_SIZE + j}" for j in range(BAND_SIZE))
         + ")) AS band_hash FROM sigs"
-        for b in range(4)
+        for b in range(N_HASHES // BAND_SIZE)
     )
     if bucket_cap:
         bands_ctes = f"""bands_all AS ({band_selects}),
@@ -959,11 +965,10 @@ def _minhash_lsh_oracle() -> str:
 
 
 def _ngram_jaccard_oracle(
-    threshold: float = 0.8, n_hashes: int = 16, est_min_agree: int = 8,
-    bucket_cap: int | None = 100,
+    threshold: float = 0.8, bucket_cap: int | None = 100
 ) -> str:
     agree = " + ".join(
-        f"(sa.mh{i} = sb.mh{i})::INT" for i in range(n_hashes)
+        f"(sa.mh{i} = sb.mh{i})::INT" for i in range(N_HASHES)
     )
     return (
         _minhash_ctes(bucket_cap=bucket_cap)
@@ -973,7 +978,7 @@ est AS (
   FROM cand c
   JOIN sigs sa ON sa.doc_id = c.doc_a
   JOIN sigs sb ON sb.doc_id = c.doc_b
-  WHERE ({agree}) >= {est_min_agree}
+  WHERE ({agree}) >= {EST_MIN_AGREE}
 ),
 sets AS (SELECT doc_id, list_distinct(hs) AS sh FROM hashed)
 SELECT doc_a, doc_b, jaccard FROM (
@@ -991,14 +996,13 @@ WHERE jaccard >= {threshold}
 
 
 def _dedup_components_oracle(
-    threshold: float = 0.8, n_hashes: int = 16, est_min_agree: int = 8,
-    bucket_cap: int | None = 100,
+    threshold: float = 0.8, bucket_cap: int | None = 100
 ) -> str:
     """Recursive-CTE reachability closure over the verified Jaccard
     pairs: component_id = min node id reachable — value-for-value the
     fixpoint min-label propagation computes in Spark."""
     agree = " + ".join(
-        f"(sa.mh{i} = sb.mh{i})::INT" for i in range(n_hashes)
+        f"(sa.mh{i} = sb.mh{i})::INT" for i in range(N_HASHES)
     )
     ctes = _minhash_ctes(bucket_cap=bucket_cap).replace(
         "WITH shing", "WITH RECURSIVE shing", 1
@@ -1011,7 +1015,7 @@ est AS (
   FROM cand c
   JOIN sigs sa ON sa.doc_id = c.doc_a
   JOIN sigs sb ON sb.doc_id = c.doc_b
-  WHERE ({agree}) >= {est_min_agree}
+  WHERE ({agree}) >= {EST_MIN_AGREE}
 ),
 sets AS (SELECT doc_id, list_distinct(hs) AS sh FROM hashed),
 vpairs AS (
@@ -1240,14 +1244,14 @@ WHERE list_dot_product(a.v, b.v) / (a.norm * b.norm) >= {threshold}
 """
 
 
-def _simhash_oracle(bits: int = 32) -> str:
+def _simhash_oracle() -> str:
     votes = ", ".join(
         f"sum(case when ((h >> {b}) & 1) = 1 then 1 else -1 end) AS v{b}"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     sig = " + ".join(
         f"(case when v{b} > 0 then {1 << b}::BIGINT else 0::BIGINT end)"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     return f"""
 WITH tok AS (

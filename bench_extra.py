@@ -7,7 +7,8 @@ This file keeps the query-level tools that plan-equality checks use:
   python bench_extra.py queries [q ...]     noop-sink time per query, N passes
                                             (SPARK_GRAFT_BENCH_PASSES, def 3)
   python bench_extra.py explain <outdir> [q ...]
-                                            dump .explain("formatted") per query
+                                            dump .explain("formatted") per query,
+                                            ids masked (diff -r two outdirs)
   python bench_extra.py explain_internal <outdir>
                                             dump the pre-finalize plans of the
                                             dedup/ANN operators
@@ -22,6 +23,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import re
 import sys
 import time
 from contextlib import redirect_stdout
@@ -71,18 +73,27 @@ def run_queries(spark, sf_dir, names):
     }))
 
 
+# per-session ids: expression ids (#123), exchange plan ids and RDD ids
+_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def _write_plan(df, outdir, name):
+    """Write ``df.explain("formatted")`` with its per-session ids masked,
+    so plans from two checkouts compare with a plain ``diff -r``."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
+        f.write(_IDS.sub(r"\1N", buf.getvalue()))
+    print(f"explained {name}", file=sys.stderr)
+
+
 def run_explain(spark, sf_dir, outdir, names):
     queries = E.queries()
     names = names or list(queries)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        df = queries[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-            f.write(buf.getvalue())
-        print(f"explained {name}", file=sys.stderr)
+        _write_plan(queries[name](spark, sf_dir), outdir, name)
 
 
 def run_explain_internal(spark, sf_dir, outdir):
@@ -114,12 +125,7 @@ def run_explain_internal(spark, sf_dir, outdir):
                 ),
         }
         for name, df in targets.items():
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-                f.write(buf.getvalue())
-            print(f"explained {name}", file=sys.stderr)
+            _write_plan(df, outdir, name)
     finally:
         dedup.finalize = similarity.finalize = orig_fin
 

@@ -15,8 +15,11 @@ tasks, where an extra exchange of the corpus would be pure waste.
 ONLY when the physical scan yields fewer partitions than the session's
 default parallelism, and is a no-op (no exchange in the plan at all)
 otherwise. The partition count comes from the compiled physical plan
-(``df.rdd.getNumPartitions()`` — planning only, no job), so the decision
-tracks file layout and config rather than hard-coding either scale.
+(``df.rdd.getNumPartitions()``), so the decision tracks file layout and
+config rather than hard-coding either scale. That is planning only, with
+no job, for a plan WITHOUT an exchange (a scan and narrow operators);
+on a shuffled plan AQE runs the shuffle stage to learn the count — so
+call it once, on the operator's input, never on an already-spread frame.
 
 Used by operators whose heavy work would otherwise fuse into the scan:
 minhash/ngram shingling, simhash token hashing, tf-idf tokenization, and

@@ -58,8 +58,11 @@ def build_session(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # skip per-DataFrame-call Python stack capture + the JVM origin
         # round trip (PySpark's own "reduce performance slowdown" knob):
-        # the extraction pipeline builds ~10k Column expressions per plan
-        # and construction is driver-latency-bound, not error-context-bound
+        # the extraction plan is SQL text now (~60 Py4J round trips per
+        # extract()), but the dedup and ANN operators still build theirs
+        # from DataFrame/Column calls (~200 round trips per
+        # minhash_lsh_pairs), each of which would add a stack capture and
+        # another round trip
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
