@@ -964,9 +964,11 @@ def _minhash_lsh_oracle() -> str:
     return _minhash_ctes() + "\nSELECT doc_a, doc_b FROM cand\n"
 
 
-def _ngram_jaccard_oracle(
-    threshold: float = 0.8, bucket_cap: int | None = 100
-) -> str:
+def _verified_pairs_ctes(threshold: float, bucket_cap: int | None) -> str:
+    """The CTE chain of ngram_jaccard_pairs: ``_minhash_ctes`` candidates,
+    the EST_MIN_AGREE signature-agreement prefilter (``est``), distinct
+    shingle-hash sets and the exact-Jaccard verify (``vpairs``: doc_a,
+    doc_b, jaccard at or above ``threshold``)."""
     agree = " + ".join(
         f"(sa.mh{i} = sb.mh{i})::INT" for i in range(N_HASHES)
     )
@@ -980,46 +982,9 @@ est AS (
   JOIN sigs sb ON sb.doc_id = c.doc_b
   WHERE ({agree}) >= {EST_MIN_AGREE}
 ),
-sets AS (SELECT doc_id, list_distinct(hs) AS sh FROM hashed)
-SELECT doc_a, doc_b, jaccard FROM (
-  SELECT e.doc_a, e.doc_b,
-         len(list_intersect(a.sh, b.sh))::DOUBLE
-         / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::DOUBLE
-         AS jaccard
-  FROM est e
-  JOIN sets a ON a.doc_id = e.doc_a
-  JOIN sets b ON b.doc_id = e.doc_b
-)
-WHERE jaccard >= {threshold}
-"""
-    )
-
-
-def _dedup_components_oracle(
-    threshold: float = 0.8, bucket_cap: int | None = 100
-) -> str:
-    """Recursive-CTE reachability closure over the verified Jaccard
-    pairs: component_id = min node id reachable — value-for-value the
-    fixpoint min-label propagation computes in Spark."""
-    agree = " + ".join(
-        f"(sa.mh{i} = sb.mh{i})::INT" for i in range(N_HASHES)
-    )
-    ctes = _minhash_ctes(bucket_cap=bucket_cap).replace(
-        "WITH shing", "WITH RECURSIVE shing", 1
-    )
-    return (
-        ctes
-        + f""",
-est AS (
-  SELECT c.doc_a, c.doc_b
-  FROM cand c
-  JOIN sigs sa ON sa.doc_id = c.doc_a
-  JOIN sigs sb ON sb.doc_id = c.doc_b
-  WHERE ({agree}) >= {EST_MIN_AGREE}
-),
 sets AS (SELECT doc_id, list_distinct(hs) AS sh FROM hashed),
 vpairs AS (
-  SELECT doc_a, doc_b FROM (
+  SELECT doc_a, doc_b, jaccard FROM (
     SELECT e.doc_a, e.doc_b,
            len(list_intersect(a.sh, b.sh))::DOUBLE
            / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::DOUBLE
@@ -1029,7 +994,31 @@ vpairs AS (
     JOIN sets b ON b.doc_id = e.doc_b
   )
   WHERE jaccard >= {threshold}
-),
+)"""
+    )
+
+
+def _ngram_jaccard_oracle(
+    threshold: float = 0.8, bucket_cap: int | None = 100
+) -> str:
+    return (
+        _verified_pairs_ctes(threshold, bucket_cap)
+        + "\nSELECT doc_a, doc_b, jaccard FROM vpairs\n"
+    )
+
+
+def _dedup_components_oracle(
+    threshold: float = 0.8, bucket_cap: int | None = 100
+) -> str:
+    """Recursive-CTE reachability closure over the verified Jaccard
+    pairs: component_id = min node id reachable — value-for-value the
+    fixpoint min-label propagation computes in Spark."""
+    ctes = _verified_pairs_ctes(threshold, bucket_cap).replace(
+        "WITH shing", "WITH RECURSIVE shing", 1
+    )
+    return (
+        ctes
+        + """,
 edges AS (
   SELECT doc_a AS u, doc_b AS v FROM vpairs
   UNION

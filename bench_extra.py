@@ -10,8 +10,8 @@ This file keeps the query-level tools that plan-equality checks use:
                                             dump .explain("formatted") per query,
                                             ids masked (diff -r two outdirs)
   python bench_extra.py explain_internal <outdir>
-                                            dump the pre-finalize plans of the
-                                            dedup/ANN operators
+                                            dump the lazy (unmaterialized)
+                                            plans of the dedup/ANN operators
 
 Env contract matches bench.py: $SPARK_GRAFT_SF_DIR (default sf0.1),
 $SPARK_GRAFT_CPUS (default: the cores this process may run on). Jobs are
@@ -98,14 +98,16 @@ def run_explain(spark, sf_dir, outdir, names):
 
 def run_explain_internal(spark, sf_dir, outdir):
     """Dump the PRE-finalize plans of operators whose public query returns
-    a checkpointed leaf (ngram verify, ANN top-k): finalize is
-    monkeypatched to identity so the full lazy plan is visible. For plan
-    inspection only — results are NOT computed here."""
+    a checkpointed leaf (ngram verify, ANN top-k): finalize and the dedup
+    operators' materialize are monkeypatched to identity, so the full
+    lazy plan is visible and no checkpoint job runs. For plan inspection
+    only — results are NOT computed here."""
     from tesseract_recognize_spark.operators import dedup, similarity
 
-    orig_fin = dedup.finalize
-    # the operator modules bound the name at import time
+    orig_fin, orig_mat = dedup.finalize, dedup.materialize
+    # the operator modules bound the names at import time
     dedup.finalize = similarity.finalize = lambda result, persisted: result
+    dedup.materialize = lambda df: df
     try:
         from tesseract_recognize_spark.sources.testdata import load_table
 
@@ -128,6 +130,7 @@ def run_explain_internal(spark, sf_dir, outdir):
             _write_plan(df, outdir, name)
     finally:
         dedup.finalize = similarity.finalize = orig_fin
+        dedup.materialize = orig_mat
 
 
 def main():

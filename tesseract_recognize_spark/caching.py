@@ -1,23 +1,44 @@
-"""Block-manager hygiene for operators that persist intermediates.
+"""Block-manager hygiene for operators that keep intermediates.
 
-Several operators persist corpus-sized projections because the plan
+Several operators keep corpus-sized projections because the plan
 references them from multiple consumers that Catalyst will not
-deduplicate (self-join sides, candidate + verify branches). Left
-persisted, those blocks outlive the query — a leak in long-lived
+deduplicate (self-join sides, candidate + verify branches). Left in the
+block manager, those blocks outlive the query — a leak in long-lived
 sessions (round-4 judge finding). The invariant enforced here: an
-operator that persists OWNS the cleanup. It materializes its (small by
-construction — top-k rows, thresholded pair lists) result eagerly, then
-unpersists every corpus-sized intermediate before returning, so the only
+operator that keeps an intermediate OWNS the cleanup. It materializes
+its (small by construction — top-k rows, thresholded pair lists) result
+eagerly, then frees every intermediate before returning, so the only
 blocks that survive the call are the result's own localCheckpoint
 blocks, O(|result|), freed by Spark's ContextCleaner when the caller
 drops the reference — the standard localCheckpoint lifecycle
 ``connected_components`` already relies on.
 
-Trade-off, documented at each call site: the returned DataFrame is a
-materialized LogicalRDD leaf, so a caller's later filters no longer push
-into the operator's plan. Every operator using this helper returns a
-terminal, bounded result (ANN top-k, verified duplicate pairs) where
-that pushdown had nothing left to prune.
+An intermediate is kept one of two ways, and ``release`` (so also
+``finalize``) frees both:
+
+  * ``persist`` — lazy: the first action that reads it computes the
+    blocks, and under AQE each further reference submits its own
+    near-empty materialization job.
+  * ``materialize`` — an eager localCheckpoint: one job computes the
+    blocks, and the frame becomes a LogicalRDD leaf over them, so later
+    readers carry no lineage and start no materialization job. Unlike a
+    persisted plan, the checkpointed query's exchanges may be coalesced
+    by AQE, so a caller that needs a wide stage pins it with an explicit
+    ``repartition``; and the leaf's size estimate is its plan's
+    estimate, not the materialized size.
+
+Trade-offs, documented at each call site:
+  * a materialized frame (and ``finalize``'s result) cannot be
+    recomputed: if an executor holding its blocks is lost, a later read
+    fails instead of re-running the lineage. A persisted frame would
+    recompute, but ``finalize`` and ``connected_components``' round
+    generations already accept this for their results, and an
+    intermediate lives only for the operator's own call;
+  * the returned DataFrame is a LogicalRDD leaf, so a caller's later
+    filters no longer push into the operator's plan. Every operator
+    using this module returns a terminal, bounded result (ANN top-k,
+    verified duplicate pairs) where that pushdown had nothing left to
+    prune.
 """
 
 from __future__ import annotations
@@ -26,30 +47,55 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame
 
-__all__ = ["finalize"]
+__all__ = ["finalize", "materialize", "release"]
 
 
-def finalize(result: DataFrame, persisted: Iterable[DataFrame]) -> DataFrame:
-    """Eagerly materialize ``result`` (localCheckpoint: one computation,
-    lineage truncated off the persisted intermediates), then unpersist
-    every DataFrame in ``persisted`` — unconditionally (try/finally), so a
-    failed query never strands corpus-sized blocks in the block manager."""
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` computed now, once, as lineage-free checkpoint blocks (an
+    eager localCheckpoint); free it with ``release`` or ``finalize``."""
+    return df.localCheckpoint(eager=True)
+
+
+def _free(df: DataFrame) -> None:
+    """Drop ``df``'s blocks: its cache entry if it was persisted, its
+    checkpoint RDD if it was materialized."""
+    df.unpersist(blocking=True)
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return
+    rdd = plan.rdd()
+    if rdd.isCheckpointed():
+        # what Spark's ContextCleaner runs for a dropped checkpoint;
+        # RDD.unpersist would also log a lineage-truncated WARN per call
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), True)
+
+
+def release(frames: Iterable[DataFrame]) -> None:
+    """Free every DataFrame in ``frames`` — persisted or materialized.
+    Every free runs even if an earlier one raises (one failure must not
+    strand the remaining blocks — the exact leak this module exists to
+    prevent); the first error is re-raised after all of them have run.
+    Blocking: the no-blocks-after-return invariant is asserted by
+    tests/test_caching.py; async removal would race it."""
+    first_err = None
+    for df in frames:
+        try:
+            _free(df)
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            if first_err is None:
+                first_err = exc
+    if first_err is not None:
+        raise first_err
+
+
+def finalize(
+    result: DataFrame, intermediates: Iterable[DataFrame]
+) -> DataFrame:
+    """Materialize ``result`` (one computation, lineage truncated off the
+    intermediates), then ``release`` every intermediate —
+    unconditionally (try/finally), so a failed query never strands
+    corpus-sized blocks in the block manager."""
     try:
-        return result.localCheckpoint(eager=True)
+        return materialize(result)
     finally:
-        # every unpersist runs even if an earlier one raises (one failure
-        # must not strand the remaining blocks — the exact leak this
-        # module exists to prevent); the first error is re-raised after
-        # all of them have run
-        first_err = None
-        for df in persisted:
-            try:
-                # blocking: the no-blocks-after-return invariant is
-                # asserted by tests/test_caching.py; async removal would
-                # race it
-                df.unpersist(blocking=True)
-            except Exception as exc:  # noqa: BLE001 — re-raised below
-                if first_err is None:
-                    first_err = exc
-        if first_err is not None:
-            raise first_err
+        release(intermediates)

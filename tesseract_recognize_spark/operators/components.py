@@ -30,62 +30,64 @@ orchestrates rounds and checks convergence (an intentional sync point,
 the same pattern GraphX/GraphFrames use for iterative algorithms; Spark
 has no native fixpoint operator). Below ``driver_max_edges`` distinct
 symmetric edges, an adaptive fast path computes the identical closure as
-driver-side union-find instead — one distributed round costs more than
-the whole closure there (see ``connected_components``).
+driver-side union-find instead, over the pair list collected in one
+bounded job — one distributed round costs more than the whole closure
+there (see ``connected_components``).
 
-Lineage/memory discipline: every generation is localCheckpoint(eager)
-(persist alone would cache blocks but the LOGICAL plan still nests every
-prior round — plan-analysis cost compounds per iteration, the classic
-iterative-Spark trap; localCheckpoint truncates lineage to the
-materialized blocks). Superseded generations are rebound and their
-blocks freed by Spark's ContextCleaner once the driver reference drops —
-GC-based cleanup (PySpark exposes no direct unpersist for checkpoint
-blocks); steady-state footprint is O(1) generations alive plus whatever
-the cleaner hasn't yet swept, never the full round history under memory
-pressure (MEMORY_AND_DISK evicts oldest first).
+Lineage/memory discipline: the edge list and every generation are
+materialized (``caching.materialize``: an eager localCheckpoint — persist
+alone would cache blocks but the LOGICAL plan still nests every prior
+round, so plan-analysis cost compounds per iteration, the classic
+iterative-Spark trap; the checkpoint truncates lineage to the
+materialized blocks). The edge list is released explicitly when the
+call returns (``caching.release``); superseded generations are rebound
+and their blocks freed by Spark's ContextCleaner once the driver
+reference drops, so the steady-state footprint is O(1) generations
+alive plus whatever the cleaner hasn't yet swept, never the full round
+history. Like every checkpoint, a generation cannot be recomputed: an
+executor lost mid-call fails the call (see ``caching``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StructField, StructType
+
+from tesseract_recognize_spark.caching import materialize, release
 
 __all__ = ["connected_components"]
 
 
-def _prep_edges(pairs: DataFrame, src: str, dst: str):
-    """Distinct symmetric edge list (u, v); persisted+materialized so the
-    (possibly expensive — e.g. a full Jaccard verify) pair subtree runs
-    once, not per union branch per round. Returns (edges, edge_count) —
-    the materializing count doubles as the size probe for the adaptive
-    driver fast path."""
-    from pyspark import StorageLevel
-
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    fwd = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    edges = (
-        fwd.unionByName(
-            pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+def _prep_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct symmetric edge list (u, v), materialized so the (possibly
+    expensive — e.g. a full Jaccard verify) pair subtree runs once, not
+    per round. Each pair row emits both orientations in one pass; a
+    union of two projections would run the subtree once per branch."""
+    both = F.array(
+        F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+        F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
     )
-    n = edges.count()  # materialize once, before any reuse
-    pairs.unpersist()
-    return edges, n
+    return materialize(
+        pairs.select(F.inline(both)).where(F.col("u") != F.col("v")).distinct()
+    )
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
-    """Exact min-label closure on the driver, for edge lists below the
-    adaptive threshold: path-compressed union-find with union-by-minimum,
+def _driver_components(pdf, max_edges: int):
+    """Exact min-label closure on the driver over the collected (u, v)
+    pair rows (u != v; duplicates and either orientation allowed), or
+    ``None`` when there are more than ``max_edges`` rows or distinct
+    symmetric edges: path-compressed union-find with union-by-minimum,
     so each set's root IS its minimum id — the identical
     (node, component-min) labeling both distributed algorithms converge
-    to, computed in one pass over the collected edges."""
+    to, computed in one pass over the rows."""
     import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    spark = edges.sparkSession
-    pdf = edges.toPandas()  # symmetric, distinct; bounded by the caller
+    if len(pdf) > max_edges:
+        return None
+    us, vs = pdf["u"].tolist(), pdf["v"].tolist()
+    undirected = {(u, v) if u < v else (v, u) for u, v in zip(us, vs)}
+    if 2 * len(undirected) > max_edges:
+        return None
     parent: dict = {}
 
     def find(x):
@@ -96,32 +98,23 @@ def _driver_components(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for u, v in zip(pdf["u"], pdf["v"]):
+    for u, v in undirected:
         ru, rv = find(u), find(v)
         if ru != rv:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru  # larger root under smaller: root == set min
-    nodes = pdf["u"].drop_duplicates()  # symmetric edges: u covers all
-    out = pd.DataFrame(
+    nodes = list(dict.fromkeys(us + vs))
+    return pd.DataFrame(
         {"node": nodes, "component_id": [find(n) for n in nodes]}
     )
-    utype = edges.schema["u"].dataType
-    schema = StructType(
-        [
-            StructField("node", utype, True),
-            StructField("component_id", utype, True),
-        ]
-    )
-    return spark.createDataFrame(out, schema=schema)
 
 
 def _label_propagation(edges: DataFrame, max_iter: int) -> DataFrame:
-    labels = (
+    labels = materialize(
         edges.select("u")
         .distinct()
         .select(F.col("u").alias("node"), F.col("u").alias("component_id"))
-        .localCheckpoint(eager=True)
     )
 
     def label_sum(df: DataFrame):
@@ -140,11 +133,10 @@ def _label_propagation(edges: DataFrame, max_iter: int) -> DataFrame:
         prop = edges.join(
             labels, edges["v"] == labels["node"]
         ).select(edges["u"].alias("node"), "component_id")
-        labels = (
+        labels = materialize(
             labels.unionByName(prop)
             .groupBy("node")
             .agg(F.min("component_id").alias("component_id"))
-            .localCheckpoint(eager=True)
         )
         new = label_sum(labels)
         if new == cur:
@@ -230,16 +222,14 @@ def _alternating_star(edges: DataFrame, max_iter: int) -> DataFrame:
     match is the equality confirmed exactly (equal counts + empty
     exceptAll — both generations are distinct edge sets), so the exact
     check runs once at the fixpoint instead of every round."""
-    cur = (
+    cur = materialize(
         edges.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     cur_sig = _edge_sig(cur)
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        nxt = materialize(_small_star(_large_star(cur)))
         nxt_sig = _edge_sig(nxt)
         if nxt_sig == cur_sig and nxt.exceptAll(cur).isEmpty():
             return nxt.select(
@@ -276,30 +266,50 @@ def connected_components(
     large-star/small-star, O(log n)-ish rounds — long-chain graphs).
 
     ``driver_max_edges`` — adaptive small-graph fast path (the broadcast-
-    small-side pattern applied to the fixpoint): when the DISTINCT
-    symmetric edge count (known from the materializing count this
-    operator already pays) is at or below the threshold, the exact
-    closure runs as driver-side union-find instead of a distributed
-    round loop. A verified near-duplicate pair list is bounded by the
-    duplicate rate, not the corpus, so it is routinely thousands of rows
-    — where every distributed round costs more in job scheduling and
-    32-way exchanges than the entire union-find (measured sf0.1: ~1-2 s
-    of round jobs for 50 edges). 200k edges ≈ a few MB collected — far
-    under any sane ``spark.driver.maxResultSize`` — and beyond the
-    threshold the distributed loops take over unchanged; ``algorithm``
-    selects between them only there. Set ``driver_max_edges=0`` to force
-    the distributed path (the loop tests do)."""
+    small-side pattern applied to the fixpoint): when the graph has at
+    most this many DISTINCT symmetric edges, the exact closure runs as
+    driver-side union-find instead of a distributed round loop. A
+    verified near-duplicate pair list is bounded by the duplicate rate,
+    not the corpus, so it is routinely thousands of rows — where every
+    distributed round costs more in job scheduling and exchanges than
+    the entire union-find (measured sf0.1: ~1-2 s of round jobs for 50
+    edges). The size probe IS the collect: one job brings back at most
+    ``driver_max_edges + 1`` pair rows (with Arrow on, as
+    ``build_session`` sets it, the collect of a limit runs as one job; a
+    row collect of a limit runs one job per round of partitions it
+    scans). A full pair list is checked on the driver
+    against the threshold; a list that hits the limit takes the loops
+    without being counted, which decides differently from counting only
+    for a list holding each pair more than twice. 200k edges ≈ a few MB
+    collected — far under any sane ``spark.driver.maxResultSize`` — and
+    beyond the threshold the distributed loops take over unchanged;
+    ``algorithm`` selects between them only there. Set
+    ``driver_max_edges=0`` to force the distributed path (the loop tests
+    do)."""
     if algorithm not in ("label", "star"):
         raise ValueError(
             f"connected_components: unknown algorithm {algorithm!r} "
             '(expected "label" or "star")'
         )
-    edges, n_edges = _prep_edges(pairs, src, dst)
+    fwd = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u") != F.col("v")
+    )
+    out = _driver_components(
+        fwd.limit(driver_max_edges + 1).toPandas(), driver_max_edges
+    )
+    if out is not None:
+        utype = fwd.schema["u"].dataType
+        schema = StructType(
+            [
+                StructField("node", utype, True),
+                StructField("component_id", utype, True),
+            ]
+        )
+        return pairs.sparkSession.createDataFrame(out, schema=schema)
+    edges = _prep_edges(pairs, src, dst)
     try:
-        if n_edges <= driver_max_edges:
-            return _driver_components(edges)
         if algorithm == "star":
             return _alternating_star(edges, max_iter)
         return _label_propagation(edges, max_iter)
     finally:
-        edges.unpersist()
+        release([edges])

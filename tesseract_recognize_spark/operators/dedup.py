@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from tesseract_recognize_spark.caching import finalize
+from tesseract_recognize_spark.caching import finalize, materialize
 from tesseract_recognize_spark.partitioning import spread_small_scan
 
 __all__ = [
@@ -97,7 +97,10 @@ def _shingle_hashes(docs: DataFrame, text_col: str) -> DataFrame:
 
 
 def _band_table(
-    spread_docs: DataFrame, text_col: str, bucket_cap: int | None
+    spread_docs: DataFrame,
+    text_col: str,
+    bucket_cap: int | None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Rows (doc_id, mh0..mh{N_HASHES-1}, band_id, band_hash): each
     document's MinHash signature, once per LSH band.
@@ -119,7 +122,11 @@ def _band_table(
     Buckets larger than the cap are dropped wholesale: one window count
     over the same (band_id, band_hash) key the join shuffles on, so the
     cap rides the join's own exchange. The DuckDB oracle mirrors it
-    (count(*) over the bucket)."""
+    (count(*) over the bucket).
+
+    ``partitions``: hash-partition the band rows on their bucket key into
+    exactly this many partitions — an explicit repartition, which AQE
+    does not coalesce and the cap's window reuses as its own exchange."""
     aggs = []
     for i in range(N_HASHES):
         a, b = mh_coeffs(i)
@@ -136,6 +143,8 @@ def _band_table(
         *[f"mh{i}" for i in range(N_HASHES)],
         f"posexplode(array({band_hashes})) AS (band_id, band_hash)",
     )
+    if partitions:
+        bands = bands.repartition(partitions, "band_id", "band_hash")
     if not bucket_cap:
         return bands
     return (
@@ -263,8 +272,9 @@ def ngram_jaccard_pairs(
          verify-prefilter trade, mirrored exactly by the oracle;
       3. exact Jaccard on DISTINCT SHINGLE HASH SETS (int64 arrays — far
          cheaper to shuffle and intersect than shingle strings), built ONLY
-         for doc_ids surviving the prefilter (broadcast semi-join): the
-         verify shuffle is proportional to candidates, not corpus.
+         for doc_ids surviving the prefilter (a join with the distinct
+         candidate ids): the verify shuffle is proportional to
+         candidates, not corpus.
          |∩| / (|a| + |b| - |∩|), exact int/double arithmetic.
 
     ``bucket_cap`` (see ``_band_table``): a true near-dup pair is lost only
@@ -272,63 +282,70 @@ def ngram_jaccard_pairs(
     cap 100) the pair lives exclusively inside >cap-sized boilerplate
     clusters, which exact dedup / minhash_lsh_pairs already handle.
 
-    Caching note: the post-cap band table and ``prefiltered`` are
-    persisted (MEMORY_AND_DISK) because each feeds multiple consumers
-    that Catalyst does not deduplicate under AQE: unpersisted, each
-    self-join side re-ran the shingle-explode + 16-aggregate pipeline,
-    the band-hash projection and the bucket-cap window (its own exchange)
-    — measured rounds 2 and 6. The OPERATOR owns cleanup (round-4
-    invariant): the verified pair list — bounded by the duplicate rate,
-    not the corpus — materializes eagerly and every intermediate is freed
-    before return (``caching.finalize``).
+    Materialization note: the post-cap band table, ``prefiltered`` and
+    the candidate shingle sets each feed multiple consumers that Catalyst
+    does not deduplicate under AQE (left lazy, each self-join side re-ran
+    the shingle-explode + 16-aggregate pipeline, the band-hash projection
+    and the bucket-cap window — measured rounds 2 and 6), so each is
+    computed once as lineage-free checkpoint blocks
+    (``caching.materialize``); persisted instead, every further reference
+    ran its own near-empty materialization job. AQE coalesces a
+    checkpointed query's exchanges (a persisted plan's it did not), so
+    the band table, the shingle-set aggregate and the verify joins each
+    pin their stage at ``defaultParallelism`` with an explicit
+    repartition. Executor loss while the call runs fails the query
+    instead of recomputing an intermediate (see ``caching``). The
+    OPERATOR owns cleanup (round-4 invariant): the verified pair list —
+    bounded by the duplicate rate, not the corpus — materializes eagerly
+    and every intermediate is freed before return
+    (``caching.finalize``).
     """
-    from pyspark import StorageLevel
-
     # one spread serves both consumers of docs: the band table and the
     # verify-stage shingle rebuild
     docs = spread_small_scan(docs, "doc_id")
-    bands = _band_table(docs, text_col, bucket_cap).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    prefiltered = _band_pairs(bands, EST_MIN_AGREE).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    bands = materialize(_band_table(docs, text_col, bucket_cap, par))
+    prefiltered = materialize(_band_pairs(bands, EST_MIN_AGREE))
     # Build shingle sets ONLY for documents that appear in a candidate pair:
-    # semi-join docs to the candidate doc_id set first. Without this,
+    # join the candidate doc_id set to docs first. Without this,
     # verification aggregates collect_set(h) over EVERY document's shingles —
     # a full-corpus shuffle to verify a handful of pairs. No broadcast
-    # HINT: the candidate set is usually tiny (AQE converts to a broadcast
-    # semi-join at runtime) but is not provably bounded — on a pathological
-    # mostly-duplicate corpus AQE degrades to a shuffled semi-join instead
-    # of OOMing the driver.
+    # HINT: the candidate set is usually tiny but is not provably bounded.
+    # The ids are hash-partitioned at cluster parallelism and the join
+    # keeps that partitioning, so shingle hashing and collect_set run in
+    # that stage at its width: the planner broadcasts docs into it while
+    # docs' size estimate is under the broadcast threshold and shuffles
+    # docs on doc_id past it. (A checkpoint's size estimate is its plan's
+    # join product, so the candidate side never looks small to the
+    # planner; as a semi-join's right side it made docs shuffle in full.)
+    # Against distinct ids an inner join keeps each doc row once, like a
+    # semi-join, but may build on either side.
     cand_ids = (
-        prefiltered.select(F.col("doc_a").alias("doc_id"))
-        .union(prefiltered.select(F.col("doc_b").alias("doc_id")))
+        prefiltered.selectExpr("explode(array(doc_a, doc_b)) AS doc_id")
+        .repartition(par, "doc_id")
         .distinct()
     )
-    docs_c = docs.join(cand_ids, "doc_id", "left_semi")
-    # persisted: `sets` feeds BOTH pair sides below and Catalyst does not
-    # deduplicate the two references — unpersisted, the whole semi-join +
+    # `sets` feeds BOTH pair sides below and Catalyst does not deduplicate
+    # the two references — recomputed, the whole candidate join +
     # shingle-explode + collect_set pipeline executed twice (measured in
     # the round-6 event-log audit: two identical ~3.4s stages per query)
-    sets = (
-        _shingle_hashes(docs_c, text_col)
+    sets = materialize(
+        _shingle_hashes(cand_ids.join(docs, "doc_id"), text_col)
         .groupBy("doc_id")
         .agg(F.collect_set("h").alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     # The per-pair intersect is row-expensive but byte-light — exactly the
     # shape AQE's byte-based partition coalescing collapses onto ONE task
     # (a few MB of pair keys ⇒ one partition ⇒ a serial verify; measured
-    # 2×3.4s single-task stages at sf0.1). An explicit repartition pins
-    # the verify stage at cluster parallelism; it replaces (not adds to)
-    # the join's own exchange of the pair list.
-    par = prefiltered.sparkSession.sparkContext.defaultParallelism
+    # 2×3.4s single-task stages at sf0.1). An explicit repartition before
+    # each join pins its stage at cluster parallelism; each replaces (not
+    # adds to) that join's own exchange of the pair list.
     joined = (
         prefiltered.repartition(par, "doc_a")
         .join(a, "doc_a")
+        .repartition(par, "doc_b")
         .join(b, "doc_b")
     )
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))

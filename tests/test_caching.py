@@ -93,21 +93,26 @@ def test_connected_components_frees_edges(spark):
         "doc_a: bigint, doc_b: bigint",
     )
     for alg in ("label", "star"):
-        before = _n_persisted(spark)
-        out = connected_components(pairs, algorithm=alg)
-        got = {r["node"]: r["component_id"] for r in out.collect()}
-        assert got == {1: 1, 2: 1, 3: 1}
-        # edges/pairs persists freed; label/edge generations are
-        # localCheckpoints cleaned by ContextCleaner (GC-based), so a
-        # small constant of those (rounds+1 on this 2-hop graph) may
-        # linger until the next sweep — never the explicit persists
-        assert _n_persisted(spark) - before <= 5
+        for driver_max_edges in (200_000, 0):
+            before = _n_persisted(spark)
+            out = connected_components(
+                pairs, algorithm=alg, driver_max_edges=driver_max_edges
+            )
+            got = {r["node"]: r["component_id"] for r in out.collect()}
+            assert got == {1: 1, 2: 1, 3: 1}
+            # the driver path keeps no blocks; the loops release their
+            # edge list, and their label/edge generations are
+            # localCheckpoints cleaned by ContextCleaner (GC-based), so a
+            # small constant of those (rounds+1 on this 2-hop graph) may
+            # linger until the next sweep
+            limit = 5 if driver_max_edges == 0 else 0
+            assert _n_persisted(spark) - before <= limit
 
 
-def test_finalize_runs_every_unpersist_and_reraises_first_error():
-    """One failed unpersist must not strand the remaining blocks: every
-    unpersist runs, then the first error propagates."""
-    from tesseract_recognize_spark.caching import finalize
+def test_finalize_runs_every_unpersist_and_reraises_first_error(monkeypatch):
+    """One failed free must not strand the remaining blocks: every
+    intermediate is freed, then the first error propagates."""
+    from tesseract_recognize_spark import caching
 
     calls = []
 
@@ -116,21 +121,30 @@ def test_finalize_runs_every_unpersist_and_reraises_first_error():
             calls.append(("checkpoint", eager))
             return "checkpointed"
 
-    class _Persisted:
-        def __init__(self, name, fail):
-            self.name, self.fail = name, fail
+    def free(df):
+        name, fail = df
+        calls.append(name)
+        if fail:
+            raise RuntimeError(name)
 
-        def unpersist(self, blocking):
-            calls.append((self.name, blocking))
-            if self.fail:
-                raise RuntimeError(self.name)
-
-    persisted = [_Persisted("a", True), _Persisted("b", False),
-                 _Persisted("c", True)]
+    monkeypatch.setattr(caching, "_free", free)
     with pytest.raises(RuntimeError, match="^a$"):
-        finalize(_Result(), persisted)
-    assert calls == [("checkpoint", True), ("a", True), ("b", True),
-                     ("c", True)]
+        caching.finalize(_Result(), [("a", True), ("b", False), ("c", True)])
+    assert calls == [("checkpoint", True), "a", "b", "c"]
     calls.clear()
-    assert finalize(_Result(), [_Persisted("b", False)]) == "checkpointed"
-    assert calls == [("checkpoint", True), ("b", True)]
+    assert caching.finalize(_Result(), [("b", False)]) == "checkpointed"
+    assert calls == [("checkpoint", True), "b"]
+
+
+def test_release_frees_persisted_and_materialized_frames(spark):
+    """``release`` drops a persisted frame's cache blocks and a
+    materialized frame's checkpoint blocks alike."""
+    from tesseract_recognize_spark.caching import materialize, release
+
+    before = _n_persisted(spark)
+    persisted = spark.range(100).persist()
+    persisted.count()
+    materialized = materialize(spark.range(100).selectExpr("id * 2 AS x"))
+    assert _n_persisted(spark) - before == 2
+    release([persisted, materialized])
+    assert _n_persisted(spark) == before

@@ -1,16 +1,16 @@
 """Plan and construction pins for the MinHash/SimHash dedup operators:
 each operator spreads its input once, ngram_jaccard_pairs' band
-self-join reads the persisted band table on both sides, and building an
-operator's plan costs a bounded number of Py4J round trips."""
+self-join reads the materialized band table on both sides, its wide
+stages run at cluster width, and building an operator's plan costs a
+bounded number of Py4J round trips."""
 
 from __future__ import annotations
 
-import gc
 import random
 
 import pytest
-from py4j.clientserver import ClientServerConnection
 
+from tesseract_recognize_spark import caching
 from tesseract_recognize_spark.operators import dedup
 
 pytestmark = pytest.mark.spark
@@ -66,10 +66,13 @@ def test_each_operator_spreads_its_input_once(spark, docs, monkeypatch):
 
 
 # what may sit between a join and its input: the strategy picks the
-# exchange (and a sort-merge join's sort); the filter is the join keys'
-# isnotnull
+# exchange (and a sort-merge join's sort), AQE wraps exchanges in query
+# stages and shuffle reads, codegen wraps stages and their inputs; the
+# filter is the join keys' isnotnull
 _PASS_THROUGH = {
     "BroadcastExchangeExec", "ShuffleExchangeExec", "SortExec", "FilterExec",
+    "BroadcastQueryStageExec", "ShuffleQueryStageExec", "AQEShuffleReadExec",
+    "InputAdapter", "WholeStageCodegenExec",
 }
 
 
@@ -77,15 +80,15 @@ def _children(node) -> list:
     name = node.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
         return [node.executedPlan()]
-    if name == "InMemoryTableScanExec":
-        return [node.relation().cachedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
     ch = node.children()
     return [ch.apply(i) for i in range(ch.size())]
 
 
 def _walk(node, ident, seen=None):
     """Every distinct physical node, descending into adaptive plans and
-    cached relations."""
+    their query stages."""
     seen = set() if seen is None else seen
     if ident(node) in seen:
         return
@@ -95,75 +98,139 @@ def _walk(node, ident, seen=None):
         yield from _walk(c, ident, seen)
 
 
-def test_band_self_join_reads_the_cached_band_table(spark, docs, monkeypatch):
-    persisted = []
+def _spy_materialize(monkeypatch, on_call):
+    """Route every ``materialize`` of the dedup module — and finalize's,
+    through ``caching`` — through ``on_call(real, df)``."""
+    real = caching.materialize
 
-    def keep(result, to_free):
-        persisted.extend(to_free)
-        return result
+    def spy(df):
+        return on_call(real, df)
 
-    monkeypatch.setattr(dedup, "finalize", keep)
-    df = dedup.ngram_jaccard_pairs(docs)
-    # Building the sibling operators must leave the cache entries alone:
-    # dropping a spark.sql temp view re-caches every unloaded entry whose
-    # plan holds the view's plan, and a signature view would take the
-    # band table out of this plan (each self-join side then recomputes
-    # the whole band pipeline).
-    dedup.minhash_lsh_pairs(docs)
-    dedup.simhash_signature(docs)
-    try:
-        ident = spark._jvm.System.identityHashCode
-        nodes = list(_walk(df._jdf.queryExecution().executedPlan(), ident))
-        joins = [
-            n for n in nodes
-            if n.getClass().getSimpleName().endswith("JoinExec")
-            and "band_id" in n.leftKeys().toString()
-        ]
-        assert len(joins) == 1
-        for side in _children(joins[0]):
-            while side.getClass().getSimpleName() in _PASS_THROUGH:
-                side = _children(side)[0]
-            assert side.getClass().getSimpleName() == "InMemoryTableScanExec"
-            assert "band_hash" in side.output().toString()
-        band_chains = [
-            n for n in nodes
-            if n.getClass().getSimpleName() == "GenerateExec"
-            and "posexplode" in n.generator().toString()
-        ]
-        assert len(band_chains) == 1
-    finally:
-        for p in persisted:
-            p.unpersist()
+    monkeypatch.setattr(dedup, "materialize", spy)
+    monkeypatch.setattr(caching, "materialize", spy)
 
 
-def _round_trips(build) -> int:
-    """Py4J commands sent while ``build()`` constructs its plan. py4j's
-    object-release commands arrive whenever Python frees a JVM handle, so
-    the cheapest of three builds after a warm-up is the count."""
-    send = ClientServerConnection.send_command
-    build()
-    counts = []
-    for _ in range(3):
-        commands = []
+def test_band_self_join_reads_the_materialized_band_table(
+    spark, docs, monkeypatch
+):
+    queries, results = [], []
 
-        def counted(self, command, *args, **kwargs):
-            commands.append(command)
-            return send(self, command, *args, **kwargs)
+    def keep(real, df):
+        out = real(df)
+        queries.append(df)
+        results.append(out)
+        return out
 
-        gc.collect()
-        gc.disable()
-        ClientServerConnection.send_command = counted
+    _spy_materialize(monkeypatch, keep)
+    dedup.ngram_jaccard_pairs(docs)
+    # the band table, the prefiltered pairs, the shingle sets, the result
+    assert len(queries) == 4
+    band_rdd = results[0]._jdf.queryExecution().analyzed().rdd().id()
+    ident = spark._jvm.System.identityHashCode
+    nodes = [
+        n for q in queries
+        for n in _walk(q._jdf.queryExecution().executedPlan(), ident)
+    ]
+    joins = [
+        n for n in nodes
+        if n.getClass().getSimpleName().endswith("JoinExec")
+        and "band_id" in n.leftKeys().toString()
+    ]
+    assert len(joins) == 1
+    for side in _children(joins[0]):
+        while side.getClass().getSimpleName() in _PASS_THROUGH:
+            side = _children(side)[0]
+        assert side.getClass().getSimpleName() == "RDDScanExec"
+        assert side.rdd().id() == band_rdd
+    # the band pipeline runs in the band table's own query only
+    band_chains = [
+        n for n in nodes
+        if n.getClass().getSimpleName() == "GenerateExec"
+        and "posexplode" in n.generator().toString()
+    ]
+    assert len(band_chains) == 1
+
+
+@pytest.fixture()
+def docs_8_files(spark, tmp_path):
+    """perfbench's dedup input shape: 8 parquet files of random-word
+    documents with planted near-duplicates (one word edited)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(7)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(6))
+        for _ in range(2000)
+    ]
+    texts = []
+    for _ in range(300):
+        words = [rng.choice(vocab) for _ in range(40)]
+        texts.append(" ".join(words))
+        if rng.random() < 0.2:
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+            texts.append(" ".join(words))
+    path = tmp_path / "docs"
+    path.mkdir()
+    per = -(-len(texts) // 8)
+    for k in range(8):
+        ids = list(range(k * per, min(len(texts), (k + 1) * per)))
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": pa.array([texts[i] for i in ids], pa.string()),
+            }),
+            str(path / f"part-{k:05d}.parquet"),
+        )
+    return spark.read.parquet(str(path))
+
+
+def test_wide_stages_run_at_cluster_width(spark, docs_8_files, monkeypatch):
+    """A checkpointed query's exchanges are coalesced by AQE, so the
+    band self-join, the candidate shingle-set aggregate and the verify
+    stage must each be pinned at defaultParallelism."""
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    groups = []
+
+    def labelled(real, df):
+        groups.append(f"dedup-width-{len(groups)}")
+        sc.setJobGroup(groups[-1], groups[-1])
         try:
-            build()
+            return real(df)
         finally:
-            ClientServerConnection.send_command = send
-            gc.enable()
-        counts.append(len(commands))
-    return min(counts)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    _spy_materialize(monkeypatch, labelled)
+    out = dedup.ngram_jaccard_pairs(docs_8_files)
+    assert out.count() > 0
+    # the tracker reads what the (asynchronous) listener bus has recorded
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    tracker = sc.statusTracker()
+
+    def ran(group) -> list[int]:
+        """Tasks completed per stage that ran, in stage order (a skipped
+        stage completes none, and the store may already have evicted
+        it)."""
+        stages = sorted(
+            s for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        )
+        infos = filter(None, map(tracker.getStageInfo, stages))
+        return [i.numCompletedTasks for i in infos if i.numCompletedTasks]
+
+    assert len(groups) == 4
+    # every stage reading the band table runs the self-join's width
+    assert max(ran(groups[1])) >= par
+    # the checkpoints of the shingle sets and of the verified pairs are
+    # written by the aggregate and the verify stage
+    assert ran(groups[2])[-1] >= par
+    assert ran(groups[3])[-1] >= par
 
 
-def test_dedup_builds_in_few_py4j_round_trips(spark, docs):
+def test_dedup_builds_in_few_py4j_round_trips(spark, docs, round_trips):
     # a Column-API build sends one command per expression node: ~300
     # for minhash_lsh_pairs and ~140 for simhash_signature
-    assert 0 < _round_trips(lambda: dedup.minhash_lsh_pairs(docs)) <= 250
-    assert 0 < _round_trips(lambda: dedup.simhash_signature(docs)) <= 120
+    assert 0 < round_trips(lambda: dedup.minhash_lsh_pairs(docs)) <= 250
+    assert 0 < round_trips(lambda: dedup.simhash_signature(docs)) <= 120

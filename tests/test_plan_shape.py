@@ -10,7 +10,6 @@ import io
 import re
 
 import pytest
-from py4j.clientserver import ClientServerConnection
 
 from tesseract_recognize_spark.config import ExtractConfig
 from tesseract_recognize_spark.plans.pipeline import extract, extract_crops
@@ -43,22 +42,13 @@ def test_extract_plan_shape(spark, fx_small_path):
 
 
 def test_extract_builds_in_few_py4j_round_trips(
-    spark, fx_small_path, monkeypatch
+    spark, fx_small_path, round_trips
 ):
     # each Column expression is one round trip to the JVM; a plan built
     # from Column calls made ~970 of them per extract()
     docs = spark.read.parquet(fx_small_path)
-    send = ClientServerConnection.send_command
-    commands = []
-
-    def counted(self, command, *args, **kwargs):
-        commands.append(command)
-        return send(self, command, *args, **kwargs)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    extract(docs, ExtractConfig(media_partitions=4))
-    monkeypatch.undo()
-    assert 0 < len(commands) <= 150
+    cfg = ExtractConfig(media_partitions=4)
+    assert 0 < round_trips(lambda: extract(docs, cfg)) <= 150
 
 
 def test_extract_crops_plan_shape(spark, fx_small_docs, fx_small_path):
