@@ -28,6 +28,10 @@ from tesseract_recognize_spark.functions.codecs import (
     tiff_encode,
 )
 from tesseract_recognize_spark.functions.png import png_encode
+from tesseract_recognize_spark.operators.components import (
+    DRIVER_MAX_EDGES,
+    connected_components,
+)
 from tesseract_recognize_spark.operators.dedup import (
     BAND_SIZE,
     EST_MIN_AGREE,
@@ -47,6 +51,7 @@ from tesseract_recognize_spark.operators.similarity import (
     lsh_topk,
 )
 from tesseract_recognize_spark.operators.textstats import (
+    QUANTILE_PS,
     STOPWORDS,
     doc_fingerprint,
     langid_stopwords,
@@ -474,17 +479,13 @@ def q_events_window_rollup(spark, sf_dir):
     )
 
 
-def q_dedup_components(spark, sf_dir):
-    # pairwise near-dup verdicts -> clusters: min-label propagation over
+def _components_query(spark, sf_dir, driver_max_edges):
+    # pairwise near-dup verdicts -> clusters: connected components over
     # the verified Jaccard pairs (operators/components.py), singletons
     # coalesced to themselves; keeper = component minimum
-    from tesseract_recognize_spark.operators.components import (
-        connected_components,
-    )
-
     docs = _docs(spark, sf_dir)
     pairs = ngram_jaccard_pairs(docs, threshold=0.8).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
+    labels = connected_components(pairs, driver_max_edges=driver_max_edges)
     asg = (
         docs.select("doc_id")
         .join(labels, docs["doc_id"] == labels["node"], "left")
@@ -500,43 +501,21 @@ def q_dedup_components(spark, sf_dir):
         F.count("*").over(w).cast("bigint").alias("component_size"),
         (F.col("doc_id") == F.col("component_id")).alias("is_keeper"),
     )
+
+
+def q_dedup_components(spark, sf_dir):
+    # the verified pair list (50 symmetric edges at sf0.01, 458 at sf0.1)
+    # sits far below the default threshold: driver-side union-find
+    return _components_query(spark, sf_dir, DRIVER_MAX_EDGES)
 
 
 def q_dedup_components_star(spark, sf_dir):
-    # Same clustering contract, computed by the alternating
-    # large-star/small-star algorithm (operators/components.py,
-    # algorithm="star" — Kiveris et al., O(log n) rounds on chains where
-    # min-label needs diameter rounds). Shares q_dedup_components'
-    # recursive-CTE oracle: both algorithms must land the identical
-    # (doc_id, min-reachable-label) fixpoint. driver_max_edges=0 forces
-    # the distributed star rounds: the verified pair list (50 symmetric
-    # edges at sf0.01, 458 at sf0.1) sits far below the default
-    # threshold, which would hand it to the driver union-find and leave
-    # the star algorithm unchecked by the oracle.
-    from tesseract_recognize_spark.operators.components import (
-        connected_components,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.8).select("doc_a", "doc_b")
-    labels = connected_components(
-        pairs, algorithm="star", driver_max_edges=0
-    )
-    asg = (
-        docs.select("doc_id")
-        .join(labels, docs["doc_id"] == labels["node"], "left")
-        .select(
-            docs["doc_id"],
-            F.coalesce("component_id", docs["doc_id"]).alias("component_id"),
-        )
-    )
-    w = Window.partitionBy("component_id")
-    return asg.select(
-        "doc_id",
-        "component_id",
-        F.count("*").over(w).cast("bigint").alias("component_size"),
-        (F.col("doc_id") == F.col("component_id")).alias("is_keeper"),
-    )
+    # Same clustering contract and recursive-CTE oracle, computed by the
+    # distributed large-star/small-star rounds (Kiveris et al., O(log n)
+    # rounds): driver_max_edges=0 forces them, which the default
+    # threshold would otherwise hand to the driver union-find, leaving
+    # the rounds unchecked by the oracle.
+    return _components_query(spark, sf_dir, 0)
 
 
 def q_quality_quantiles(spark, sf_dir):
@@ -1012,7 +991,8 @@ def _dedup_components_oracle(
 ) -> str:
     """Recursive-CTE reachability closure over the verified Jaccard
     pairs: component_id = min node id reachable — value-for-value the
-    fixpoint min-label propagation computes in Spark."""
+    labeling connected_components computes in Spark (driver union-find
+    or the distributed star rounds)."""
     ctes = _verified_pairs_ctes(threshold, bucket_cap).replace(
         "WITH shing", "WITH RECURSIVE shing", 1
     )
@@ -1308,8 +1288,8 @@ FROM documents
 """
 
 
-def _quality_quantiles_oracle(ps=(0.25, 0.5, 0.75, 0.9)) -> str:
-    ps_list = ", ".join(str(p) for p in ps)
+def _quality_quantiles_oracle() -> str:
+    ps_list = ", ".join(str(p) for p in QUANTILE_PS)
     return f"""
 WITH qs AS ({_quality_sql()}),
 j AS (

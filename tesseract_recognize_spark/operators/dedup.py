@@ -63,10 +63,10 @@ def mh_coeffs(i: int) -> tuple[int, int]:
     return a, b
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact-duplicate groups: content hash → keeper (min doc_id) + count."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
+        docs.groupBy(F.md5(F.col("text")).alias("content_hash"))
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
             F.count("*").alias("dup_count"),
@@ -74,16 +74,16 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _shingle_hashes(docs: DataFrame, text_col: str) -> DataFrame:
+def _shingle_hashes(docs: DataFrame) -> DataFrame:
     """One row per shingle POSITION: (doc_id, h) with h = 31-bit base hash
     of the k-gram. Codegen end-to-end (md5 + conv per row) — no
     higher-order-function lambdas."""
-    n = F.length(F.col(text_col))
+    n = F.length(F.col("text"))
     return (
         docs.where(n >= SHINGLE_K)
         .select(
             "doc_id",
-            F.col(text_col).alias("_t"),
+            F.col("text").alias("_t"),
             F.explode(F.sequence(F.lit(1), n - (SHINGLE_K - 1))).alias("_i"),
         )
         .select(
@@ -98,7 +98,6 @@ def _shingle_hashes(docs: DataFrame, text_col: str) -> DataFrame:
 
 def _band_table(
     spread_docs: DataFrame,
-    text_col: str,
     bucket_cap: int | None,
     partitions: int | None = None,
 ) -> DataFrame:
@@ -131,7 +130,7 @@ def _band_table(
     for i in range(N_HASHES):
         a, b = mh_coeffs(i)
         aggs.append(F.expr(f"min(pmod({a} * h + {b}, {MH_P})) AS mh{i}"))
-    sigs = _shingle_hashes(spread_docs, text_col).groupBy("doc_id").agg(*aggs)
+    sigs = _shingle_hashes(spread_docs).groupBy("doc_id").agg(*aggs)
     band_hashes = ", ".join(
         "md5(concat_ws('|', "
         + ", ".join(f"mh{b * BAND_SIZE + j}" for j in range(BAND_SIZE))
@@ -178,7 +177,7 @@ def _band_pairs(bands: DataFrame, min_agree: int = 0) -> DataFrame:
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame, text_col: str = "text", bucket_cap: int | None = None
+    docs: DataFrame, bucket_cap: int | None = None
 ) -> DataFrame:
     """MinHash + banded LSH candidate pairs.
 
@@ -205,11 +204,11 @@ def minhash_lsh_pairs(
     broadcast streams bucket rows independently. Past the 64 MB size
     guard the planner falls back to shuffled joins with AQE skew
     splitting — the correct large-scale degradation."""
-    bands = _band_table(spread_small_scan(docs, "doc_id"), text_col, bucket_cap)
+    bands = _band_table(spread_small_scan(docs, "doc_id"), bucket_cap)
     return _band_pairs(bands)
 
 
-def simhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_signature(docs: DataFrame) -> DataFrame:
     """Per-document SimHash: sign of the per-bit vote over token hashes.
 
     One explode + one hash-aggregate (map-side combinable: the per-bit
@@ -220,7 +219,7 @@ def simhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
         spread_small_scan(docs, "doc_id")
         .select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"),
+            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
         )
         .where(F.length("tok") > 0)
         .select("doc_id", hash64_expr(F.col("tok")).alias("h"))
@@ -245,7 +244,6 @@ def simhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     threshold: float = 0.8,
     bucket_cap: int | None = 100,
 ) -> DataFrame:
@@ -304,7 +302,7 @@ def ngram_jaccard_pairs(
     # verify-stage shingle rebuild
     docs = spread_small_scan(docs, "doc_id")
     par = docs.sparkSession.sparkContext.defaultParallelism
-    bands = materialize(_band_table(docs, text_col, bucket_cap, par))
+    bands = materialize(_band_table(docs, bucket_cap, par))
     prefiltered = materialize(_band_pairs(bands, EST_MIN_AGREE))
     # Build shingle sets ONLY for documents that appear in a candidate pair:
     # join the candidate doc_id set to docs first. Without this,
@@ -330,7 +328,7 @@ def ngram_jaccard_pairs(
     # shingle-explode + collect_set pipeline executed twice (measured in
     # the round-6 event-log audit: two identical ~3.4s stages per query)
     sets = materialize(
-        _shingle_hashes(cand_ids.join(docs, "doc_id"), text_col)
+        _shingle_hashes(cand_ids.join(docs, "doc_id"))
         .groupBy("doc_id")
         .agg(F.collect_set("h").alias("sh"))
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 __all__ = [
     "MEDIA_META_SCHEMA",
+    "IMAGE_FEATURES_SCHEMA",
     "AUDIO_FEATURES_SCHEMA",
     "synth_media_bytes",
     "fake_codec",
@@ -46,6 +47,14 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
         T.StructField("channels", T.IntegerType()),
         T.StructField("n_bytes", T.LongType()),
+    ]
+)
+
+IMAGE_FEATURES_SCHEMA = T.StructType(
+    list(MEDIA_META_SCHEMA.fields)
+    + [
+        T.StructField("features", T.ArrayType(T.DoubleType())),
+        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -74,6 +83,43 @@ def fake_codec(payload: bytes) -> np.ndarray:
     return img
 
 
+def _decode_rows(
+    media_df: DataFrame,
+    decode: Callable[[bytes], dict],
+    schema: T.StructType,
+) -> DataFrame:
+    """(media_ref, payload) → one ``schema`` row per payload via an
+    Arrow-batched UDF: ``mime`` is the sniffed container, ``n_bytes`` the
+    payload size, and the other fields come from ``decode(payload)``. A
+    payload that ``decode`` raises on is quarantined (the ocr_expand
+    level='error' discipline): its row survives with NULL decoded fields
+    and the error message in ``error`` — one bad payload in a 10^12-row
+    corpus must not fail the stage."""
+    from tesseract_recognize_spark.functions.codecs import sniff_mime
+
+    cols = [f.name for f in schema.fields]
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
+                payload = bytes(payload)
+                row = dict.fromkeys(cols)
+                row.update(
+                    media_ref=ref,
+                    mime=sniff_mime(payload) or "application/octet-stream",
+                    n_bytes=len(payload),
+                )
+                try:
+                    row.update(decode(payload))
+                except Exception as e:  # quarantine, don't fail the stage
+                    row["error"] = f"{type(e).__name__}: {e}"
+                rows.append(row)
+            yield pd.DataFrame(rows, columns=cols)
+
+    return media_df.mapInPandas(fn, schema=schema)
+
+
 def decode_image_features(
     media_df: DataFrame,
     codec: Callable[[bytes], np.ndarray] | None = None,
@@ -92,87 +138,39 @@ def decode_image_features(
     the remaining formats (progressive JPEG, CCITT-fax TIFF, ...) still
     need an injected codec (no image libraries ship in this container).
     ``mime`` reflects the DETECTED container, not the claimed one.
-
-    Malformed payloads are quarantined per row (the ocr_expand
-    level='error' discipline): the row survives with NULL metadata/
-    features and the decode error message in ``error`` — one bad payload
-    in a 10^12-row corpus must not fail the stage.
+    Malformed payloads are quarantined per row (see ``_decode_rows``).
     """
-    from tesseract_recognize_spark.functions.codecs import (
-        decode_image,
-        sniff_mime,
-    )
-
     if codec is None:
+        from tesseract_recognize_spark.functions.codecs import decode_image
+
         codec = decode_image
 
-    out_schema = T.StructType(
-        list(MEDIA_META_SCHEMA.fields)
-        + [
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-            T.StructField("error", T.StringType()),
+    def features(payload: bytes) -> dict:
+        img = codec(payload)
+        h, w = img.shape[:2]
+        c = 1 if img.ndim == 2 else img.shape[2]
+        # grayscale pooling EXCLUDING any alpha channel:
+        # GA → gray plane, RGBA → mean of RGB only
+        if img.ndim == 2:
+            gray = img.astype(float)
+        elif c == 2:
+            gray = img[:, :, 0].astype(float)
+        elif c == 4:
+            gray = img[:, :, :3].mean(axis=2)
+        else:
+            gray = img.mean(axis=2)
+        # mean-pool to a fixed grid (integer bucket edges)
+        ys = np.linspace(0, h, resize_to + 1).astype(int)
+        xs = np.linspace(0, w, resize_to + 1).astype(int)
+        feat = [
+            float(gray[ys[i]:max(ys[i + 1], ys[i] + 1),
+                       xs[j]:max(xs[j + 1], xs[j] + 1)].mean())
+            for i in range(resize_to)
+            for j in range(resize_to)
         ]
-    )
+        return dict(width=w, height=h, channels=c, features=feat)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload)
-                mime = sniff_mime(payload) or "application/octet-stream"
-                try:
-                    img = codec(payload)
-                    h, w = img.shape[:2]
-                    c = 1 if img.ndim == 2 else img.shape[2]
-                    # grayscale pooling EXCLUDING any alpha channel:
-                    # GA → gray plane, RGBA → mean of RGB only
-                    if img.ndim == 2:
-                        gray = img.astype(float)
-                    elif c == 2:
-                        gray = img[:, :, 0].astype(float)
-                    elif c == 4:
-                        gray = img[:, :, :3].mean(axis=2)
-                    else:
-                        gray = img.mean(axis=2)
-                    # mean-pool to a fixed grid (integer bucket edges)
-                    ys = np.linspace(0, h, resize_to + 1).astype(int)
-                    xs = np.linspace(0, w, resize_to + 1).astype(int)
-                    feat = [
-                        float(gray[ys[i]:max(ys[i + 1], ys[i] + 1),
-                                   xs[j]:max(xs[j + 1], xs[j] + 1)].mean())
-                        for i in range(resize_to)
-                        for j in range(resize_to)
-                    ]
-                    rows.append(
-                        dict(
-                            media_ref=ref,
-                            mime=mime,
-                            width=w,
-                            height=h,
-                            channels=c,
-                            n_bytes=len(payload),
-                            features=feat,
-                            error=None,
-                        )
-                    )
-                except Exception as e:  # quarantine, don't fail the stage
-                    rows.append(
-                        dict(
-                            media_ref=ref,
-                            mime=mime,
-                            width=None,
-                            height=None,
-                            channels=None,
-                            n_bytes=len(payload),
-                            features=None,
-                            error=f"{type(e).__name__}: {e}",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
-
-    return media_df.mapInPandas(fn, schema=out_schema)
+    return _decode_rows(media_df, features, IMAGE_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -205,58 +203,30 @@ def decode_audio_features(
     (rate, int16 ndarray). Features are the per-window sums of |sample|
     over full ``window``-sample windows of the first channel — exact
     int64 arithmetic, reproducible by the DuckDB oracle. Malformed
-    payloads are quarantined per row (``error`` column), mirroring
-    decode_image_features.
+    payloads are quarantined per row (see ``_decode_rows``).
     """
     if codec is None:
         from tesseract_recognize_spark.functions.wav import wav_decode
 
         codec = wav_decode
 
-    from tesseract_recognize_spark.functions.codecs import sniff_mime
+    def features(payload: bytes) -> dict:
+        rate, samples = codec(payload)
+        n_ch = 1 if samples.ndim == 1 else samples.shape[1]
+        mono = samples if samples.ndim == 1 else samples[:, 0]
+        n = len(mono)
+        n_win = n // window
+        absd = np.abs(mono[: n_win * window].astype(np.int64))
+        feats = absd.reshape(n_win, window).sum(axis=1)
+        return dict(
+            sample_rate=rate, n_channels=n_ch, n_samples=n,
+            features=[int(x) for x in feats],
+        )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload)
-                mime = sniff_mime(payload) or "application/octet-stream"
-                try:
-                    rate, samples = codec(payload)
-                    n_ch = 1 if samples.ndim == 1 else samples.shape[1]
-                    mono = samples if samples.ndim == 1 else samples[:, 0]
-                    n = len(mono)
-                    n_win = n // window
-                    absd = np.abs(mono[: n_win * window].astype(np.int64))
-                    feats = absd.reshape(n_win, window).sum(axis=1)
-                    rows.append(
-                        dict(
-                            media_ref=ref, mime=mime, sample_rate=rate,
-                            n_channels=n_ch, n_samples=n,
-                            n_bytes=len(payload),
-                            features=[int(x) for x in feats], error=None,
-                        )
-                    )
-                except Exception as e:  # quarantine, don't fail the stage
-                    rows.append(
-                        dict(
-                            media_ref=ref, mime=mime, sample_rate=None,
-                            n_channels=None, n_samples=None,
-                            n_bytes=len(payload), features=None,
-                            error=f"{type(e).__name__}: {e}",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields],
-            )
-
-    return media_df.mapInPandas(fn, schema=AUDIO_FEATURES_SCHEMA)
+    return _decode_rows(media_df, features, AUDIO_FEATURES_SCHEMA)
 
 
-def frame_sample(
-    media_df: DataFrame, every_n: int = 10, frames_col: str = "n_frames"
-) -> DataFrame:
+def frame_sample(media_df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video-style frame sampling as pure plan surgery: one row per sampled
     frame index (native sequence + explode — the decode of each sampled
     frame would then go through decode_image_features). Media with
@@ -266,10 +236,8 @@ def frame_sample(
         "frame_idx",
         F.explode(
             F.when(
-                F.col(frames_col) > 0,
-                F.sequence(
-                    F.lit(0), F.col(frames_col) - 1, F.lit(every_n)
-                ),
+                F.col("n_frames") > 0,
+                F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n)),
             )
         ),
     )

@@ -48,12 +48,11 @@ def stratified_sample(
     fractions: dict[str, float],
     key_col: str,
     salt: str = "s0",
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Keep each row with its stratum's probability, deterministically:
-    strata not in ``fractions`` keep ``default_fraction``. One filter,
-    no shuffle; thresholds fold to integer literals in codegen."""
-    thresh = F.lit(int(default_fraction * SAMPLE_MOD))
+    strata not in ``fractions`` keep none. One filter, no shuffle;
+    thresholds fold to integer literals in codegen."""
+    thresh = F.lit(0)
     for stratum, frac in sorted(fractions.items()):
         thresh = F.when(
             F.col(strata_col) == stratum, int(frac * SAMPLE_MOD)

@@ -63,17 +63,14 @@ def epoch_us(ts_col: str) -> F.Column:
 def sessionize(
     events: DataFrame,
     gap_minutes: int = 360,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
     salt_chunk_minutes: int | None = None,
 ) -> DataFrame:
     """Gap-based sessions: a new session starts when a user's
     inter-event gap exceeds ``gap_minutes``.
 
-    Output: (user_id, session_seq, session_start_us, session_end_us,
-    n_events, sum_value_cents), session_seq 1-based in time order.
+    Input: (user_id, event_id, ts, value). Output: (user_id,
+    session_seq, session_start_us, session_end_us, n_events,
+    sum_value_cents), session_seq 1-based in time order.
 
     Plan shape (default path): one Exchange hash(user_id); the two
     windows (gap flag, running counter) and the (user_id, session_seq)
@@ -107,10 +104,10 @@ def sessionize(
     """
     gap_us = int(gap_minutes) * 60_000_000
     ev = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(id_col).alias("event_id"),
-        epoch_us(ts_col).alias("ts_us"),
-        F.round(F.col(value_col) * 100).cast("bigint").alias("value_cents"),
+        "user_id",
+        "event_id",
+        epoch_us("ts").alias("ts_us"),
+        F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
     order = [F.asc("ts_us"), F.asc("event_id")]
     if salt_chunk_minutes:
@@ -301,12 +298,10 @@ def range_join_counts(
     anchors: DataFrame,
     probes: DataFrame,
     tolerance_minutes: int = 10,
-    anchor_ts: str = "ts_us",
-    probe_ts: str = "ts_us",
-    anchor_id: str = "event_id",
 ) -> DataFrame:
     """Per anchor row: how many probe rows fall within ±tolerance of
-    its timestamp (any key). Output: (anchor_id, ts_us, n_within).
+    its ``ts_us`` (any key). Output: (anchor_id, ts_us, n_within), where
+    anchor_id is the anchor's ``event_id``.
 
     Bucketize both sides to tolerance-width buckets and explode each
     probe to its {b-1, b, b+1} neighborhood — every qualifying pair
@@ -320,13 +315,13 @@ def range_join_counts(
     # floor division, not cast-truncation: cast rounds toward zero, which
     # mis-buckets pre-epoch (negative) timestamps
     a = anchors.select(
-        F.col(anchor_id).alias("anchor_id"),
-        F.col(anchor_ts).alias("a_ts"),
-        F.floor(F.col(anchor_ts) / tol_us).alias("bucket"),
+        F.col("event_id").alias("anchor_id"),
+        F.col("ts_us").alias("a_ts"),
+        F.floor(F.col("ts_us") / tol_us).alias("bucket"),
     )
-    bk = F.floor(F.col(probe_ts) / tol_us)
+    bk = F.floor(F.col("ts_us") / tol_us)
     p = probes.select(
-        F.col(probe_ts).alias("p_ts"),
+        F.col("ts_us").alias("p_ts"),
         F.explode(F.array(bk - 1, bk, bk + 1)).alias("bucket"),
     )
     hits = a.join(p, "bucket").where(

@@ -17,6 +17,7 @@ __all__ = [
     "doc_fingerprint",
     "tfidf_top_terms",
     "group_quantiles",
+    "QUANTILE_PS",
 ]
 
 # tiny per-language stopword lists; the ORDER of languages breaks ties
@@ -28,31 +29,34 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "los", "de", "que", "y", "en", "un", "una", "por"),
 }
 
+# quantile levels of group_quantiles, read by its DuckDB oracle too
+QUANTILE_PS = (0.25, 0.5, 0.75, 0.9)
+
 
 def _words(col: Column) -> Column:
     return F.split(F.lower(col), r"\s+")
 
 
-def _count_in(text_col: str, values: tuple[str, ...]) -> Column:
+def _count_in(values: tuple[str, ...]) -> Column:
     """Occurrences of set members among the whitespace tokens of
-    ``text_col``, as a SQL-lambda expression: `w IN (...)` optimizes to a
+    ``text``, as a SQL-lambda expression: `w IN (...)` optimizes to a
     hash-set InSet above 10 items, where a Python-lambda ==-OR fold stays a
     linear comparison chain (Column.isin is unusable inside HOF lambdas).
     Empty tokens can't be members, so no non-empty pre-filter is needed."""
     lst = ", ".join("'" + v.replace("'", "''") + "'" for v in values)
     return F.expr(
-        rf"size(filter(split(lower({text_col}), '\\s+'), w -> w IN ({lst})))"
+        rf"size(filter(split(lower(text), '\\s+'), w -> w IN ({lst})))"
     )
 
 
-def langid_stopwords(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def langid_stopwords(docs: DataFrame) -> DataFrame:
     """Stopword-vote language ID: count stopword hits per language, argmax
     with fixed language order as the tie-break (a deliberately simple,
     fully deterministic heuristic — the point is the distributed shape:
     per-row array intersection, no shuffle at all)."""
     docs = spread_small_scan(docs, "doc_id")
     votes = {
-        lang: _count_in(text_col, sw) for lang, sw in STOPWORDS.items()
+        lang: _count_in(sw) for lang, sw in STOPWORDS.items()
     }
     langs = list(STOPWORDS)
     best = F.lit(langs[0])
@@ -69,7 +73,7 @@ def langid_stopwords(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Per-document quality features + a composite score.
 
     Pure scalar arithmetic (ints + IEEE +-*/ only) so the score is exactly
@@ -77,14 +81,14 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     heuristics: length, alpha ratio, punct ratio, stopword ratio, mean
     word length."""
     docs = spread_small_scan(docs, "doc_id")
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.length(t).cast("double")
     n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", "")).cast("double")
     n_punct = F.length(F.regexp_replace(t, r"[^.,;:!?]", "")).cast("double")
     words = F.filter(_words(t), lambda w: F.length(w) > 0)
     n_words = F.size(words).cast("double")
     all_sw = tuple(w for sw in STOPWORDS.values() for w in sw)
-    n_stop = _count_in(text_col, all_sw).cast("double")
+    n_stop = _count_in(all_sw).cast("double")
     safe_n = F.when(n > 0, n).otherwise(F.lit(1.0))
     safe_w = F.when(n_words > 0, n_words).otherwise(F.lit(1.0))
     alpha_ratio = n_alpha / safe_n
@@ -113,10 +117,10 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 BPEISH_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish regex token count per doc."""
     docs = spread_small_scan(docs, "doc_id")
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.size(F.filter(_words(t), lambda w: F.length(w) > 0))
     bpe = F.size(F.regexp_extract_all(F.lower(t), F.lit(BPEISH_PATTERN), 0))
     return docs.select(
@@ -126,9 +130,7 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame, text_col: str = "text", k: int = 5
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k characteristic terms per document by tf·idf rank.
 
     idf is the LINEAR form N/df, not log(N/df): every arithmetic step
@@ -147,7 +149,7 @@ def tfidf_top_terms(
     """
     docs = spread_small_scan(docs, "doc_id")
     tok = docs.select(
-        "doc_id", F.explode(_words(F.col(text_col))).alias("term")
+        "doc_id", F.explode(_words(F.col("text"))).alias("term")
     ).where(F.col("term") != "")
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf_count"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("doc_freq"))
@@ -184,19 +186,20 @@ def group_quantiles(
     group_col: str,
     value_col: str,
     id_col: str,
-    ps: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9),
 ) -> DataFrame:
-    """Exact per-group quantiles by explicit rank selection: the
-    quantile at p is the value at 1-based rank floor((n-1)·p)+1 in the
-    group's (value, id) order — the LOWER empirical quantile, chosen
-    over interpolated `percentile`/`quantile_cont` because the
-    interpolation a + (b-a)·frac is evaluated in different expression
-    orders across engines (ulp drift breaks a bit-exact gate), while
-    rank selection involves no arithmetic on the values at all.
+    """Exact per-group quantiles at the ``QUANTILE_PS`` levels by
+    explicit rank selection: the quantile at p is the value at 1-based
+    rank floor((n-1)·p)+1 in the group's (value, id) order — the LOWER
+    empirical quantile, chosen over interpolated
+    `percentile`/`quantile_cont` because the interpolation a + (b-a)·frac
+    is evaluated in different expression orders across engines (ulp
+    drift breaks a bit-exact gate), while rank selection involves no
+    arithmetic on the values at all.
 
     Plan shape: one hash(group) exchange serves the rank window, the
     count window, and the filter; the p-explode multiplies rows only
-    AFTER the two windows, and the filter keeps |groups|·|ps| rows.
+    AFTER the two windows, and the filter keeps |groups|·|QUANTILE_PS|
+    rows.
     """
     wrank = Window.partitionBy(group_col).orderBy(
         F.asc(value_col), F.asc(id_col)
@@ -213,7 +216,7 @@ def group_quantiles(
             value_col,
             "rn",
             "cnt",
-            F.explode(F.array(*[F.lit(float(p)) for p in ps])).alias("p"),
+            F.explode(F.array(*map(F.lit, QUANTILE_PS))).alias("p"),
         )
         .where(F.col("rn") == F.floor((F.col("cnt") - 1) * F.col("p")) + 1)
         .select(
@@ -222,12 +225,12 @@ def group_quantiles(
     )
 
 
-def doc_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Canonical content fingerprint: md5 of the lowercased,
     whitespace-collapsed text (the exact-dedup key after normalization)."""
     docs = spread_small_scan(docs, "doc_id")
     norm = F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "),
+        F.regexp_replace(F.lower(F.col("text")), r"\s+", " "),
         r"^ | $",
         "",
     )

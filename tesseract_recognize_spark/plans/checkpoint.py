@@ -55,14 +55,14 @@ def run_checkpointed(
     table_io,
     n_groups: int = 8,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    run_id: str | None = None,
     resolver=None,
     fail_after_group: int | None = None,
 ) -> list[LineageEntry]:
     """Run extraction group-by-group with commit-per-group; resume by
     skipping groups already in the lineage. ``fail_after_group`` simulates
-    a mid-run crash (kill/resume tests)."""
-    run_id = run_id or uuid.uuid4().hex[:12]
+    a mid-run crash (kill/resume tests). Each call commits under a fresh
+    random run id."""
+    run_id = uuid.uuid4().hex[:12]
     done = table_io.committed_groups()
     entries: list[LineageEntry] = []
     staged = docs_df.withColumn("_grp", group_col(n_groups))

@@ -9,21 +9,21 @@ from pyspark.sql import SparkSession
 
 __all__ = ["build_session"]
 
+# rows per Arrow batch entering the Python workers — the engine's memory
+# discipline (the analog of the reference's one-decoded-page-resident
+# rule, tesseract-recognize.cc:540-548,790): a media-heavy batch expands
+# ~100-200× in the OCR stage, so batches are kept small
+ARROW_BATCH_ROWS = 256
+
 
 def build_session(
     app_name: str = "tesseract-recognize-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 256,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build a session with AQE + Arrow tuned for the extraction workload.
-
-    ``arrow_batch_rows`` bounds the rows per Arrow batch entering the
-    Python workers — the engine's memory discipline (the analog of the
-    reference's one-decoded-page-resident rule,
-    tesseract-recognize.cc:540-548,790): a media-heavy batch expands
-    ~100-200× in the OCR stage, so batches are kept small.
+    """Build a session with AQE + Arrow tuned for the extraction workload
+    (Arrow batches of ``ARROW_BATCH_ROWS`` rows).
 
     ``master`` is set only when passed or when the launcher set none: a
     builder master would override spark-submit's ``--master``.
@@ -67,7 +67,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_batch_rows),
+            str(ARROW_BATCH_ROWS),
         )
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")

@@ -92,21 +92,17 @@ def test_connected_components_frees_edges(spark):
         [Row(doc_a=1, doc_b=2), Row(doc_a=2, doc_b=3)],
         "doc_a: bigint, doc_b: bigint",
     )
-    for alg in ("label", "star"):
-        for driver_max_edges in (200_000, 0):
-            before = _n_persisted(spark)
-            out = connected_components(
-                pairs, algorithm=alg, driver_max_edges=driver_max_edges
-            )
-            got = {r["node"]: r["component_id"] for r in out.collect()}
-            assert got == {1: 1, 2: 1, 3: 1}
-            # the driver path keeps no blocks; the loops release their
-            # edge list, and their label/edge generations are
-            # localCheckpoints cleaned by ContextCleaner (GC-based), so a
-            # small constant of those (rounds+1 on this 2-hop graph) may
-            # linger until the next sweep
-            limit = 5 if driver_max_edges == 0 else 0
-            assert _n_persisted(spark) - before <= limit
+    for driver_max_edges in (200_000, 0):
+        before = _n_persisted(spark)
+        out = connected_components(pairs, driver_max_edges=driver_max_edges)
+        got = {r["node"]: r["component_id"] for r in out.collect()}
+        assert got == {1: 1, 2: 1, 3: 1}
+        # the driver path keeps no blocks; the star rounds' edge
+        # generations are localCheckpoints cleaned by ContextCleaner
+        # (GC-based), so a small constant of those (rounds+1 on this
+        # 2-hop graph) may linger until the next sweep
+        limit = 5 if driver_max_edges == 0 else 0
+        assert _n_persisted(spark) - before <= limit
 
 
 def test_finalize_runs_every_unpersist_and_reraises_first_error(monkeypatch):

@@ -1,11 +1,14 @@
 """Fixpoint pins for connected_components (operators/components.py):
-multi-hop label propagation, component isolation, determinism."""
+multi-hop closure, component isolation, determinism — the distributed
+star rounds checked against the driver union-find's exact min-label
+closure."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
 
+from tesseract_recognize_spark.operators import components
 from tesseract_recognize_spark.operators.components import (
     connected_components,
 )
@@ -16,6 +19,13 @@ def _pairs(spark, edges):
         [Row(doc_a=a, doc_b=b) for a, b in edges],
         "doc_a: bigint, doc_b: bigint",
     )
+
+
+def _labels(spark, edges, **kw):
+    return {
+        r["node"]: r["component_id"]
+        for r in connected_components(_pairs(spark, edges), **kw).collect()
+    }
 
 
 def test_chain_propagates_across_hops(spark):
@@ -43,17 +53,13 @@ def test_triangle_with_redundant_edges(spark):
     assert got == {5: 5, 6: 5, 7: 5}
 
 
-def test_max_iter_raises_instead_of_partial(spark):
-    with pytest.raises(RuntimeError, match="no fixpoint"):
+def test_max_iter_raises_instead_of_partial(spark, monkeypatch):
+    # the 4-chain needs two star rounds; a one-round cap must raise
+    monkeypatch.setattr(components, "MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint in 1 rounds"):
         connected_components(
-            _pairs(spark, [(4, 3), (3, 2), (2, 1)]), max_iter=1,
-            driver_max_edges=0,
+            _pairs(spark, [(4, 3), (3, 2), (2, 1)]), driver_max_edges=0
         )
-
-
-def test_unknown_algorithm_raises(spark):
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(_pairs(spark, [(1, 2)]), algorithm="bogus")
 
 
 @pytest.mark.parametrize(
@@ -68,26 +74,16 @@ def test_unknown_algorithm_raises(spark):
     ],
 )
 def test_star_equals_label(spark, edges):
-    """The alternating large-star/small-star rewrite must produce the
-    identical (node → component-min) labeling as min-label propagation
-    on every topology."""
-    a = {
-        r["node"]: r["component_id"]
-        for r in connected_components(
-            _pairs(spark, edges), algorithm="label", driver_max_edges=0
-        ).collect()
-    }
-    b = {
-        r["node"]: r["component_id"]
-        for r in connected_components(
-            _pairs(spark, edges), algorithm="star", driver_max_edges=0
-        ).collect()
-    }
-    assert a == b
+    """The distributed large-star/small-star rounds must produce the
+    identical (node → component-min) labeling as the driver union-find's
+    exact min-label closure on every topology."""
+    star = _labels(spark, edges, driver_max_edges=0)
+    assert star == _labels(spark, edges)
 
 
 def test_star_equals_label_random_graph(spark):
-    """Seeded random graph: same labeling from both algorithms."""
+    """Seeded random graph: same labeling from the star rounds and the
+    driver union-find."""
     import random
 
     rng = random.Random(7)
@@ -96,19 +92,8 @@ def test_star_equals_label_random_graph(spark):
         (rng.choice(nodes), rng.choice(nodes)) for _ in range(80)
     ]
     edges = [(a, b) for a, b in edges if a != b]
-    a = {
-        r["node"]: r["component_id"]
-        for r in connected_components(
-            _pairs(spark, edges), algorithm="label", driver_max_edges=0
-        ).collect()
-    }
-    b = {
-        r["node"]: r["component_id"]
-        for r in connected_components(
-            _pairs(spark, edges), algorithm="star", driver_max_edges=0
-        ).collect()
-    }
-    assert a == b
+    star = _labels(spark, edges, driver_max_edges=0)
+    assert star == _labels(spark, edges)
 
 
 def test_edge_sig_distinguishes_equal_count_sets(spark):
@@ -128,32 +113,45 @@ def test_edge_sig_distinguishes_equal_count_sets(spark):
     assert _edge_sig(a) == _edge_sig(a2)
 
 
-def test_star_converges_on_long_chain_where_label_cannot(spark):
-    """A 1000-node chain has diameter 999: min-label propagation needs
-    ~999 rounds (raises at max_iter=25), while the star rewrite halves
-    remaining heights per round and converges within the same budget —
-    the 10^12-edge adversarial-topology scale path."""
-    chain = [(i + 1, i) for i in range(999)]
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            _pairs(spark, [(i + 1, i) for i in range(40)]), max_iter=25,
-            driver_max_edges=0,
-        )
-    got = {
-        r["node"]: r["component_id"]
-        for r in connected_components(
-            _pairs(spark, chain), algorithm="star", max_iter=25,
-            driver_max_edges=0,
-        ).collect()
-    }
+def test_star_converges_on_long_chain(spark):
+    """A 1000-node chain has diameter 999: min-label propagation would
+    need ~999 rounds, while the star rewrite halves remaining heights per
+    round, so the default distributed call converges inside
+    ``MAX_ROUNDS`` — the 10^12-edge adversarial-topology scale path."""
+    got = _labels(spark, [(i + 1, i) for i in range(999)], driver_max_edges=0)
     assert len(got) == 1000
     assert set(got.values()) == {0}
+
+
+def test_distributed_path_materializes_once_before_round_one(
+    spark, monkeypatch
+):
+    """The first star generation is built straight from the pair rows:
+    one materialization before the first round, not an edge list plus a
+    generation."""
+    events = []
+    materialize, large_star = components.materialize, components._large_star
+
+    def counting_materialize(df):
+        events.append("materialize")
+        return materialize(df)
+
+    def counting_large_star(edges):
+        events.append("round")
+        return large_star(edges)
+
+    monkeypatch.setattr(components, "materialize", counting_materialize)
+    monkeypatch.setattr(components, "_large_star", counting_large_star)
+    got = _labels(spark, [(3, 2), (2, 1)], driver_max_edges=0)
+    assert got == {1: 1, 2: 1, 3: 1}
+    assert "round" in events
+    assert events[: events.index("round")] == ["materialize"]
 
 
 def test_driver_fast_path_equals_distributed(spark):
     """Round-6 adaptive fast path: below driver_max_edges the closure
     runs as driver-side union-find — the labeling must be identical to
-    both distributed algorithms on the same graph (chain + clique +
+    the distributed star rounds on the same graph (chain + clique +
     redundant/reversed edges + isolated pair)."""
     import random
 
@@ -163,22 +161,14 @@ def test_driver_fast_path_equals_distributed(spark):
     edges = [(a, b) for a, b in edges if a != b]
     edges += [(200, 201), (201, 202), (202, 200), (200, 201), (300, 301)]
 
-    def run(**kw):
-        return {
-            r["node"]: r["component_id"]
-            for r in connected_components(_pairs(spark, edges), **kw).collect()
-        }
-
-    fast = run()  # default threshold >> |edges| → driver union-find
-    label = run(driver_max_edges=0, algorithm="label")
-    star = run(driver_max_edges=0, algorithm="star")
-    assert fast == label == star
+    fast = _labels(spark, edges)  # default threshold >> |edges|
+    assert fast == _labels(spark, edges, driver_max_edges=0)
 
 
 def test_driver_fast_path_schema_and_types(spark):
     """The fast path must return the same (node, component_id) schema and
-    id types as the distributed loops (bigint ids — the id contract both
-    distributed algorithms' decimal/hash aggregates assume)."""
+    id types as the distributed rounds (bigint ids — the id contract the
+    star rounds' decimal/hash aggregates assume)."""
     pairs = _pairs(spark, [(2, 1), (2, 9)])
     fast = connected_components(pairs)
     slow = connected_components(pairs, driver_max_edges=0)
