@@ -58,7 +58,7 @@ from tesseract_recognize_spark.operators.textstats import (
     quality_score,
     token_counts,
 )
-from tesseract_recognize_spark.operators.explode import explode_spans
+from tesseract_recognize_spark.operators.explode import explode_media
 from tesseract_recognize_spark.partitioning import spread_small_scan
 from tesseract_recognize_spark.operators.multimodal import (
     decode_audio_features,
@@ -293,7 +293,7 @@ def q_extract_region_crops(spark, sf_dir):
 
 def q_page_set_select(spark, sf_dir):
     # S2: page-set selection ("file.pdf[0-2,5]") — filter media spans by
-    # 0-based ordinal INSIDE the spans array, before the explode (the
+    # 0-based ordinal INSIDE the media array, before the explode (the
     # skip-before-decode analog); survivors renumber (media_idx 1..n).
     docs = spread_small_scan(
         load_table(spark, sf_dir, "documents"), "doc_id"
@@ -315,7 +315,7 @@ def q_page_set_select(spark, sf_dir):
             ]
         ).alias("spans"),
     )
-    out = explode_spans(with_spans, pages=frozenset({0, 2}))
+    out = explode_media(with_spans, pages=frozenset({0, 2}))
     return out.select(
         "doc_id",
         F.col("media_idx").cast("bigint").alias("media_idx"),

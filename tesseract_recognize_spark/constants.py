@@ -55,7 +55,6 @@ MAX_TEXT_BLOCK_TYPE = 8
 # image (k=1, one CCW turn) → +90; DOWN (k=2) → 180; RIGHT (k=3 CCW ==
 # one CW turn) → -90; upright → no property (angle 0).
 ORIENT_K_TO_ANGLE = {0: 0, 1: 90, 2: 180, 3: -90}
-ANGLE_TO_ORIENT_K = {v: k for k, v in ORIENT_K_TO_ANGLE.items()}
 
 # Deterministic mock confidences (diagnostic only — never compared).
 CONF_OK = 0.95

@@ -1,12 +1,17 @@
 """The end-to-end extraction plan (SURVEY.md §3.4).
 
-    documents ──explode (native, no shuffle)──┬── text branch: native trim
-                                              └── media branch:
-                                                    repartition(doc_id, offset)   ← skew salting
-                                                    mapInArrow mock-OCR           ← the one UDF:
-                                                      decode, emit, T1/T3/P1/P2/P3 per page
-                                                    quarantine filter (native)
+    documents ──┬── text branch: inline(text spans), native trim
+                └── media branch:
+                      explode_media                 ← filter, sort, posexplode
+                      repartition(doc_id, offset)   ← skew salting
+                      mapInArrow mock-OCR           ← the one UDF:
+                        decode, emit, T1/T3/P1/P2/P3 per page
+                      quarantine filter (native)
                union ── repartition(doc_id) ── order window ── sink
+
+Each branch explodes only its own kind of span, straight from the spans
+array, so every span passes through exactly one ``Generate``. The text
+branch needs no sort: the order window sorts on ``offset``.
 
 Every post-pass is page-local (P2 aggregates over one page, P3 over one
 line, T1/T3/P1 are row-wise), so they run inside the OCR stage on each
@@ -19,11 +24,12 @@ BEFORE the expensive OCR stage, and (2) one hash exchange on doc_id that
 clusters each document for the one order window.
 
 Construction: three SQL statements around the one ``mapInArrow`` — the
-explode, the OCR stage's input (media filter, override or crop join,
-salting hint) and one tail shared by ``extract`` and ``extract_crops``.
-``spark.sql(query, **frames)`` costs a few Py4J round trips a statement
-where Column calls paid one per expression node: ~970 per ``extract()``
-on a 40-doc input became ~60, and every checkpoint group builds its plan.
+media explode, the OCR stage's input (override or crop join, salting
+hint) and one tail shared by ``extract`` and ``extract_crops`` that also
+inlines the text spans. ``spark.sql(query, **frames)`` costs a few Py4J
+round trips a statement where Column calls paid one per expression node:
+~970 per ``extract()`` on a 40-doc input became ~60, and every checkpoint
+group builds its plan.
 """
 
 from __future__ import annotations
@@ -31,31 +37,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from tesseract_recognize_spark.config import DEFAULT_CONFIG, ExtractConfig
-from tesseract_recognize_spark.operators.explode import explode_spans
+from tesseract_recognize_spark.operators.explode import explode_media
 from tesseract_recognize_spark.operators.normalize import trim_sql
 from tesseract_recognize_spark.operators.ocr import ocr_expand
 from tesseract_recognize_spark.schemas import FINAL_COLUMNS, MEDIA_ROWS_SCHEMA
 
-__all__ = ["extract", "extract_crops", "canonical_projection"]
+__all__ = ["extract", "extract_crops"]
 
 
 def extract(
     docs_df: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    ordered: bool = False,
     resolver=None,
     pages: str | frozenset[int] | None = None,
     media_overrides: DataFrame | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) → final span rows (FINAL_COLUMNS).
 
-    ``ordered=True`` adds a global orderBy(doc_id, order) — only for small
-    result inspection; the sink path keeps documents clustered and sorted
-    within partitions instead (no global exchange).
-
     ``pages`` selects media spans by 0-based ordinal ("0-2,5" spec or a
     set) — the reference's file.pdf[0-2,5] page-set selection. The filter
-    is applied to the spans array before the explode, so skipped pages
+    is applied to the media array before the explode, so skipped pages
     never reach the decode stage (skip-before-decode,
     tesseract-recognize.cc:470-471,497-498) and surviving pages renumber.
 
@@ -67,8 +68,8 @@ def extract(
     state, so double-rotation cannot occur). The join broadcasts when the
     override set is small.
     """
-    spans = explode_spans(docs_df, pages=pages)
-    frames, ref, join = {"spans": spans}, "s.media_ref", ""
+    media = explode_media(docs_df, pages=pages)
+    frames, ref, join = {"media": media}, "s.media_ref", ""
     if media_overrides is not None:
         # (doc_id, offset) must map to ONE override — the reference refuses
         # ambiguous --image usage (tesseract-recognize.cc:414-418). A
@@ -81,23 +82,21 @@ def extract(
                 SELECT doc_id, offset, max(new_media_ref) AS new_media_ref
                 FROM {overrides} GROUP BY doc_id, offset
             ) o ON s.doc_id = o.doc_id AND s.offset = o.offset"""
-    media_in = spans.sparkSession.sql(
+    media_in = media.sparkSession.sql(
         f"""
         SELECT {_salting(cfg, "doc_id", "offset")} s.doc_id, s.offset,
                {ref} AS media_ref, s.media_idx, s.n_media
-        FROM {{spans}} s {join}
-        WHERE s.kind = 'media'""",
+        FROM {{media}} s {join}""",
         **frames,
     )
     media_rows = ocr_expand(media_in, cfg, resolver=resolver)
-    return _sql_tail(media_rows, ordered, spans)
+    return _sql_tail(media_rows, docs_df)
 
 
 def extract_crops(
     docs_df: DataFrame,
     crops_df: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    ordered: bool = False,
     resolver=None,
     save_crops_dir: str | None = None,
 ) -> DataFrame:
@@ -126,27 +125,24 @@ def extract_crops(
             "extract_crops requires psm='auto' (no OSD on pre-cropped "
             "regions — reference tesseract-recognize.cc:423-426)"
         )
-    spans = explode_spans(docs_df)
+    media = explode_media(docs_df)
     # crop_seq: deterministic within-page crop order (drives the seq
     # component of sub_order, hence the final span order)
-    media_in = spans.sparkSession.sql(
+    media_in = media.sparkSession.sql(
         f"""
         SELECT {_salting(cfg, "doc_id", "offset", "crop_seq")} *
-        FROM (
-            SELECT doc_id, offset, media_ref, media_idx, n_media
-            FROM {{spans}} WHERE kind = 'media'
-        ) JOIN (
+        FROM {{media}} JOIN (
             SELECT *, CAST(row_number() OVER (
                 PARTITION BY doc_id, offset ORDER BY crop_id) - 1 AS INT)
                 AS crop_seq
             FROM {{crops}}
         ) USING (doc_id, offset)""",
-        spans=spans, crops=crops_df,
+        media=media, crops=crops_df,
     )
     rows = ocr_expand(
         media_in, cfg, resolver=resolver, save_crops_dir=save_crops_dir
     )
-    return _sql_tail(rows, ordered)
+    return _sql_tail(rows)
 
 
 def _salting(cfg: ExtractConfig, *cols: str) -> str:
@@ -180,23 +176,23 @@ _TEXT_SELECT = _select({
 
 
 def _sql_tail(
-    media_rows: DataFrame, ordered: bool, spans: DataFrame | None = None
+    media_rows: DataFrame, docs: DataFrame | None = None
 ) -> DataFrame:
     """The plan's one SQL tail: drop quarantined pages, add ``kind`` and
-    the T9 trim, union the text spans of ``spans`` (if given) with the
+    the T9 trim, union the text spans of ``docs`` (if given) with the
     media rows, cluster each document on one doc_id exchange, assign its
-    span ``order`` and project FINAL_COLUMNS; ``ordered`` adds the global
-    (doc_id, order) sort."""
+    span ``order`` and project FINAL_COLUMNS."""
     # quarantined pages stay visible in the plan up to the error filter,
     # the one place a side output of them can tap
     rows = f"SELECT {_MEDIA_SELECT} FROM {{media}} WHERE error IS NULL"
     frames = {"media": media_rows}
-    if spans is not None:
-        rows = (
-            f"SELECT {_TEXT_SELECT} FROM {{spans}} WHERE kind = 'text' "
-            f"UNION ALL {rows}"
-        )
-        frames["spans"] = spans
+    if docs is not None:
+        # no sort: the order window sorts on offset
+        rows = f"""SELECT {_TEXT_SELECT} FROM (
+            SELECT doc_id, inline(filter(spans, s -> s.kind = 'text'))
+            FROM {{docs}}
+        ) UNION ALL {rows}"""
+        frames["docs"] = docs
     # line_sub is monotone in sub_order within a page, so this orders like
     # (offset, sub_order); the checkpoint sink sorts on the same keys and
     # so reuses this sort
@@ -205,11 +201,5 @@ def _sql_tail(
                    PARTITION BY doc_id ORDER BY offset, line_sub, sub_order
                ) - 1 AS INT) AS `order`,
                {", ".join(_SPAN_COLUMNS[1:])}
-        FROM (SELECT /*+ REPARTITION(doc_id) */ * FROM ({rows}))
-        {"ORDER BY doc_id, `order`" if ordered else ""}"""
+        FROM (SELECT /*+ REPARTITION(doc_id) */ * FROM ({rows}))"""
     return media_rows.sparkSession.sql(query, **frames)
-
-
-def canonical_projection(spans_df: DataFrame) -> DataFrame:
-    """The equality-invariant projection (kind, text, media_ref, order)."""
-    return spans_df.select("doc_id", "order", "kind", "text", "media_ref")

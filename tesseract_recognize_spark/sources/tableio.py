@@ -27,7 +27,6 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F

@@ -118,8 +118,8 @@ def test_quarantine_bad_media(spark, tmp_path):
 
     rows = extract(
         spark.read.parquet(p), ExtractConfig(media_partitions=1),
-        ordered=True, resolver=resolver,
-    ).collect()
+        resolver=resolver,
+    ).orderBy("doc_id", "order").collect()
     assert rows[0]["text"] == "ok"
     assert all(not r["media_ref"].startswith("bad://") for r in rows)
     assert [r["order"] for r in rows] == list(range(len(rows)))

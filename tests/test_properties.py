@@ -1,5 +1,5 @@
 """Property-based invariants (hypothesis / seeded sweeps). Most need no
-Spark session; the explode_spans page-set sweep (bottom) uses the shared
+Spark session; the explode_media page-set sweep (bottom) uses the shared
 session fixture."""
 
 from __future__ import annotations
@@ -143,21 +143,25 @@ def test_parse_pages_set_malformed_raises(toks, junk, at):
         parse_pages_set(",".join(toks))
 
 
-# --- explode_spans page-set selection: seeded sweep on Spark ------------
-# The round-3 prefix-scan rewrite (operators/explode.py:_media_prefix_
-# counts + the CollapseProject note) is subtle; this pins its two
-# reference invariants over randomized span arrays:
+# --- explode_media page-set selection: seeded sweep on Spark ------------
+# explode_media filters each doc's media spans out of the spans array,
+# sorts them by offset, drops unselected pages by index and numbers the
+# survivors by explode position. This pins its two reference invariants
+# over randomized span arrays, short ones and long ones (200-1000 spans,
+# where a per-element scan of the array would go quadratic):
 #   * skip-before-decode: a media span survives iff its 0-based ordinal
 #     among the doc's ORIGINAL media spans (offset order) is in the page
 #     set — exactly the reference skipping frames before decode
 #     (tesseract-recognize.cc:470-471,497-498);
 #   * renumber-consecutive: survivors' media_idx is 1..n_media in offset
 #     order, like the reference's page registration.
+# Text spans never pass through the explode; test_crops_pageset.py checks
+# them end to end against the oracle under a page set.
 
-def _random_docs(rnd, n_docs):
+def _random_docs(rnd, n_docs, sizes=(0, 12)):
     docs = []
     for d in range(n_docs):
-        n = rnd.randint(0, 12)
+        n = rnd.randint(*sizes)
         offsets = list(range(n))
         rnd.shuffle(offsets)  # array order must not matter (array_sort)
         spans = []
@@ -171,33 +175,20 @@ def _random_docs(rnd, n_docs):
 
 
 def _expected(spans, pages):
-    """Pure-Python model of explode_spans(page set)."""
-    ordered = sorted(spans, key=lambda s: s[3])
-    media_ord = {}
-    k = 0
-    for s in ordered:
-        if s[0] == "media":
-            media_ord[s[3]] = k
-            k += 1
-    kept = [s for s in ordered
-            if s[0] != "media" or media_ord[s[3]] in pages]
-    rows, m = [], 0
-    for s in kept:
-        if s[0] == "media":
-            m += 1
-        rows.append((s[3], s[0], s[2], m if s[0] == "media" else m))
-    n_media = m
-    return [(off, kind, ref, idx, n_media)
-            for (off, kind, ref, idx) in rows]
+    """Pure-Python model of explode_media(page set): the kept media rows
+    (offset, media_ref, media_idx, n_media)."""
+    media = sorted((s for s in spans if s[0] == "media"), key=lambda s: s[3])
+    kept = [s for k, s in enumerate(media) if k in pages]
+    return [(s[3], s[2], i + 1, len(kept)) for i, s in enumerate(kept)]
 
 
 @pytest.mark.spark
-def test_explode_spans_pageset_seeded_sweep(spark):
+def test_explode_media_pageset_seeded_sweep(spark):
     import random
 
     from pyspark.sql import types as T_
 
-    from tesseract_recognize_spark.operators.explode import explode_spans
+    from tesseract_recognize_spark.operators.explode import explode_media
 
     schema = T_.StructType([
         T_.StructField("doc_id", T_.StringType()),
@@ -209,23 +200,21 @@ def test_explode_spans_pageset_seeded_sweep(spark):
         ]))),
     ])
     rnd = random.Random(20260817)
-    docs = _random_docs(rnd, 60)
+    docs = _random_docs(rnd, 60) + [
+        (f"long{d}", spans)
+        for d, spans in _random_docs(rnd, 6, sizes=(200, 1000))
+    ]
     df = spark.createDataFrame(docs, schema)
-    for spec in ("", "0", "0-2,5", "1,3-4,9-11", "7-40", "0-99"):
+    for spec in ("", "0", "0-2,5", "1,3-4,9-11", "7-40", "0-99", "0-999"):
         pages = parse_pages_set(spec)
         got = {}
-        for r in explode_spans(df, pages=pages).collect():
+        for r in explode_media(df, pages=pages).collect():
             got.setdefault(r["doc_id"], []).append(
-                (r["offset"], r["kind"], r["media_ref"], r["media_idx"],
-                 r["n_media"])
+                (r["offset"], r["media_ref"], r["media_idx"], r["n_media"])
             )
         for doc_id, spans in docs:
-            exp = _expected(spans, pages)
             have = sorted(got.get(doc_id, []))
-            assert have == sorted(exp), (spec, doc_id)
-            # renumber-consecutive: survivors' media_idx == 1..n_media
-            midx = [r[3] for r in sorted(have) if r[1] == "media"]
-            assert midx == list(range(1, len(midx) + 1)), (spec, doc_id)
+            assert have == _expected(spans, pages), (spec, doc_id)
 
 
 # ---------------------------------------------------------------------------
