@@ -274,13 +274,7 @@ def q_extract_region_crops(spark, sf_dir):
     docs = spans_from_sf_documents(
         spread_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     )
-    media = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "media")
-        .select("doc_id", F.col("s.offset").alias("offset"),
-                F.col("s.media_ref").alias("media_ref"))
-    )
-    crops_df = region_crops_df(media)
+    crops_df = region_crops_df(explode_media(docs))
     cfg = ExtractConfig(
         psm="auto", media_partitions=spark.sparkContext.defaultParallelism
     )

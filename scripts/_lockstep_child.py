@@ -17,7 +17,6 @@ two children land seconds apart — inside the same host-noise regime.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -27,13 +26,15 @@ from tesseract_recognize_spark.config import ExtractConfig
 from tesseract_recognize_spark.plans.pipeline import extract
 from tesseract_recognize_spark.session import build_session
 
+# salting and shuffle widths per core of the measured extraction
+MEDIA_FACTOR = 4
+SHUFFLE_FACTOR = 1
+
 
 def main() -> None:
     cores = int(sys.argv[1])
     input_path = sys.argv[2]
     warmups = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    media_factor = int(os.environ.get("SPARK_GRAFT_MEDIA_FACTOR", "4"))
-    shuffle_factor = int(os.environ.get("SPARK_GRAFT_SHUFFLE_FACTOR", "1"))
     spark = build_session(
         app_name=f"lockstep-{cores}",
         master=f"local[{cores}]",
@@ -46,11 +47,11 @@ def main() -> None:
             "spark.network.timeout": "900s",
             "spark.executor.heartbeatInterval": "60s",
         },
-        shuffle_partitions=cores * shuffle_factor,
+        shuffle_partitions=cores * SHUFFLE_FACTOR,
     )
     docs = spark.read.parquet(input_path)
     docs.count()  # parquet footer + scan warm
-    cfg = ExtractConfig(media_partitions=cores * media_factor)
+    cfg = ExtractConfig(media_partitions=cores * MEDIA_FACTOR)
     out = extract(docs, cfg)
     for _ in range(warmups):  # C2 compilation settles over the first runs
         out.write.format("noop").mode("overwrite").save()

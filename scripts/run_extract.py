@@ -39,7 +39,7 @@ def parse_args(argv):
     p.add_argument("--media-partitions", type=int, default=0,
                    help="cap on OCR tasks per group; each group runs one "
                         "task per core up to this cap "
-                        "(0 = 4 x default parallelism)")
+                        "(0 = default parallelism, one task per core)")
     p.add_argument("--resume", action="store_true",
                    help="skip groups already committed in the lineage")
     return p.parse_args(argv)
@@ -54,7 +54,7 @@ def main(argv=None) -> int:
     )
     spark = build_session(app_name="extract")
     sc = spark.sparkContext
-    media_partitions = args.media_partitions or sc.defaultParallelism * 4
+    media_partitions = args.media_partitions or sc.defaultParallelism
     cfg = ExtractConfig(
         layout_level=args.layout_level,
         text_levels=text_levels,

@@ -33,9 +33,11 @@ class ExtractConfig:
     # tesseract-recognize.cc:45,542: the Ghostscript page-render dpi).
     # The synthetic resolver renders at the canonical 300-dpi contract;
     # density=k*300 recognizes the same content with every emitted
-    # coordinate and page dimension in the k*-scaled frame — exactly what
-    # rendering a vector-perfect page at k*300 dpi yields. Restricted to
-    # multiples of 300 so geometry stays integer-exact.
+    # coordinate and page dimension — crop offsets and a crop's page dims
+    # included — in the k*-scaled frame, exactly what rendering a
+    # vector-perfect page at k*300 dpi yields. Emission applies the scale
+    # (functions/emission.py), so the engine and the oracle share it.
+    # Restricted to multiples of 300 so geometry stays integer-exact.
     density: int = 300
 
     # --- runtime knobs (scale, not semantics) ---

@@ -22,6 +22,10 @@ Semantics reproduced:
   * bboxes reported in the raster frame (what the engine "saw"), with the
     baseline clipped to the bbox sides and the polystripe computed at
     emission time (setLineCoords, tesseract-recognize.cc:177-203);
+  * the output frame: geometry and page dims scaled to the --density
+    render (tesseract-recognize.cc:45,542) and, in region-crop mode, the
+    crop offset added back (tesseract-recognize.cc:677) — here and nowhere
+    else, so the engine and the oracle share it;
   * OSD page properties per PSM_AUTO_OSD (tesseract-recognize.cc:609-628).
 """
 
@@ -88,11 +92,22 @@ def emit_page_rows(
     ``page_num`` is the 1-based index of this page among the document's
     media spans; ids get a "pg{page_num}_" prefix when ``n_pages > 1``.
 
+    Emission is the one place decoded geometry meets the output frame.
+    Density (reference --density, tesseract-recognize.cc:45,542): the page
+    is decoded at the canonical 300 dpi, and with ``d = cfg.density // 300``
+    every bbox is read as the d·300-dpi render sees it — pixel [x0..x1]
+    covers [d·x0 .. d·x1+d−1] — and the page dims are ×d, so the rotation
+    to the raster frame, the baseline clip, the polystripe and every
+    post-pass work in the d·300-dpi frame. A crop's offset is added back
+    at the same scale.
+
     ``crop`` enables region-crop recognition mode (the reference's xpath
     selection of existing TextRegions, tesseract-recognize.cc:428-451):
-    ``{"crop_id": str, "x": int, "y": int, "seq": int}`` where (x, y) is the
-    crop's offset inside the page raster and ``seq`` its 0-based order among
-    the page's crops. Semantics mirrored from the reference:
+    ``{"crop_id": str, "x": int, "y": int, "seq": int, "page_w": int,
+    "page_h": int}`` where (x, y) is the crop's offset inside the page
+    raster, ``seq`` its 0-based order among the page's crops and
+    (page_w, page_h) the page raster's dims, which the crop's rows report.
+    Semantics mirrored from the reference:
       * region ids become "{crop_id}_b{n}" (then the "pg{k}_" prefix —
         tesseract-recognize.cc:663-670);
       * no region row is emitted — recognition writes INTO the selected
@@ -106,8 +121,12 @@ def emit_page_rows(
         (bounds: <2048 crops/page, <10^6 rows/crop).
     """
     k = page["orientation_k"]
-    pw, ph = page["page_w"], page["page_h"]
-    rw, rh = rframe_dims(pw, ph, k)
+    d = cfg.density // 300
+    pw, ph = page["page_w"] * d, page["page_h"] * d
+    if crop is None:
+        rw, rh = rframe_dims(pw, ph, k)
+    else:  # coords are page-frame after the offset add-back
+        rw, rh = crop["page_w"] * d, crop["page_h"] * d
     osd_angle = ORIENT_K_TO_ANGLE[k] if cfg.psm == "auto_osd" else None
 
     page_cols = dict(
@@ -122,8 +141,12 @@ def emit_page_rows(
         reading_direction="left-to-right",
     )
 
+    def scaled(bbox):
+        x0, y0, x1, y1 = bbox
+        return (d * x0, d * y0, d * x1 + d - 1, d * y1 + d - 1)
+
     def to_r(bbox):
-        x0, y0, x1, y1 = bbox_u_to_r(bbox, pw, ph, k)
+        x0, y0, x1, y1 = bbox_u_to_r(scaled(bbox), pw, ph, k)
         return dict(x0=int(x0), y0=int(y0), x1=int(x1), y1=int(y1))
 
     rows: list[dict] = []
@@ -204,7 +227,7 @@ def emit_page_rows(
                 )
                 # baseline: reading-direction bottom edge in raster frame,
                 # clipped to the bbox sides (setLineCoords)
-                lx0, ly0, lx1, ly1 = line["bbox"]
+                lx0, _, lx1, ly1 = scaled(line["bbox"])
                 b1 = point_u_to_r(float(lx0), float(ly1), pw, ph, k)
                 b2 = point_u_to_r(float(lx1), float(ly1), pw, ph, k)
                 rbox = (lrow["x0"], lrow["y0"], lrow["x1"], lrow["y1"])
@@ -271,7 +294,7 @@ def emit_page_rows(
         # offset add-back: every coordinate the crop decode reported is in
         # the crop frame; translate into the page frame
         # (tesseract-recognize.cc:677,732,751,762)
-        cx, cy = crop["x"], crop["y"]
+        cx, cy = crop["x"] * d, crop["y"] * d
         for r in rows:
             if r["x0"] is not None:
                 r["x0"] += cx

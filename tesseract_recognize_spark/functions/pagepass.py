@@ -2,9 +2,9 @@
 
 Runs inside the OCR Arrow stage, right after ``emit_page_rows``. Every
 pass reads only rows of the page it runs on (P2 aggregates over the page,
-P3 over one line), so a page — or, in region-crop mode, one crop work
-item, whose ``line_sub`` carries the crop's seq·10^6 offset so no line
-spans two items — is complete on its own and needs no shuffle:
+P3 over one line), so a page — in region-crop mode with all its crops,
+whose ``line_sub`` carries each crop's seq·10^6 offset so no line spans
+two crops — is complete on its own and needs no shuffle:
 
   T1  block-type filter            (tesseract-recognize.cc:651-655)
   T3  corner polygon + sentinel    (tesseract-recognize.cc:155-175)
@@ -46,8 +46,8 @@ _SENTINEL = (0.0, 0.0)
 
 
 def finish_page(rows: list[dict]) -> list[dict]:
-    """T1 → T3 → P1 → P2 → P3 over the emitted rows of one page (or one
-    crop). Returns the kept rows, each with ``xs``/``ys`` and
+    """T1 → T3 → P1 → P2 → P3 over the emitted rows of one page.
+    Returns the kept rows, each with ``xs``/``ys`` and
     ``coords_filled`` set."""
     rows = [r for r in rows if r["block_type"] <= MAX_TEXT_BLOCK_TYPE]
     if not rows:

@@ -15,16 +15,21 @@ from Python column lists via ``pa.array`` — no pandas DataFrame is ever
 materialized on either side of the boundary. The ``coords`` list column is
 built from flat x/y lists plus list offsets, never one object per point.
 
-No shuffle happens here: each media span is an independent work item, so
-the stage is embarrassingly parallel; skew is handled upstream by
-repartitioning on (doc_id, offset) so a media-heavy document's spans spread
-across tasks (the north-star's "salting of skewed media-heavy partitions").
+No shuffle happens here: the work item is one page, in both modes — in
+region-crop mode the row carries the page's crops as one sorted array, so
+the page's raster is resolved once and its crops are cut, decoded and
+post-passed together, like the reference's per-page region loop
+(tesseract-recognize.cc:428-451). Pages are independent, so the stage is
+embarrassingly parallel; skew is handled upstream by repartitioning on
+(doc_id, offset) so a media-heavy document's pages spread across tasks
+(the north-star's "salting of skewed media-heavy partitions").
 
 Failures follow the task-retry discipline (SURVEY.md §4): a raster that
 violates the contract (``DecodeError``) or a resolver that cannot read its
 page (``OSError``) yields one level='error' row (``error`` = "<exception
 class>: <message>", dropped by a native filter after the stage) instead of
-failing the partition. A transient resolver error (``ConnectionError``,
+failing the partition. The page is the quarantine unit: in region-crop
+mode a crop that fails to decode quarantines its page's other crops too. A transient resolver error (``ConnectionError``,
 ``TimeoutError``) is not quarantined: it fails the task, so Spark retries
 it, and once the retries are spent the group does not commit and a resume
 runs it again; the page is never lost silently.
@@ -56,98 +61,48 @@ __all__ = ["ocr_expand", "release_worker_caches"]
 _ARROW_SCHEMA = to_arrow_schema(MEDIA_ROWS_SCHEMA)
 
 
-def _scale_page(page: dict, k: int) -> dict:
-    """density analog (reference --density, tesseract-recognize.cc:45,542):
-    re-express the decoded upright-frame geometry at a k*300-dpi render.
-    A pixel [x0..x1] (inclusive) at the canonical dpi covers
-    [k*x0 .. k*x1 + k-1] in the k*-scaled render; scaling the page dict
-    BEFORE emission keeps every downstream computation (rotation to raster
-    frame, baseline clip, polystripe, T3/P1/P2/P3) frame-coherent."""
-
-    def box(b):
-        if b is None:
-            return None
-        x0, y0, x1, y1 = b
-        return (k * x0, k * y0, k * x1 + k - 1, k * y1 + k - 1)
-
-    out = dict(page)
-    out["page_w"] = page["page_w"] * k
-    out["page_h"] = page["page_h"] * k
-    blocks = []
-    for blk in page["blocks"]:
-        nb = dict(blk, bbox=box(blk["bbox"]))
-        if blk.get("paras"):
-            nb["paras"] = [
-                [
-                    dict(
-                        line,
-                        bbox=box(line["bbox"]),
-                        words=[
-                            dict(
-                                w,
-                                bbox=box(w["bbox"]),
-                                glyph_bboxes=[
-                                    box(g) for g in w["glyph_bboxes"]
-                                ],
-                            )
-                            for w in line["words"]
-                        ],
-                    )
-                    for line in para
-                ]
-                for para in blk["paras"]
-            ]
-        blocks.append(nb)
-    out["blocks"] = blocks
-    return out
-
-
 def _expand_columns(
     cols: dict[str, list], cfg: ExtractConfig, resolver, save_crops_dir=None
 ) -> pa.RecordBatch:
     """Column lists in → one RecordBatch out (one row per kept span row,
     plus one level='error' row per quarantined page). Shared by the Arrow
-    stage and unit tests."""
-    crop_mode = "crop_id" in cols
-    k_density = cfg.density // 300
+    stage and unit tests.
+
+    One row in is one page: (doc_id, offset, media_ref, media_idx,
+    n_media), plus in region-crop mode ``crops``, the page's crop structs
+    (crop_id, crop_x0, crop_y0, crop_x1, crop_y1) sorted by crop_id."""
     out: list[dict] = []
     doc_col: list = []
     off_col: list = []
     ref_col: list = []
     err_col: list = []
-    for i in range(len(cols["doc_id"])):
-        doc_id = cols["doc_id"][i]
-        offset = int(cols["offset"][i])
+    for i, doc_id in enumerate(cols["doc_id"]):
+        offset = cols["offset"][i]
         media_ref = cols["media_ref"][i]
-        err = None
+        page_num, n_pages = cols["media_idx"][i], cols["n_media"][i]
+        err, cuts = None, []
         try:
             raster = resolver(media_ref)
-            crop = None
-            if crop_mode:
-                cx0, cy0 = int(cols["crop_x0"][i]), int(cols["crop_y0"][i])
-                cx1, cy1 = int(cols["crop_x1"][i]), int(cols["crop_y1"][i])
-                full_h, full_w = raster.shape
-                # the reference's page.crop(): cut the sub-raster, remember
-                # its offset (tesseract-recognize.cc:438-441)
-                raster = raster[cy0 : cy1 + 1, cx0 : cx1 + 1]
-                crop = {
-                    "crop_id": cols["crop_id"][i],
-                    "x": cx0,
-                    "y": cy0,
-                    "seq": int(cols["crop_seq"][i]),
-                }
-            page = decode_raster(raster)
-            if k_density > 1:
-                page = _scale_page(page, k_density)
-            rows = emit_page_rows(
-                page, cfg, int(cols["media_idx"][i]),
-                int(cols["n_media"][i]), crop=crop,
-            )
-            if crop is not None:
-                for row in rows:
-                    # Page dims stay the PAGE's (coords are page-frame after
-                    # the offset add-back), not the crop's
-                    row["page_w"], row["page_h"] = full_w, full_h
+            if "crops" not in cols:
+                rows = emit_page_rows(
+                    decode_raster(raster), cfg, page_num, n_pages
+                )
+            else:
+                rows = []
+                page_h, page_w = raster.shape
+                for seq, c in enumerate(cols["crops"][i]):
+                    x0, y0 = c["crop_x0"], c["crop_y0"]
+                    # the reference's page.crop(): cut the sub-raster,
+                    # remember its offset (tesseract-recognize.cc:438-441)
+                    cut = raster[y0 : c["crop_y1"] + 1, x0 : c["crop_x1"] + 1]
+                    cuts.append((c["crop_id"], cut))
+                    rows += emit_page_rows(
+                        decode_raster(cut), cfg, page_num, n_pages,
+                        crop=dict(crop_id=c["crop_id"], x=x0, y=y0, seq=seq,
+                                  page_w=page_w, page_h=page_h),
+                    )
+            # no line spans two crops (line_sub carries seq·10^6), and
+            # P1/P2 never run in crop mode (psm='auto')
             rows = finish_page(rows)
         except (ConnectionError, TimeoutError):
             raise  # transient: fail the task so Spark retries it
@@ -155,24 +110,9 @@ def _expand_columns(
             err = f"{type(exc).__name__}: {exc}"
             rows = [dict(sub_order=-1, level="error", text="")]
         else:
-            if crop is not None and save_crops_dir:
-                # K3 debug sink (reference --save-crops,
-                # tesseract-recognize.cc:551-555): executor-local .npy
-                # dumps of the cut rasters — dev-only, like the original;
+            if cuts and save_crops_dir:
                 # outside the try, so a failed dump raises
-                import os
-
-                import numpy as np
-
-                os.makedirs(save_crops_dir, exist_ok=True)
-                safe = str(doc_id).replace("/", "_")
-                np.save(
-                    os.path.join(
-                        save_crops_dir,
-                        f"crop_{safe}_{offset}_{crop['crop_id']}.npy",
-                    ),
-                    raster,
-                )
+                _save_crops(save_crops_dir, doc_id, offset, cuts)
         out.extend(rows)
         n = len(rows)
         doc_col += [doc_id] * n
@@ -192,6 +132,23 @@ def _expand_columns(
         for f in _ARROW_SCHEMA
     ]
     return pa.RecordBatch.from_arrays(arrays, schema=_ARROW_SCHEMA)
+
+
+def _save_crops(save_crops_dir: str, doc_id, offset, cuts) -> None:
+    """K3 debug sink (reference --save-crops, tesseract-recognize.cc:551-555):
+    executor-local .npy dumps of a page's cut rasters — dev-only, like the
+    original."""
+    import os
+
+    import numpy as np
+
+    os.makedirs(save_crops_dir, exist_ok=True)
+    safe = str(doc_id).replace("/", "_")
+    for crop_id, cut in cuts:
+        np.save(
+            os.path.join(save_crops_dir, f"crop_{safe}_{offset}_{crop_id}.npy"),
+            cut,
+        )
 
 
 def _coords_array(rows: list[dict]) -> pa.ListArray:
@@ -240,8 +197,8 @@ def ocr_expand(
     resolver=None,
     save_crops_dir: str | None = None,
 ) -> DataFrame:
-    """media span rows (doc_id, offset, media_ref, media_idx, n_media) →
-    post-passed span rows per MEDIA_ROWS_SCHEMA (final coords).
+    """page rows (doc_id, offset, media_ref, media_idx, n_media[, crops])
+    → post-passed span rows per MEDIA_ROWS_SCHEMA (final coords).
 
     ``resolver`` (media_ref → raster ndarray) is captured in the UDF
     closure so it ships to the Python workers via cloudpickle — a
@@ -249,22 +206,14 @@ def ocr_expand(
     fresh). Defaults to sources/media.resolve_media.
     """
     resolver = resolver or resolve_media
-    in_cols = [
-        "doc_id", "offset", "media_ref", "media_idx", "n_media",
-        "crop_id", "crop_x0", "crop_y0", "crop_x1", "crop_y1", "crop_seq",
-    ]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            names = set(batch.schema.names)
-            cols = {
-                c: batch.column(c).to_pylist()
-                for c in in_cols
-                if c in names
-            }
-            yield _expand_columns(cols, cfg, resolver, save_crops_dir)
+            yield _expand_columns(
+                batch.to_pydict(), cfg, resolver, save_crops_dir
+            )
         release_worker_caches()
 
     return media_spans.mapInArrow(fn, schema=MEDIA_ROWS_SCHEMA)

@@ -284,11 +284,10 @@ def expected_crop_spans(
                 "x": c["x0"],
                 "y": c["y0"],
                 "seq": seq,
+                "page_w": geo["page_w"],
+                "page_h": geo["page_h"],
             }
-            crows = emit_page_rows(page, cfg, page_num, n_pages, crop=crop)
-            for r in crows:
-                r["page_w"], r["page_h"] = geo["page_w"], geo["page_h"]
-            rows.extend(crows)
+            rows += emit_page_rows(page, cfg, page_num, n_pages, crop=crop)
         rows = t1_filter(rows)
         t3_coords(rows)
         p3_fill_word_coords(rows)

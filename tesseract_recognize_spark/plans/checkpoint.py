@@ -39,7 +39,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, functions as F
 
 from tesseract_recognize_spark.config import DEFAULT_CONFIG, ExtractConfig
-from tesseract_recognize_spark.plans.pipeline import extract
+from tesseract_recognize_spark.plans.pipeline import SINK_SORT_KEYS, extract
 from tesseract_recognize_spark.sources.tableio import LineageEntry
 
 __all__ = ["run_checkpointed", "group_col"]
@@ -75,12 +75,7 @@ def run_checkpointed(
         t0 = time.time()
         group_docs = staged.filter(F.col("_grp") == g).drop("_grp")
         out = extract(group_docs, cfg, resolver=resolver)
-        # physically identical to (doc_id, order) — but keyed on the
-        # columns the order window just sorted by, so SortExec recognizes
-        # the existing ordering and the sink sort is a no-op
-        out = out.sortWithinPartitions(
-            "doc_id", "offset", "line_sub", "sub_order"
-        )
+        out = out.sortWithinPartitions(*SINK_SORT_KEYS)
         entries.append(table_io.commit_group(out, g, run_id, t0))
         if fail_after_group is not None and g >= fail_after_group:
             raise RuntimeError(f"simulated crash after group {g}")

@@ -18,10 +18,12 @@ line, T1/T3/P1 are row-wise), so they run inside the OCR stage on each
 decoded page (functions/pagepass.py) and the plan carries no post-pass
 expressions at all.
 
-Shuffle accounting (the 100-TB argument): exactly two exchanges —
-(1) the salting repartition that spreads media-heavy documents across tasks
-BEFORE the expensive OCR stage, and (2) one hash exchange on doc_id that
-clusters each document for the one order window.
+Shuffle accounting (the 100-TB argument): exactly two exchanges in both
+``extract`` and ``extract_crops`` — (1) the salting repartition that
+spreads media-heavy documents across tasks BEFORE the expensive OCR stage
+(in crop mode it also clusters each page's crops into one row, so the
+group-by adds no exchange of its own), and (2) one hash exchange on doc_id
+that clusters each document for the one order window.
 
 Construction: three SQL statements around the one ``mapInArrow`` — the
 media explode, the OCR stage's input (override or crop join, salting
@@ -42,7 +44,12 @@ from tesseract_recognize_spark.operators.normalize import trim_sql
 from tesseract_recognize_spark.operators.ocr import ocr_expand
 from tesseract_recognize_spark.schemas import FINAL_COLUMNS, MEDIA_ROWS_SCHEMA
 
-__all__ = ["extract", "extract_crops"]
+__all__ = ["extract", "extract_crops", "SINK_SORT_KEYS"]
+
+# a sink's within-partition sort: physically (doc_id, order), but keyed on
+# the columns the order window sorts by, so SortExec finds the ordering in
+# place and the sink sort is a no-op
+SINK_SORT_KEYS = ("doc_id", "offset", "line_sub", "sub_order")
 
 
 def extract(
@@ -110,15 +117,20 @@ def extract_crops(
     coords). Per reference semantics: each crop's raster is cut and decoded
     independently, emitted region ids are "{crop_id}_b{n}" (no region rows
     — recognition writes into the existing regions), and the crop offset is
-    added back to every coordinate (cc:438-441,663-666,677).
+    added back to every coordinate (cc:438-441,663-666,677). Pages without
+    a crop emit nothing.
 
     Requires ``cfg.psm == "auto"``: the reference refuses OSD when the
     document already carries orientation state (cc:423-426); crops are cut
     in the stored raster frame, so the P1/P2 derotation passes must not run.
 
     Scale shape: the crops side joins the media spans on (doc_id, offset) —
-    an equi-join that AQE broadcasts when the selection is small; the
-    expensive decode runs AFTER the join, on crop work items only.
+    an equi-join that AQE broadcasts when the selection is small — and each
+    page's crops are collected into one array sorted by crop_id, so the
+    OCR stage's work item is the page, as in ``extract``: its raster is
+    resolved once, its crops decode in array order, and a crop that fails
+    to decode quarantines the page. The expensive decode runs AFTER the
+    join, on selected pages only.
     """
     if cfg.psm != "auto":
         raise ValueError(
@@ -126,17 +138,19 @@ def extract_crops(
             "regions — reference tesseract-recognize.cc:423-426)"
         )
     media = explode_media(docs_df)
-    # crop_seq: deterministic within-page crop order (drives the seq
-    # component of sub_order, hence the final span order)
+    # one row per page: the salting exchange on (doc_id, offset) already
+    # clusters the group-by keys, so the aggregate adds no exchange; the
+    # sorted array orders the page's crops by crop_id (the seq component
+    # of sub_order, hence the final span order)
     media_in = media.sparkSession.sql(
         f"""
-        SELECT {_salting(cfg, "doc_id", "offset", "crop_seq")} *
-        FROM {{media}} JOIN (
-            SELECT *, CAST(row_number() OVER (
-                PARTITION BY doc_id, offset ORDER BY crop_id) - 1 AS INT)
-                AS crop_seq
-            FROM {{crops}}
-        ) USING (doc_id, offset)""",
+        SELECT doc_id, offset, media_ref, media_idx, n_media,
+               array_sort(collect_list(struct(
+                   crop_id, crop_x0, crop_y0, crop_x1, crop_y1))) AS crops
+        FROM (
+            SELECT {_salting(cfg, "doc_id", "offset")} *
+            FROM {{media}} JOIN {{crops}} USING (doc_id, offset)
+        ) GROUP BY doc_id, offset, media_ref, media_idx, n_media""",
         media=media, crops=crops_df,
     )
     rows = ocr_expand(
@@ -194,8 +208,8 @@ def _sql_tail(
         ) UNION ALL {rows}"""
         frames["docs"] = docs
     # line_sub is monotone in sub_order within a page, so this orders like
-    # (offset, sub_order); the checkpoint sink sorts on the same keys and
-    # so reuses this sort
+    # (offset, sub_order); a sink sorting on SINK_SORT_KEYS reuses this
+    # sort
     query = f"""
         SELECT doc_id, CAST(row_number() OVER (
                    PARTITION BY doc_id ORDER BY offset, line_sub, sub_order

@@ -8,6 +8,8 @@ media span whose ref seeds the mock raster)."""
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 __all__ = [
@@ -76,7 +78,7 @@ def spans_from_sf_documents(docs: DataFrame) -> DataFrame:
 
 
 def region_crops_for_media(
-    pairs: list[tuple[str, int, str]],
+    pairs: Iterable[tuple[str, int, str]],
 ) -> list[dict]:
     """Crop specs for region-crop mode: the FIRST text block's bbox of each
     upright page (rotated pages are skipped — extract_crops is psm='auto').
@@ -120,40 +122,22 @@ def region_crops_df(media: DataFrame) -> DataFrame:
     """Distributed analog of :func:`region_crops_for_media`: derive the crop
     specs executor-side with mapInPandas over the media-span rows — zero
     driver-side materialization, so the crops-from-a-previous-extraction
-    workflow is scale-clean end-to-end. Same selection rule (first text
-    block's bbox of each upright page), identical output rows.
+    workflow is scale-clean end-to-end. Each batch runs through
+    :func:`region_crops_for_media`, so both sides select identically.
 
     ``media`` needs columns (doc_id, offset, media_ref).
     """
-    cols = [
-        "doc_id", "offset", "crop_id",
-        "crop_x0", "crop_y0", "crop_x1", "crop_y1",
-    ]
+    keys = ["doc_id", "offset", "crop_id", "x0", "y0", "x1", "y1"]
+    crop_cols = {k: f"crop_{k}" for k in keys[3:]}
 
     def derive(batches):
         import pandas as pd
 
-        from tesseract_recognize_spark.fixtures.raster import (
-            layout_from_ref,
-            layout_geometry,
-        )
-
         for pdf in batches:
-            rows = []
-            for doc_id, offset, ref in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"]
-            ):
-                layout = layout_from_ref(ref)
-                if layout.orientation_k != 0:
-                    continue
-                geo = layout_geometry(layout)
-                bg = next(b for b in geo["blocks"] if b["block"].is_text)
-                x0, y0, x1, y1 = bg["bbox"]
-                rows.append(
-                    (doc_id, int(offset), "r0",
-                     int(x0), int(y0), int(x1), int(y1))
-                )
-            yield pd.DataFrame(rows, columns=cols)
+            crops = region_crops_for_media(
+                zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"])
+            )
+            yield pd.DataFrame(crops, columns=keys).rename(columns=crop_cols)
 
     return media.select("doc_id", "offset", "media_ref").mapInPandas(
         derive, CROPS_SCHEMA

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from tesseract_recognize_spark.schemas import DOCUMENTS_SCHEMA
+from tesseract_recognize_spark.streaming import file_source, start_parquet_sink
 
 __all__ = ["dedup_first_seen", "stream_dedup"]
 
@@ -78,7 +79,6 @@ def stream_dedup(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Start (or resume) streaming first-seen dedup over a growing
     directory of documents parquet files. Returns the StreamingQuery.
@@ -86,18 +86,7 @@ def stream_dedup(
     Restart-safe: the state store lives under ``checkpoint_dir``, so a
     resumed stream still drops documents first seen in any PREVIOUS run.
     """
-    src = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
+    keepers = dedup_first_seen(
+        file_source(spark, DOCUMENTS_SCHEMA, input_dir)
     )
-    keepers = dedup_first_seen(src)
-    writer = (
-        keepers.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(keepers, output_dir, checkpoint_dir)

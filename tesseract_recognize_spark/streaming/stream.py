@@ -19,8 +19,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from tesseract_recognize_spark.config import DEFAULT_CONFIG, ExtractConfig
-from tesseract_recognize_spark.plans.pipeline import extract
+from tesseract_recognize_spark.plans.pipeline import SINK_SORT_KEYS, extract
 from tesseract_recognize_spark.schemas import DOCUMENTS_SCHEMA
+from tesseract_recognize_spark.streaming import file_source, start_catchup
 
 __all__ = ["stream_extract"]
 
@@ -32,19 +33,10 @@ def stream_extract(
     checkpoint_dir: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     resolver=None,
-    available_now: bool = True,
 ):
     """Start (or resume) incremental extraction over a growing directory of
-    documents parquet files. Returns the StreamingQuery.
-
-    ``available_now=True`` processes everything currently available and
-    stops — the batch-catchup trigger; pass False for a continuous
-    micro-batch stream."""
-    src = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
+    documents parquet files: process everything currently available and
+    stop. Returns the StreamingQuery."""
 
     def process_batch(batch_df, batch_id: int) -> None:
         # foreachBatch is at-least-once; writing each micro-batch to a
@@ -53,14 +45,10 @@ def stream_extract(
         # rewrite the same directory, never duplicate rows. Readers get the
         # union via parquet partition discovery on `batch=`.
         out = extract(batch_df, cfg, resolver=resolver)
-        out.sortWithinPartitions(
-            "doc_id", "offset", "line_sub", "sub_order"
-        ).write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
+        out = out.sortWithinPartitions(*SINK_SORT_KEYS)
+        out.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
 
-    writer = (
-        src.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    src = file_source(spark, DOCUMENTS_SCHEMA, input_dir)
+    return start_catchup(
+        src.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -26,12 +26,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from tesseract_recognize_spark.streaming import file_source, start_parquet_sink
+
 __all__ = [
     "windowed_event_counts",
     "stream_event_rollup",
     "stream_sessionize",
     "EVENTS_SCHEMA",
 ]
+
+# the streaming starters' event-time settings: how late an event may
+# arrive, the rollup's tumbling window and the session gap
+WATERMARK = "10 minutes"
+ROLLUP_WINDOW = "5 minutes"
+SESSION_GAP = "30 minutes"
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -47,8 +55,8 @@ EVENTS_SCHEMA = T.StructType(
 
 def windowed_event_counts(
     events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
+    window: str = ROLLUP_WINDOW,
+    watermark: str = WATERMARK,
     value_as_cents: bool = False,
 ) -> DataFrame:
     """(window_start, window_end, event_type, n_events, sum_value).
@@ -91,31 +99,24 @@ def stream_sessionize(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    available_now: bool = True,
 ):
     """Streaming gap sessionization via ``F.session_window``: per-user
-    sessions whose windows merge while events arrive within ``gap``, and
-    finalize (append-mode emit, state dropped) once the watermark passes
-    a session's end. This is the streaming twin of the batch
-    ``operators.temporal.sessionize`` — the engine merges session state
-    incrementally instead of sorting history, so state is O(open
+    sessions whose windows merge while events arrive within
+    ``SESSION_GAP``, and finalize (append-mode emit, state dropped) once
+    the watermark passes a session's end. This is the streaming twin of
+    the batch ``operators.temporal.sessionize`` — the engine merges session
+    state incrementally instead of sorting history, so state is O(open
     sessions), not O(stream length).
 
     Boundary note vs the batch operator: ``session_window`` closes a
-    session when the next gap is >= ``gap`` (window [ts, ts+gap) fails
-    to overlap), while the batch op splits strictly > ``gap``; an
+    session when the next gap is >= the gap (window [ts, ts+gap) fails
+    to overlap), while the batch op splits strictly > the gap; an
     exactly-gap-spaced event pair lands in one batch session but two
     streaming sessions. Returns the StreamingQuery."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
     rollup = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        file_source(spark, EVENTS_SCHEMA, input_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(
@@ -130,15 +131,7 @@ def stream_sessionize(
             "sum_value_cents",
         )
     )
-    writer = (
-        rollup.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(rollup, output_dir, checkpoint_dir)
 
 
 def stream_event_rollup(
@@ -146,27 +139,13 @@ def stream_event_rollup(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    available_now: bool = True,
 ):
     """Start (or resume) the watermarked rollup over a growing directory
     of events parquet files. Append mode: a (window, type) row lands in
     the sink exactly once, after the watermark passes its window end —
-    events later than ``watermark`` past the max seen timestamp are
+    events later than ``WATERMARK`` past the max seen timestamp are
     dropped by the engine. Returns the StreamingQuery."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
+    rollup = windowed_event_counts(
+        file_source(spark, EVENTS_SCHEMA, input_dir)
     )
-    rollup = windowed_event_counts(src, window, watermark)
-    writer = (
-        rollup.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(rollup, output_dir, checkpoint_dir)

@@ -141,16 +141,19 @@ def test_extract_crops_exact_match(spark, tmp_path):
     assert n_cropped > 0
 
 
-def test_extract_crops_offset_addback(spark, tmp_path):
+@pytest.mark.parametrize("density", [300, 600])
+def test_extract_crops_offset_addback(spark, tmp_path, density):
     """The emitted line coords must be in the PAGE frame (crop offset added
-    back), equal to the block content's absolute position."""
+    back), equal to the block content's absolute position — at a d·300-dpi
+    density in the d-scaled page frame, page dims included."""
+    d_ = density // 300
     docs = gen_documents(30, seed=9)
     crop_docs, crops = _crops_for_docs(docs)
     one = next(c for c in crops if c["x0"] > 0 or c["y0"] > 0)
     d = next(x for x in crop_docs if x["doc_id"] == one["doc_id"])
     p = str(tmp_path / "one.parquet")
     write_documents_parquet([d], p)
-    cfg = ExtractConfig(psm="auto", media_partitions=1)
+    cfg = ExtractConfig(psm="auto", media_partitions=1, density=density)
     crops_df = spark.createDataFrame(
         [(one["doc_id"], one["offset"], one["crop_id"],
           one["x0"], one["y0"], one["x1"], one["y1"])],
@@ -160,12 +163,23 @@ def test_extract_crops_offset_addback(spark, tmp_path):
     rows = extract_crops(spark.read.parquet(p), crops_df, cfg).collect()
     lines = [r for r in rows if r["level"] == "line"]
     assert lines
-    # every line of this crop sits inside the crop rect in PAGE coordinates
+    ref = next(
+        s["media_ref"] for s in d["spans"]
+        if s["kind"] == "media" and s["offset"] == one["offset"]
+    )
+    geo = layout_geometry(layout_from_ref(ref))
+    # every line of this crop sits inside the crop rect in PAGE coordinates:
+    # pixel [x0..x1] covers [d·x0 .. d·x1+d−1] in the d-scaled render
     for r in lines:
         xs = [pt["x"] for pt in r["coords"]]
         ys = [pt["y"] for pt in r["coords"]]
-        assert min(xs) >= one["x0"] and max(xs) <= one["x1"]
-        assert min(ys) >= one["y0"] and max(ys) <= one["y1"]
+        assert min(xs) >= d_ * one["x0"]
+        assert max(xs) <= d_ * one["x1"] + d_ - 1
+        assert min(ys) >= d_ * one["y0"]
+        assert max(ys) <= d_ * one["y1"] + d_ - 1
+        assert (r["page_w"], r["page_h"]) == (
+            d_ * geo["page_w"], d_ * geo["page_h"]
+        )
 
 
 def test_extract_crops_requires_auto_psm(spark, tmp_path):

@@ -109,10 +109,13 @@ def test_extract_crops_plan_shape(spark, fx_small_docs, fx_small_path):
         "Exchange": 1, "Sort": 1, "Window": 1, "MapInArrow": 0,
         "Generate": 0,
     }
-    # the whole plan adds the salting exchange and, on the crops side,
-    # the within-page crop numbering (crop_seq) window with its own
-    # exchange and sort
+    # the whole plan adds only the salting exchange: it clusters each
+    # page's crops into one row, so the crops need no numbering window
     assert _count(tree) == {
-        "Exchange": 3, "Sort": 2, "Window": 2, "MapInArrow": 1,
+        "Exchange": 2, "Sort": 1, "Window": 1, "MapInArrow": 1,
         "Generate": 1,
     }
+    # the tree below the stage and the details of its nodes, which are
+    # numbered before it
+    below = _formatted(df).split("MapInArrow")[1]
+    assert "ObjectHashAggregate" in below and "row_number" not in below

@@ -75,10 +75,10 @@ def test_id_scheme_multipage_prefix():
 
 
 def test_id_scheme_crop_prefix():
-    crop = {"crop_id": "r7", "x": 0, "y": 0, "seq": 0}
-    rows = emit_page_rows(
-        page_struct_from_layout(_mk_layout()), ExtractConfig(), 1, 1, crop=crop
-    )
+    page = page_struct_from_layout(_mk_layout())
+    crop = {"crop_id": "r7", "x": 0, "y": 0, "seq": 0,
+            "page_w": page["page_w"], "page_h": page["page_h"]}
+    rows = emit_page_rows(page, ExtractConfig(), 1, 1, crop=crop)
     # crop mode writes into the selected region: no region row of its own
     assert {r["region_id"] for r in rows} == {"r7_b1"}
     assert [r["line_id"] for r in rows if r["level"] == "line"] == [
@@ -251,3 +251,73 @@ def test_ocr_stage_quarantine_row():
         r["error"] is None and r["coords"] for r in rows
         if r["media_ref"] == "fx://1"
     )
+
+
+def _crop_stage(layout, crops):
+    """Run the OCR stage's column function over one page row carrying
+    ``crops`` (crop_id, x0, y0, x1, y1) → (output rows, resolver calls)."""
+    from tesseract_recognize_spark.fixtures.raster import render_upright
+    from tesseract_recognize_spark.operators.ocr import _expand_columns
+
+    calls = []
+
+    def render(ref):
+        calls.append(ref)
+        return render_upright(layout)
+
+    cols = {
+        "doc_id": ["d"], "offset": [0], "media_ref": ["fx://p"],
+        "media_idx": [1], "n_media": [1],
+        "crops": [[
+            dict(crop_id=c, crop_x0=x0, crop_y0=y0, crop_x1=x1, crop_y1=y1)
+            for c, x0, y0, x1, y1 in sorted(crops)
+        ]],
+    }
+    batch = _expand_columns(cols, ExtractConfig(psm="auto"), render)
+    return batch.to_pylist(), calls
+
+
+def test_ocr_stage_page_with_crops_is_one_work_item():
+    from tesseract_recognize_spark.fixtures.raster import layout_geometry
+    from tesseract_recognize_spark.oracle.oracle import expected_crop_spans
+
+    blocks = [
+        Block(block_type=1, paras=[[[Word(w, False), Word("xy", False)]]])
+        for w in ("ab", "cd", "ef")
+    ]
+    layout = _mk_layout(blocks=blocks)
+    crops = [
+        (f"c{j}", *bg["bbox"])
+        for j, bg in enumerate(layout_geometry(layout)["blocks"])
+    ]
+    assert len(crops) == 3
+    rows, calls = _crop_stage(layout, crops)
+    assert calls == ["fx://p"]  # the page's raster is resolved once
+    exp = expected_crop_spans(
+        "d",
+        [{"kind": "media", "text": "", "media_ref": "fx://p", "offset": 0}],
+        [dict(offset=0, crop_id=c, x0=x0, y0=y0, x1=x1, y1=y1)
+         for c, x0, y0, x1, y1 in crops],
+        ExtractConfig(psm="auto"),
+        layout_provider=lambda _: layout,
+    )
+    assert len(rows) == len(exp)
+    for r, e in zip(rows, exp):
+        for c in ("sub_order", "line_sub", "level", "region_id", "line_id",
+                  "text", "page_w", "page_h", "coords_filled"):
+            assert r[c] == e[c], (c, r[c], e[c])
+        assert r["error"] is None
+        assert [(p["x"], p["y"]) for p in r["coords"]] == e["coords"]
+    assert {r["region_id"] for r in rows} == {"c0_b1", "c1_b1", "c2_b1"}
+
+
+def test_ocr_stage_failed_crop_quarantines_its_page():
+    from tesseract_recognize_spark.fixtures.raster import layout_geometry
+
+    layout = _mk_layout()
+    good = ("c0", *layout_geometry(layout)["blocks"][0]["bbox"])
+    # a crop inside the blank margin decodes to nothing: DecodeError
+    rows, _ = _crop_stage(layout, [good, ("c1", 0, 0, 3, 3)])
+    assert len(rows) == 1
+    assert rows[0]["level"] == "error"
+    assert rows[0]["error"].startswith("DecodeError: ")
